@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark driver: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -32,17 +32,19 @@ import org.apache.spark.sql.SparkSession
   * counts out-of-timed-region caching as gaming; the default run now
   * measures real I/O per query. SPARK_GRAFT_NO_CACHE=1 is still
   * honored (forces no-cache even if SPARK_GRAFT_CACHE is set).
+  *
+  * Failures are counted, never timed: a query that throws in any
+  * iteration is listed under `failed` (stdout line and artifact) and
+  * left out of `queries` and `value`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    // default to all cores (the harness runs local[32]); driver may override
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = cpusFromEnv()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       // same timezone as Verify/GraftSession, so TZ-sensitive queries
       // (calendar windows, date functions) measure the same work
@@ -70,23 +72,7 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val ordered = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.view.filterKeys(names).toMap).toSeq.sortBy(_._1)
-    val results = ordered.map { case (name, fn) =>
-      val times = (0 until math.max(1, iters)).map { _ =>
-        // release each iteration's localCheckpoint pins once its
-        // terminal action returns (r19 item 5): pins are per-query
-        // intermediates; letting 255 queries' blocks pile up for the
-        // lazy ContextCleaner was BENCH_NOTES' measured GC-pressure
-        // mechanism. Outside the timed region by design — hygiene
-        // BETWEEN queries, not work the query owes.
-        val pinned = graft.util.Pins.snapshot(spark)
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.util.Pins.releaseNewerThan(spark, pinned)
-        dt
-      }
-      name -> times.min
-    }
+    val (results, failed) = timeQueries(spark, sfDir, ordered, iters)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // oracle_covered_total: SPARK's subtotal over queries that have a
     // DuckDB SQL twin — renamed from `oracle_total` (r11 judge item 8:
@@ -104,7 +90,8 @@ object Bench {
     // the driver's follow-up low-core scaling run (r18 judge item 1).
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val fullJson = s"""{"metric":"total","unit":"sec","sf":"${jstr(sfDir)}","iters":$iters,"cpus":$cpus,"queries":$fullQs,"oracle_covered_total":$oracleTotal,"value":$total}"""
+    def jsonList(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val fullJson = s"""{"metric":"total","unit":"sec","sf":"${jstr(sfDir)}","iters":$iters,"cpus":$cpus,"failed":${jsonList(failed)},"queries":$fullQs,"oracle_covered_total":$oracleTotal,"value":$total}"""
     val artifact = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "docs/bench/last_run.json"))
     Option(artifact.getParent).foreach(java.nio.file.Files.createDirectories(_))
@@ -118,13 +105,56 @@ object Bench {
     // pins uniqueness) and 10 ms precision — enough for the driver's
     // round-over-round and 32c/8c scaling ratios; full precision is in
     // the artifact. The omitted tail is counted, never silent.
+    val shortFailed = jsonList(failed.map(_.takeWhile(_ != '_')))
     val byCost = results.sortBy { case (k, v) => (-v, k) }
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + f2t(v) }
     def line(qs: String, omitted: Int): String =
-      s"""{"metric":"total","unit":"sec","sf":"${jstr(sfDir)}","iters":$iters,"queries":$qs,"queries_omitted":$omitted,"queries_artifact":"${jstr(artifact.toString)}","oracle_covered_total":${f3(oracleTotal)},"value":${f3(total)}}"""
+      s"""{"metric":"total","unit":"sec","sf":"${jstr(sfDir)}","iters":$iters,"failed":$shortFailed,"queries":$qs,"queries_omitted":$omitted,"queries_artifact":"${jstr(artifact.toString)}","oracle_covered_total":${f3(oracleTotal)},"value":${f3(total)}}"""
     println(packedLine(byCost, line))
     System.out.flush()
     spark.stop()
+  }
+
+  /** Worker count: `SPARK_GRAFT_CPUS` parsed as a positive integer up
+    * front (a typo fails here, not as a bad master URL or a string
+    * spliced into the JSON), else every available core. */
+  private[graft] def cpusFromEnv(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").map { v =>
+      val n = v.trim.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be an integer, got '$v'"))
+      require(n >= 1, s"SPARK_GRAFT_CPUS must be >= 1, got $n")
+      n
+    }.getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Run each query `iters` times (at least once) and keep the min time.
+    * A query that throws in any iteration is returned in the second list
+    * and gets no time: its time-to-exception is not a cost.
+    *
+    * Each iteration's localCheckpoint pins are released once its
+    * terminal action returns (r19 item 5): pins are per-query
+    * intermediates; letting 255 queries' blocks pile up for the lazy
+    * ContextCleaner was BENCH_NOTES' measured GC-pressure mechanism.
+    * Outside the timed region by design — hygiene BETWEEN queries, not
+    * work the query owes.
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      ordered: Seq[(String, (SparkSession, String) => DataFrame)],
+      iters: Int): (Seq[(String, Double)], Seq[String]) = {
+    val runs = ordered.map { case (name, fn) =>
+      val times = (0 until math.max(1, iters)).map { _ =>
+        val pinned = graft.util.Pins.snapshot(spark)
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e"); false }
+        val dt = (System.nanoTime() - t0) / 1e9
+        graft.util.Pins.releaseNewerThan(spark, pinned)
+        Option.when(ok)(dt)
+      }
+      name -> (if (times.forall(_.isDefined)) Some(times.flatten.min) else None)
+    }
+    (runs.collect { case (n, Some(t)) => n -> t }, runs.collect { case (n, None) => n })
   }
 
   /** Tail-window budget for the WHOLE stdout line: the harness keeps

@@ -1723,7 +1723,7 @@ object SparkEntry {
     // scale): every eager step downstream (the bloom fit, the gram
     // count, the final multi-branch plan) would otherwise re-run the
     // full-corpus gopher scan per consumer (r17 judge item 5 — the
-    // q121 stage attribution in tools/ProbeQ121)
+    // q121 stage attribution in docs/BENCH_NOTES.md r18)
     val keepIds = TextAnalysis.gopherFilter(docs, "doc_id", "text",
         Seq("the", "a", "and", "of", "to"))
       .filter(col("keep") === 1).select(col("doc_id"))
@@ -4888,8 +4888,8 @@ GROUP BY order_year""")
       // shape_lane filter — with the full to_json + json_object_keys
       // tree inlined per reference — below the ensureParallelism
       // exchange, re-evaluating the wire fixture per consumer on the
-      // cached table's ONE input partition (ProbeJobs: two 4-7 s
-      // single-task AQE map jobs; plans/r18/q251_*_before.txt).
+      // cached table's ONE input partition (two 4-7 s single-task AQE
+      // map jobs; plans/r18/q251_*_before.txt).
       val gated = Ingest.shapeGate(wire, DeclaredBarFields)
         .localCheckpoint(true)
       TxParquetTable.append(

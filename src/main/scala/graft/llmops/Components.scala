@@ -1,6 +1,6 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
@@ -51,7 +51,8 @@ object Components {
       edges: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 25): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    propagateToFixpoint(bidirectional(edges, aCol, bCol), maxIters,
+    val (bi, biRows) = bidirectional(edges, aCol, bCol)
+    propagateToFixpoint(bi, biRows, maxIters,
       "connectedComponents",
       "(graph diameter exceeds the budget); raise maxIters or use " +
         "connectedComponentsAlternating") { (bi, labels) =>
@@ -78,9 +79,9 @@ object Components {
     * loudly instead.
     */
   private def propagateToFixpoint(
-      bi: DataFrame, maxIters: Int, variant: String, remedy: String)(
+      bi: DataFrame, biRows: Long, maxIters: Int, variant: String, remedy: String)(
       step: (DataFrame, DataFrame) => (DataFrame, Seq[DataFrame])): DataFrame =
-      withLoopShuffleWidth(bi) {
+      withLoopShuffleWidth(bi.sparkSession, biRows) {
     var labels = bi.select(col("src").as("id"), col("dst"))
       .groupBy(col("id"))
       .agg(least(col("id"), min(col("dst"))).as("label"))
@@ -109,7 +110,10 @@ object Components {
 
   /** Both propagation variants' shared edge prep: null-filtered edges,
     * materialized ONCE, then mirrored into the bidirectional frame the
-    * rounds re-read.
+    * rounds re-read. Returns that frame with its row count, taken by an
+    * [[org.apache.spark.sql.Observation]] on the first checkpoint's own
+    * job (the mirror holds exactly twice the forward rows), so sizing
+    * the loop costs no counting action.
     *
     * Two lineage cuts, deliberately: the first checkpoint executes the
     * caller's edge-producing plan exactly once (the union below would
@@ -124,7 +128,7 @@ object Components {
     * blocks are released as soon as the mirror is live.
     */
   private def bidirectional(
-      edges: DataFrame, aCol: String, bCol: String): DataFrame = {
+      edges: DataFrame, aCol: String, bCol: String): (DataFrame, Long) = {
     // numeric node ids are a hard requirement of BOTH propagation
     // variants, not a style choice: the convergence probes sum labels
     // as decimal ([[checkSum]]/[[edgeFingerprint]]), and a non-numeric
@@ -138,13 +142,15 @@ object Components {
           " — a non-numeric label nulls the decimal convergence checksum and the " +
           "fixpoint loop would terminate early with wrong labels; map ids to longs first")
     }
+    val fwdRows = Observation()
     val fwd = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
+      .observe(fwdRows, count(lit(1)).as("n"))
       .localCheckpoint()
     val bi = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
     releaseCheckpoint(fwd)
-    bi
+    (bi, 2L * fwdRows.get("n").asInstanceOf[Long])
   }
 
   /** Target rows per shuffle partition inside a fixpoint ROUND (r19,
@@ -161,21 +167,17 @@ object Components {
     * tasks of scheduling per stage per round, and the rounds are
     * SEQUENTIAL, so the width multiplies straight into wall time
     * (measured via tools/Probe: q129 8.1 s at width 32 → 4.2 s at 1;
-    * q72 4.1 → 2.9). Width derives from the measured edge count — at
-    * corpus scale it saturates back to the session setting, so this is
-    * a no-op exactly where wide shuffles are right. The conf mutation
+    * q72 4.1 → 2.9). Width derives from the edge count the caller
+    * already holds — at corpus scale it saturates back to the session
+    * setting, so this is a no-op exactly where wide shuffles are right. The conf mutation
     * is session-scoped and restored in finally; fixpoint loops run on
     * one driver thread between actions, the engine's sequential-query
     * discipline (Bench/Verify) keeps no concurrent planner on the
     * session, and a non-numeric width (e.g. under an exotic conf)
     * falls through to a plain run.
     */
-  private def withLoopShuffleWidth[A](edges: DataFrame,
-      knownRows: Option[Long] = None)(body: => A): A =
-    // callers that already paid a counting action pass the count;
-    // otherwise one block-sized job over the checkpointed edges
-    graft.util.Partitioning.withShuffleWidth(edges.sparkSession,
-      knownRows.getOrElse(edges.count()), RowsPerLoopPartition)(body)
+  private def withLoopShuffleWidth[A](spark: SparkSession, edgeRows: Long)(body: => A): A =
+    graft.util.Partitioning.withShuffleWidth(spark, edgeRows, RowsPerLoopPartition)(body)
 
   /** Drop the block-manager blocks behind a `localCheckpoint`ed frame
     * that a later round has superseded. A checkpointed Dataset's plan is
@@ -261,7 +263,7 @@ object Components {
     var converged = prevFp._1 == 0L
     // prevFp._1 IS the edge count — no extra action (ComponentsSpec pins
     // this loop's job budget)
-    withLoopShuffleWidth(e, Some(prevFp._1)) { while (iter < maxIters && !converged) {
+    withLoopShuffleWidth(e.sparkSession, prevFp._1) { while (iter < maxIters && !converged) {
       // ---- large-star ----
       val bi = e.select(col("p").as("x"), col("c").as("y"))
         .union(e.select(col("c").as("x"), col("p").as("y")))
@@ -323,7 +325,8 @@ object Components {
       edges: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 25): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    propagateToFixpoint(bidirectional(edges, aCol, bCol), maxIters,
+    val (bi, biRows) = bidirectional(edges, aCol, bCol)
+    propagateToFixpoint(bi, biRows, maxIters,
       "connectedComponentsJumping", "; raise maxIters") { (bi, labels) =>
       val msgs = bi.join(labels, bi("src") === labels("id"))
         .select(bi("dst").as("id"), labels("label"))

@@ -124,7 +124,7 @@ object Pipelines {
     * their ts + windowSec). The batch twin is
     * [[graft.analytics.TimeSeries.boundedRangeJoin]].
     *
-    * COST CAVEAT (measured, r13 — tools/DrivePairJoin): the hash join
+    * COST CAVEAT (measured, r13 — docs/BENCH_NOTES.md): the hash join
     * keys on `key` ALONE; the time range is a post-probe filter, so each
     * micro-batch does ~(rows-per-key)² work per key. Fine for sparse
     * per-key streams (the asof/tolerance use case this exists for); at

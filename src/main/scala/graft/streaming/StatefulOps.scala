@@ -1058,7 +1058,7 @@ object StatefulOps {
     * single hyper-hot key serializes in one task — at that regime
     * shard the key upstream (the asOfJoinTimeBucketed note); quotes
     * and trades for a key meet in the SAME state, so no stream-stream
-    * join state blowup (the r13 DrivePairJoin lesson).
+    * join state blowup (the r13 pair-join lesson, docs/BENCH_NOTES.md).
     */
   def asOfEnrichStream(
       inputs: Dataset[AsOfInput], toleranceUs: Long): Dataset[AsOfEnriched] = {

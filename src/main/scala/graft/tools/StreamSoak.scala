@@ -295,7 +295,7 @@ object StreamSoak {
     * ([[Pipelines.streamIntervalJoin]], windowSec tolerance) keys only
     * on the pair, so at bar-dense timestamps each micro-batch probes
     * ~(rows-per-key)² candidates per key and the first batch never
-    * completes — the r13 probe (tools/DrivePairJoin) measured exactly
+    * completes — the r13 probe (docs/BENCH_NOTES.md) measured exactly
     * that; exact co-arrival alignment wants the composite equi-join.
     */
   private def drivePairSpread(

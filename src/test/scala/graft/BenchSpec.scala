@@ -1,15 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Contracts the bench stdout line depends on (no Spark session needed).
+/** Contracts the bench stdout line depends on (only the failure-
+  * accounting case starts a Spark session).
   *
   * Bench emits a SHORT stdout line keyed by the `qNN` prefix of each
   * query name so the whole line survives the harness's log-tail window
   * (the full-name line at 107 queries lost q01-q38 to truncation in r5).
   * That compression is only lossless if the prefixes are unique.
   */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends SparkSpec {
 
   test("qNN prefixes of SparkEntry.queries are unique (short bench keys are lossless)") {
     val names = SparkEntry.queries.keys.toSeq
@@ -101,5 +100,28 @@ class BenchSpec extends AnyFunSuite {
       java.util.Locale.setDefault(java.util.Locale.GERMANY) // comma decimal
       assert(Bench.f3(1.5) === "1.500")
     } finally java.util.Locale.setDefault(prev)
+  }
+
+  test("a throwing query is listed as failed, never timed or summed") {
+    // one query throws while building, one only inside its action's
+    // tasks; both must land in `failed` with no time, while the healthy
+    // query keeps its min-of-iters time
+    val boom = org.apache.spark.sql.functions.udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("boom"); x }
+    val fake: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
+      "q901_ok" -> ((s, _) => s.range(10).toDF()),
+      "q902_build_throws" -> ((_, _) => throw new IllegalStateException("boom")),
+      "q903_action_throws" -> ((s, _) => s.range(3).toDF().filter(boom(org.apache.spark.sql.functions.col("id")) > 0)))
+    val (timed, failed) = Bench.timeQueries(spark, "unused", fake, iters = 2)
+    assert(failed === Seq("q902_build_throws", "q903_action_throws"))
+    assert(timed.map(_._1) === Seq("q901_ok"))
+    assert(timed.forall(_._2 >= 0.0))
+  }
+
+  test("SPARK_GRAFT_CPUS is parsed as a positive integer up front") {
+    assert(Bench.cpusFromEnv(Map("SPARK_GRAFT_CPUS" -> " 8 ")) === 8)
+    assert(Bench.cpusFromEnv(Map.empty) === Runtime.getRuntime.availableProcessors)
+    intercept[IllegalArgumentException](Bench.cpusFromEnv(Map("SPARK_GRAFT_CPUS" -> "8c")))
+    intercept[IllegalArgumentException](Bench.cpusFromEnv(Map("SPARK_GRAFT_CPUS" -> "0")))
   }
 }

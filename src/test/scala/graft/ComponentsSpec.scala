@@ -22,6 +22,12 @@ class ComponentsSpec extends SparkSpec {
     assert(m === Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
+  test("empty and all-null edge lists yield no components (observed edge count 0)") {
+    assert(assignments(Seq.empty) === Map.empty)
+    val nulls = Seq[(java.lang.Long, java.lang.Long)]((1L, null), (null, 2L)).toDF("a", "b")
+    assert(Components.connectedComponents(nulls, "a", "b").count() === 0)
+  }
+
   test("random graphs match brute-force transitive closure") {
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 3) {

@@ -1,40 +1,92 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
+import graft.audit.QueryAudit.Record
 
-/** r15 judge item 8: the EXCHANGE-BUDGET lint — the WindowLintSpec
-  * discipline applied to shuffle counts. The judge's per-round explain
-  * audit of the most expensive queries ("no unpushed filters, no
-  * cartesian products, exchanges where expected") becomes a checked
-  * invariant: each of the bench's top-cost queries runs at sf0.001
-  * under a QueryExecutionListener, every execution it triggers (the
-  * eager verdict builders run dozens) has its SHUFFLE exchanges counted
-  * from the final adaptive plan, and the per-query total must stay
-  * within the budget stated below. A plan regression — a lost
-  * broadcast, a new unexpected shuffle stage, a guard re-introducing a
-  * double exchange — fails in `sbt test` with the query name instead of
-  * waiting for a judge.
+/** The plan lints' tables and checks, read by PlanShapeSpec's audit
+  * sweep (every registered query built and counted ONCE under one
+  * [[graft.audit.QueryAudit]]) and by QueryAuditSpec's negative
+  * controls. Three facts per query:
   *
-  * Broadcast exchanges are deliberately NOT counted: they are the cheap
-  * shape the lint wants plans to prefer; penalizing them would push
-  * plans toward shuffles.
-  *
-  * Budgets are measured values (tools/ProbeExchanges; r16 top-12 +
-  * the r17 extension to EVERY query ≥ 1 s committed bench cost — r16
-  * judge item 6, two confirming runs each) — exact pins, not headroom:
-  * every one of these queries is deterministic at fixed input, so a
-  * count increase IS a plan change that needs re-auditing (lower is
-  * fine — AQE folding stages is a win). One exception: q244 pins the
-  * max of its two observed counts (32 vs 30 — its lazy localCheckpoint
-  * materializes under whichever consumer acts first, shifting a
-  * recomputed subplan's exchanges between executions; the plan itself
-  * is unchanged).
+  *  - WINDOW ALLOWLIST (r14 judge item 5, the unpartitioned-window lint
+  *    automated): every empty-partition-spec Window node in every
+  *    optimized plan the query executes — including the eager
+  *    verdict-frame builds that never appear in a returned plan — must
+  *    belong to a query on [[windowAllowlist]], each entry carrying its
+  *    stated small-frame bound. A new unpartitioned window anywhere else
+  *    fails with the query name and the window's expressions.
+  *  - SHUFFLE BUDGETS (r15 judge item 8, the same discipline applied to
+  *    shuffle counts): the judge's per-round explain audit of the most
+  *    expensive queries ("no unpushed filters, no cartesian products,
+  *    exchanges where expected") as a checked invariant. Every
+  *    execution a budgeted query triggers (the eager verdict builders
+  *    run dozens) has its SHUFFLE exchanges counted from the final
+  *    adaptive plan, and the per-query total must stay within
+  *    [[shuffleBudgets]]. A plan regression — a lost broadcast, a new
+  *    unexpected shuffle stage, a guard re-introducing a double
+  *    exchange — fails with the query name. Broadcast exchanges are
+  *    deliberately NOT counted: they are the cheap shape the lint wants
+  *    plans to prefer.
+  *  - REDUCED FRAMES (r11 item 5): every partition-less window in a
+  *    query's RETURNED plan has a reducing node on every root-to-leaf
+  *    path beneath it ([[graft.audit.QueryAudit.reduced]]).
   */
-class ExchangeLintSpec extends SparkSpec {
+object PlanLints {
 
-  /** query -> (shuffle budget, what the shuffles are). */
-  private val budgets: Map[String, (Int, String)] = Map(
+  /** query -> the declared bound that makes its unpartitioned window a
+    * non-hazard (the frame the window rides is structurally tiny and
+    * does NOT grow with the corpus). Audited r15 from the lint's own
+    * discovery run; three discovery hits were FIXED instead of
+    * allowlisted (q212/q213 top-20 rank windows over the screened-pair
+    * frame and q215's global rank over per-doc weights — all rewritten
+    * to orderBy.limit, the distributed bounded heap). Every entry
+    * states the frame and its bound; re-audit when the query changes.
+    */
+  val windowAllowlist: Map[String, String] = Map(
+    "q81_mixture_sample" ->
+      "cumulative windows over the per-source RATES frame: |sources| rows (strata cardinality, single digits)",
+    "q100_curation_extended" ->
+      "the q81 mixture-rate windows inside the capstone: |sources| rows",
+    "q121_curation_v2" ->
+      "the q81 mixture-rate windows inside the capstone: |sources| rows",
+    "q137_token_ids" ->
+      "vocab rank window AFTER orderBy.limit(vocabSize): <= vocabSize rows (Tokenize.rankTopK)",
+    "q138_token_pack" ->
+      "same Tokenize.rankTopK window: <= vocabSize rows",
+    "q139_vocab_coverage" ->
+      "rank + running-coverage windows over the top-maxK vocab survivors: <= maxK rows",
+    "q142_temperature_mix" ->
+      "temperature-share windows over the per-source rates frame: |sources| rows",
+    "q153_budget_select" ->
+      "descending budget windows over the LEVELS frame: <= distinct micro-quantized score levels (<= 1e6 hard, thousands in practice), never the corpus",
+    "q155_curation_capstone" ->
+      "the q142 mixture windows inside the capstone: |sources| rows",
+    "q194_leg_turnover" ->
+      "dense-rank period index over the distinct-periods frame: |periods| rows",
+    "q195_risk_parity" ->
+      "normalizing-sum window over the per-key inverse-vol frame: |keys| rows",
+    "q200_hybrid_retrieval" ->
+      "RRF rank windows over the two top-50 candidate legs: <= 100 rows",
+    "q205_net_backtest" ->
+      "the q194 period-index window: |periods| rows",
+    "q206_bootstrap_sharpe" ->
+      "percentile rank over the B bootstrap replicate Sharpes: B rows",
+    "q215_dsir_weights" ->
+      "rank window AFTER orderBy.limit(20): exactly the 20 selected rows")
+
+  /** query -> (shuffle budget, what the shuffles are).
+    *
+    * Budgets are measured values (`graft.audit.QueryAudit` prints the
+    * per-query counts; r16 top-12 + the r17 extension to EVERY query
+    * ≥ 1 s committed bench cost — r16 judge item 6, two confirming runs
+    * each) — exact pins, not headroom: every one of these queries is
+    * deterministic at fixed input, so a count increase IS a plan change
+    * that needs re-auditing (lower is fine — AQE folding stages is a
+    * win). One exception: q244 pins the max of its two observed counts
+    * (32 vs 30 — its lazy localCheckpoint materializes under whichever
+    * consumer acts first, shifting a recomputed subplan's exchanges
+    * between executions; the plan itself is unchanged).
+    */
+  val shuffleBudgets: Map[String, (Int, String)] = Map(
     // ---- r17 extension: every query >= 1 s committed bench cost ----
     "q241_index_maintenance" -> (48,
       "index lifecycle: fit aggregates, five extends, two staleness reads, recluster sort, blue/green refit"),
@@ -139,40 +191,21 @@ class ExchangeLintSpec extends SparkSpec {
     "q240_curation_chain" -> (5,
       "gate band group-by, doc combine, content-hash window, lane aggregate"))
 
-  test("top-cost queries stay within their stated shuffle-exchange budgets") {
-    val sfDir = "/root/testdata/sf0.001"
-    val counts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
-        counts.addAndGet(graft.tools.ProbeExchanges.countShuffles(qe))
-        execs.incrementAndGet()
-        ()
-      }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    def drain(): Unit = {
-      var last = -1; var stable = 0; var spins = 0
-      while (stable < 2 && spins < 50) {
-        val n = counts.get + execs.get * 100000
-        if (n == last) stable += 1 else { stable = 0; last = n }
-        spins += 1; Thread.sleep(60)
+  /** (query, window expressions) for partition-less windows outside the allowlist. */
+  def windowViolations(records: Seq[Record]): Seq[(String, String)] =
+    records.flatMap(r => r.windows.map(r.name -> _))
+      .filterNot { case (q, _) => windowAllowlist.contains(q) }
+
+  /** One line per budgeted query whose summed shuffles exceed its budget. */
+  def budgetViolations(records: Seq[Record]): Seq[String] =
+    records.flatMap { r =>
+      shuffleBudgets.get(r.name).collect {
+        case (budget, what) if r.shuffles > budget =>
+          s"${r.name}: ${r.shuffles} shuffles > budget $budget ($what)"
       }
     }
-    spark.listenerManager.register(listener)
-    val over =
-      try {
-        budgets.toSeq.sortBy(_._1).flatMap { case (name, (budget, what)) =>
-          counts.set(0); execs.set(0)
-          SparkEntry.queries(name)(spark, sfDir).count()
-          drain()
-          val n = counts.get
-          if (n > budget) Some(s"$name: $n shuffles > budget $budget ($what)")
-          else None
-        }
-      } finally spark.listenerManager.unregister(listener)
-    assert(over.isEmpty,
-      s"shuffle-exchange budget exceeded — re-audit the plan before raising " +
-        s"the budget:\n${over.mkString("\n")}")
-  }
+
+  /** Queries whose returned plan has a partition-less window over an unreduced frame. */
+  def unreducedViolations(records: Seq[Record]): Seq[String] =
+    records.filter(_.unreducedWindows.nonEmpty).map(_.name)
 }
