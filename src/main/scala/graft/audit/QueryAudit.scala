@@ -6,10 +6,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.BusDrain
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -39,8 +41,10 @@ final class QueryAudit(spark: SparkSession) extends AutoCloseable {
     val executions = new AtomicInteger(0)
     val shuffles = new AtomicInteger(0)
     val windows = new ConcurrentLinkedQueue[String]()
-    val started = TrieMap.empty[Int, (Long, String, String, Int)]
+    val started = TrieMap.empty[Int, Started]
     val ended = TrieMap.empty[Int, Long]
+    /** SQL execution id → its call site. */
+    val sql = TrieMap.empty[Long, String]
   }
 
   /** The running query's accumulator; null between runs, so stray events
@@ -64,10 +68,18 @@ final class QueryAudit(spark: SparkSession) extends AutoCloseable {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val a = acc
       if (a != null) {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        a.started.put(e.jobId, (e.time, callSite(e), desc, e.stageInfos.map(_.numTasks).sum))
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        a.started.put(e.jobId, Started(e.time, stageSite(e), shortSite(e),
+          prop("spark.job.description").getOrElse(""), e.stageInfos.map(_.numTasks).sum,
+          prop("spark.sql.execution.root.id").orElse(prop("spark.sql.execution.id"))
+            .map(_.toLong)))
       }
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        val a = acc
+        if (a != null) a.sql.put(s.executionId, engineFrame(s.details).getOrElse(s.description))
+      case _ => ()
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = {
       val a = acc
@@ -89,8 +101,12 @@ final class QueryAudit(spark: SparkSession) extends AutoCloseable {
     val (df, wallNs) =
       try { val d = query; d.count(); (d, System.nanoTime() - t0) }
       finally { BusDrain.drain(sc); acc = null }
-    val jobs = a.started.toSeq.flatMap { case (id, (start, site, desc, tasks)) =>
-      a.ended.get(id).map(end => Job(id, site, desc, tasks, (end - start) / 1e3))
+    // a job whose stages carry no engine frame (AQE stage and broadcast
+    // jobs run from a thread pool) is named by its root SQL execution
+    val jobs = a.started.toSeq.flatMap { case (id, s) =>
+      a.ended.get(id).map(end => Job(id,
+        s.stageSite.orElse(s.execution.flatMap(a.sql.get)).getOrElse(s.shortSite),
+        s.description, s.tasks, (end - s.time) / 1e3))
     }.sortBy(j => (-j.seconds, j.id))
     Record(name, wallNs / 1e9, a.executions.get, a.shuffles.get,
       a.windows.asScala.toSeq.distinct, unreducedWindows(df.queryExecution.optimizedPlan),
@@ -104,6 +120,9 @@ final class QueryAudit(spark: SparkSession) extends AutoCloseable {
 }
 
 object QueryAudit {
+
+  private final case class Started(time: Long, stageSite: Option[String],
+      shortSite: String, description: String, tasks: Int, execution: Option[Long])
 
   /** One Spark job of an audited query. */
   final case class Job(id: Int, callSite: String, description: String,
@@ -160,14 +179,20 @@ object QueryAudit {
 
   private def signature(w: Window): String = w.windowExpressions.map(_.name).mkString(",")
 
+  /** The first engine frame of a call stack. */
+  private def engineFrame(stack: String): Option[String] =
+    stack.split('\n').find(_.contains("graft.")).map(_.trim)
+
   /** The first engine frame in the stage call stack names a job far
     * better than the thread-pool call site Spark records for AQE and
-    * broadcast subjobs. */
-  private def callSite(e: SparkListenerJobStart): String =
-    e.stageInfos.lastOption
-      .flatMap(si => si.details.split('\n').find(_.contains("graft.")).map(_.trim))
-      .orElse(Option(e.properties)
-        .flatMap(p => Option(p.getProperty("callSite.short"))).filter(_.nonEmpty))
+    * broadcast subjobs; those have none, and are named by their SQL
+    * execution instead. */
+  private def stageSite(e: SparkListenerJobStart): Option[String] =
+    e.stageInfos.lastOption.flatMap(si => engineFrame(si.details))
+
+  private def shortSite(e: SparkListenerJobStart): String =
+    Option(e.properties)
+      .flatMap(p => Option(p.getProperty("callSite.short"))).filter(_.nonEmpty)
       .orElse(e.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')))
       .getOrElse("?")
 

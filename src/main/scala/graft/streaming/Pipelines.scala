@@ -505,11 +505,15 @@ object Pipelines {
         val hashesPath = s"$outDir/hashes"
         val emptySeen = spark.emptyDataFrame
           .select(lit("").as("h"), lit(0L).as("__epoch")).limit(0)
-        val seen =
-          if (TxParquetTable.latestVersion(hashesPath) < 0) emptySeen
-          else {
-            val bloom = loadOrBuildRegistryBloom(spark, outDir, hashesPath,
-              bloomExpectedItems, bloomFpp)
+        // the gate the probe loads is the one this epoch's first hashes
+        // are put into after their commit (None: no registry, no probe)
+        val gate =
+          if (TxParquetTable.latestVersion(hashesPath) < 0) None
+          else Some(loadOrBuildRegistryBloom(spark, outDir, hashesPath,
+            bloomExpectedItems, bloomFpp))
+        val seen = gate match {
+          case None => emptySeen
+          case Some(bloom) =>
             // the probe set is epoch-bounded (≤ the batch's distinct
             // payload hashes; in the mostly-new case just the fpp
             // sliver) — but "epoch-bounded" is NOT "small" under a
@@ -536,7 +540,7 @@ object Pipelines {
               .filter(col("__epoch") < epochId)
               .join(probeFrame, Seq("h"), "left_semi")
               .select(col("h"), col("__epoch"))
-          }
+        }
         val lanes = curationLanes(combined, seen, qualityThreshold)
           .withColumn("__epoch", lit(epochId)).cache()
         try {
@@ -557,18 +561,9 @@ object Pipelines {
             lanes.groupBy(col("__epoch"), col("lane"))
               .agg(count(lit(1)).as("n")),
             s"$outDir/telemetry", txn = Some((appId, epochId)))
-          // merge this epoch's first-hashes into the persisted gate
-          // AFTER their Tx commit: when any epoch ≤ N has completed,
-          // the bloom is a superset of epochs ≤ N — which is exactly
-          // what epoch N+1's gate needs (a replayed epoch N splits
-          // against __epoch < N, where the superset already held)
-          val newKeys = lanes.filter(col("__first"))
-            .select(xxhash64(col("__h")).as("__bloom_key"))
-          if (!newKeys.isEmpty) {
-            mergeRegistryBloom(outDir, newKeys.stat.bloomFilter(
-              "__bloom_key", bloomExpectedItems, bloomFpp))
-          }
-          ()
+          addToRegistryBloom(outDir, gate,
+            lanes.filter(col("__first")).select(xxhash64(col("__h"))),
+            bloomExpectedItems, bloomFpp)
         } finally { lanes.unpersist(); () }
       }
 
@@ -580,13 +575,8 @@ object Pipelines {
     * — one full slim-column scan, once, then persisted. */
   private def loadOrBuildRegistryBloom(spark: SparkSession, outDir: String,
       hashesPath: String, expectedItems: Long, fpp: Double)
-      : org.apache.spark.util.sketch.BloomFilter = {
-    val f = registryBloomFile(outDir)
-    if (f.exists()) {
-      val in = new java.io.FileInputStream(f)
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      finally in.close()
-    } else {
+      : org.apache.spark.util.sketch.BloomFilter =
+    readRegistryBloom(outDir).getOrElse {
       val reg = graft.sources.TxParquetTable.snapshot(spark, hashesPath)
         .select(xxhash64(col("h")).as("__bloom_key"))
       if (reg.isEmpty) {
@@ -597,31 +587,54 @@ object Pipelines {
         org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
       } else {
         val built = reg.stat.bloomFilter("__bloom_key", expectedItems, fpp)
-        mergeRegistryBloom(outDir, built)
+        writeRegistryBloom(outDir, built)
         built
       }
     }
+
+  /** Put an epoch's fresh registry keys (one LONG column, the
+    * `xxhash64` of the id) into the persisted gate, AFTER their registry
+    * commit: when any epoch ≤ N has completed, the bloom is a superset
+    * of epochs ≤ N — which is exactly what epoch N+1's gate needs (a
+    * replayed epoch N re-puts the same keys, set semantics, and splits
+    * against `__epoch < N`, where the superset already held). The keys
+    * are collected — at most the epoch's rows × 8 bytes — and put into
+    * `loaded`, the filter the epoch's probe read; None (no probe ran)
+    * reads the persisted file, or creates the filter with the sink's
+    * constant (expectedItems, fpp). No keys: nothing is written. */
+  private def addToRegistryBloom(outDir: String,
+      loaded: Option[org.apache.spark.util.sketch.BloomFilter],
+      keys: DataFrame, expectedItems: Long, fpp: Double): Unit = {
+    val fresh = keys.collect()
+    if (fresh.nonEmpty) {
+      val bloom = loaded.orElse(readRegistryBloom(outDir)).getOrElse(
+        org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp))
+      fresh.foreach(r => bloom.putLong(r.getLong(0)))
+      writeRegistryBloom(outDir, bloom)
+    }
   }
 
-  /** OR the fragment into the persisted gate and write back atomically
-    * (tmp + POSIX rename, the Tx-log publish discipline — a reader never
-    * sees a torn filter; fragments are built with the sink's constant
-    * (expectedItems, fpp) so bit layouts are merge-compatible). */
-  private def mergeRegistryBloom(outDir: String,
-      fragment: org.apache.spark.util.sketch.BloomFilter): Unit = {
+  private def readRegistryBloom(outDir: String)
+      : Option[org.apache.spark.util.sketch.BloomFilter] = {
     val f = registryBloomFile(outDir)
-    val merged =
-      if (!f.exists()) fragment
-      else {
-        val in = new java.io.FileInputStream(f)
-        val cur = try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-          finally in.close()
-        cur.mergeInPlace(fragment)
-      }
+    if (!f.exists()) None
+    else {
+      // buffered: the filter reads and writes one long at a time, which
+      // on a raw file stream is one syscall per long (≈600k at 4M items)
+      val in = new java.io.BufferedInputStream(new java.io.FileInputStream(f), 1 << 16)
+      try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
+      finally in.close()
+    }
+  }
+
+  /** Write the gate back atomically (tmp + POSIX rename, the Tx-log
+    * publish discipline — a reader never sees a torn filter). */
+  private def writeRegistryBloom(outDir: String,
+      bloom: org.apache.spark.util.sketch.BloomFilter): Unit = {
     val tmp = new java.io.File(outDir, "hashes_bloom.tmp")
-    val out = new java.io.FileOutputStream(tmp)
-    try merged.writeTo(out) finally out.close()
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
+    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(tmp), 1 << 16)
+    try bloom.writeTo(out) finally out.close()
+    java.nio.file.Files.move(tmp.toPath, registryBloomFile(outDir).toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     ()
   }
@@ -829,6 +842,10 @@ object Pipelines {
     *   - `$outDir/ingested`   — the curated bars;
     *
     * plus the registry (`$outDir/ids`) and its persisted bloom gate.
+    * The late, dup and ingested lanes share one schema and land from ONE
+    * write job ([[graft.sources.TxParquetTable.appendLanes]]), each
+    * still under its own txn-guarded commit. The epoch's fresh ids are
+    * collected (8 bytes each) and put into the gate the probe loaded.
     * Epoch cost is O(batch) + one constant-size bloom read/write —
     * flat as the corpus grows, the r17 registry discipline.
     */
@@ -883,10 +900,6 @@ object Pipelines {
               .withColumn("__late", unix_millis(col("datetime")) < lit(wm))
               .cache()
             try {
-              phase("late")
-              val vLate = TxParquetTable.append(
-                split.filter(col("__late")).drop("__late"),
-                s"$outDir/late", txn = Some((appId, epochId)))
               val onTime = split.filter(!col("__late")).drop("__late")
               // X99's registry stage on the deterministic id: the gate
               // discharges definitively-new ids without touching the
@@ -898,9 +911,13 @@ object Pipelines {
               // probe FRAME and the seen set stays distributed
               // (seenFrame below), joined onto the batch instead of
               // serialized into an isin.
-              val (seenIds: Seq[String], seenFrame: Option[DataFrame]) =
+              // the gate the probe loads is the one this epoch's fresh
+              // ids are put into after the registry commit (None: no
+              // registry yet, so no probe)
+              val (seenIds: Seq[String], seenFrame: Option[DataFrame],
+                  gate: Option[org.apache.spark.util.sketch.BloomFilter]) =
                 if (TxParquetTable.latestVersion(idsPath) < 0)
-                  (Seq.empty[String], None)
+                  (Seq.empty[String], None, None)
                 else {
                   phase("registry probe")
                   val bloom = loadOrBuildRegistryBloom(spark, outDir, idsPath,
@@ -911,19 +928,20 @@ object Pipelines {
                     .distinct()
                   val probed = probeFrame.limit(probeCollectMax + 1)
                     .collect().map(_.getString(0)).toSeq
-                  if (probed.isEmpty) (Seq.empty[String], None)
+                  if (probed.isEmpty) (Seq.empty[String], None, Some(bloom))
                   else if (probed.length <= probeCollectMax)
                     (TxParquetTable.snapshot(spark, idsPath)
                       .filter(col("__epoch") < epochId &&
                         col("h").isin(probed: _*))
                       .select(col("h")).collect().map(_.getString(0)).toSeq,
-                      None)
+                      None, Some(bloom))
                   else (Seq.empty[String],
                     Some(TxParquetTable.snapshot(spark, idsPath)
                       .filter(col("__epoch") < epochId)
                       .join(probeFrame.withColumnRenamed("id", "h"),
                         Seq("h"), "left_semi")
-                      .select(col("h").as("id"))))
+                      .select(col("h").as("id"))),
+                    Some(bloom))
                 }
               // within-epoch keeper: a GENUINE total order over every
               // value column (same-id rows are usually identical — the
@@ -965,32 +983,27 @@ object Pipelines {
                 .drop("__rn", "__seen")
                 .cache()
               try {
-                phase("dup")
-                val vDup = TxParquetTable.append(
-                  marked.filter(col("__dup")).drop("__dup"),
-                  s"$outDir/dup", txn = Some((appId, epochId)))
+                // late, dup and ingested share one schema: ONE write job
+                // partitioned on the lane, then one txn-guarded commit
+                // per table (late first, as the lanes always landed)
+                phase("lanes")
+                val Seq(vLate, vDup, vIngested) = TxParquetTable.appendLanes(
+                  split.filter(col("__late")).drop("__late")
+                    .withColumn("__lane", lit("late"))
+                    .unionByName(marked.withColumn("__lane",
+                      when(col("__dup"), lit("dup")).otherwise(lit("ingested")))
+                      .drop("__dup")),
+                  "__lane",
+                  Seq("late", "dup", "ingested").map(l => l -> s"$outDir/$l"),
+                  txn = Some((appId, epochId)))
                 val fresh = marked.filter(!col("__dup")).drop("__dup")
-                phase("ingested")
-                val vIngested = TxParquetTable.append(fresh,
-                  s"$outDir/ingested", txn = Some((appId, epochId)))
                 phase("ids registry")
                 TxParquetTable.append(
                   fresh.select(col("id").as("h"), col("__epoch")),
                   idsPath, txn = Some((appId, epochId)))
                 phase("bloom merge")
-                // coalesce before the bloom aggregate (r19, guide §5):
-                // stat.bloomFilter allocates one full expectedItems-sized
-                // bitset PER PARTITION (≈4.8 MB at the 4M default) and
-                // merges them on the driver — on a well-spread batch
-                // that's 32 bitsets for one epoch's keys; a handful of
-                // partitions stream the same cached rows through a
-                // bounded number of bitsets
-                val newKeys = fresh.select(xxhash64(col("id")).as("__bloom_key"))
-                  .coalesce(8)
-                if (!newKeys.isEmpty) {
-                  mergeRegistryBloom(outDir, newKeys.stat.bloomFilter(
-                    "__bloom_key", bloomExpectedItems, bloomFpp))
-                }
+                addToRegistryBloom(outDir, gate,
+                  fresh.select(xxhash64(col("id"))), bloomExpectedItems, bloomFpp)
                 // advance the replica over ALL parsed rows (late included
                 // — Spark's own watermark stats see them too), once per
                 // NEW epoch

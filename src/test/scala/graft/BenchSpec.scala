@@ -118,6 +118,29 @@ class BenchSpec extends SparkSpec {
     assert(timed.forall(_._2 >= 0.0))
   }
 
+  test("Verify names every throwing query in verify_failed.json and still dumps the rest") {
+    val boom = org.apache.spark.sql.functions.udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("boom \"quoted\""); x }
+    val fake: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
+      "q901_ok" -> ((s, _) => s.range(10).toDF()),
+      "q902_build_throws" -> ((_, _) => throw new IllegalStateException("no\tbuild")),
+      "q903_action_throws" -> ((s, _) => s.range(3).toDF().filter(boom(org.apache.spark.sql.functions.col("id")) > 0)))
+    val out = java.nio.file.Files.createTempDirectory("verify_failed_").toString
+    val failed = Verify.dump(spark, "unused", out, fake)
+    assert(failed.map(_._1) === Seq("q902_build_throws", "q903_action_throws"))
+    assert(spark.read.parquet(s"$out/q901_ok").count() === 10L)
+    val listed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(out, "verify_failed.json"))
+    assert((0 until listed.size()).map(i => listed.get(i).get("name").asText()) ===
+      failed.map(_._1))
+    assert(listed.get(0).get("error").asText().contains("no\tbuild"))
+    assert(listed.get(1).get("error").asText().contains("boom"))
+    // nothing failing still writes the (empty) list
+    assert(Verify.dump(spark, "unused", out, fake.take(1)).isEmpty)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(out, "verify_failed.json")).size() === 0)
+  }
+
   test("SPARK_GRAFT_CPUS is parsed as a positive integer up front") {
     assert(Bench.cpusFromEnv(Map("SPARK_GRAFT_CPUS" -> " 8 ")) === 8)
     assert(Bench.cpusFromEnv(Map.empty) === Runtime.getRuntime.availableProcessors)

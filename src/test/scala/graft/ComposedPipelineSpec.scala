@@ -255,4 +255,69 @@ class ComposedPipelineSpec extends SparkSpec {
       epoch = Some(0L))
     assert(cut0("ingested").count() === 4L)
   }
+
+  test("e2e ingest sink: replaying an epoch after a partial commit (only late landed) keeps every row in one lane once") {
+    // a crash after the late lane's commit and before dup/ingested: the
+    // epoch is rolled back to exactly that state (the dup, ingested and
+    // ids commits and Spark's batch commit removed), and the restarted
+    // query replays it. The late lane's txn guard skips it; every lane
+    // must then equal the uninterrupted run, row for row.
+    import graft.sources.TxParquetTable
+    val declared = Seq("Datetime", "Open", "High", "Low", "Close",
+      "Adj Close", "Volume", "Dividends", "Stock Splits", "ticker")
+    def bar(ticker: String, ts: String, vol: Int): String =
+      s"""{"Datetime":"$ts","Open":1.0,"High":1.1,"Low":0.9,"Close":1.05,"Adj Close":1.05,"Volume":$vol,"Dividends":0.0,"Stock Splits":0.0,"ticker":"$ticker"}"""
+    val epoch0 = (0 until 6).map(i => bar(s"R$i", s"2024-06-03T14:3$i:00.000Z", 100 + i))
+    val epoch1 = (6 until 9).map(i => bar(s"R$i", s"2024-06-03T14:4$i:00.000Z", 100 + i)) ++
+      Seq(bar("R0", "2024-06-03T14:30:00.000Z", 100), // re-send of an epoch-0 bar
+        bar("R7", "2024-06-03T14:47:00.000Z", 107), // within-epoch copy
+        bar("L0", "2024-06-03T09:00:00.000Z", 5), // below the watermark
+        bar("L1", "2024-06-03T09:05:00.000Z", 6),
+        """{"Datetime":"2024-06-03T14:50:00.000Z","Open":1.0""") // truncated
+    val dir = java.nio.file.Files.createTempDirectory("graft_e2e_replay_").toString
+    val landing = new java.io.File(dir, "landing"); landing.mkdirs()
+    def land(i: Int, rows: Seq[String]): Unit = {
+      val tmp = new java.io.File(dir, s"wire$i.json")
+      java.nio.file.Files.write(tmp.toPath, rows.mkString("\n").getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp.toPath, new java.io.File(landing, tmp.getName).toPath)
+    }
+    def runUntil(files: Int): Unit = {
+      val q = Pipelines.endToEndIngestSink(
+        spark.readStream.option("maxFilesPerTrigger", "1").text(landing.getPath),
+        declared, s"$dir/out", s"$dir/ckpt", delayMs = 60000L).start()
+      try {
+        (0 until files).foreach { i =>
+          if (!new java.io.File(landing, s"wire$i.json").exists()) land(i, Seq(epoch0, epoch1)(i))
+          q.processAllAvailable()
+        }
+        Option(q.exception.orNull).foreach(throw _)
+      } finally q.stop()
+    }
+    val laneNames = Seq("quarantine", "dlq", "late", "dup", "ingested")
+    def lanes(): Map[String, Seq[String]] = laneNames.map { l =>
+      val snap = TxParquetTable.snapshot(spark, s"$dir/out/$l")
+      l -> snap.select(to_json(struct(snap.columns.sorted.map(col): _*)))
+        .as[String].collect().toSeq.sorted
+    }.toMap
+    runUntil(2)
+    val whole = lanes()
+    assert(whole.values.map(_.size).sum === epoch0.size + epoch1.size,
+      s"exactly-one-lane identity: $whole")
+    assert(Seq("late", "dup", "ingested", "quarantine").forall(l => whole(l).nonEmpty), whole.toString)
+    // roll epoch 1 back to "late committed, nothing after it"
+    Seq("dup", "ingested", "ids").foreach { t =>
+      val v = TxParquetTable.latestVersion(s"$dir/out/$t")
+      assert(v === 1L, t)
+      assert(new java.io.File(s"$dir/out/$t/_graft_log", f"$v%020d.json").delete(), t)
+    }
+    Seq("1", ".1.crc").foreach(f => new java.io.File(s"$dir/ckpt/commits", f).delete())
+    assert(TxParquetTable.recordedTxn(s"$dir/out/late", "graft-e2e-ingest") === Some(1L))
+    assert(TxParquetTable.recordedTxn(s"$dir/out/dup", "graft-e2e-ingest") === Some(0L))
+    runUntil(2)
+    val replayed = lanes()
+    laneNames.foreach(l => assert(replayed(l) === whole(l), s"lane $l after the replay"))
+    assert(replayed.values.map(_.size).sum === epoch0.size + epoch1.size)
+    assert(laneNames.forall(l =>
+      TxParquetTable.recordedTxn(s"$dir/out/$l", "graft-e2e-ingest") === Some(1L)))
+  }
 }

@@ -76,4 +76,20 @@ class QueryAuditSpec extends SparkSpec {
         s"${a.name} and ${b.name} share or interleave jobs")
     }
   }
+
+  test("AQE stage jobs are named by their root SQL execution, not the thread-pool frame") {
+    // adaptive execution submits each shuffle stage from a thread pool,
+    // whose stack holds no engine frame; the job must take its name
+    // from the SQL execution that scheduled it
+    val r = withAudit(_.run("q_synthetic_aqe") {
+      spark.range(2000).repartition(4, col("id"))
+        .groupBy((col("id") % 5).as("k")).count().collect()
+      spark.range(10).toDF()
+    })
+    val sites = r.jobs.map(_.callSite)
+    assert(r.jobs.size >= 3, sites.mkString("; "))
+    assert(sites.forall(_.contains("graft.")), sites.mkString("; "))
+    assert(sites.count(_.contains("QueryAuditSpec")) >= 2,
+      s"the eager action's stage jobs are not named by it: ${sites.mkString("; ")}")
+  }
 }

@@ -1318,4 +1318,99 @@ class TxTableSpec extends SparkSpec {
       path, "id", buckets = 4)
     assert(state(1L) === ((1L, "regressed")))
   }
+
+  private def stageDirs(paths: Seq[String]): Seq[String] =
+    paths.flatMap(p => Option(new java.io.File(p).listFiles()).toSeq.flatten)
+      .map(_.getName).filter(_.startsWith(".stage-"))
+
+  private def dataFiles(path: String): Set[String] =
+    Option(new java.io.File(path, "data").listFiles()).toSeq.flatten.map(_.getName).toSet
+
+  test("localFileRowCount reads the parquet reader's count straight from the footer, empty files too") {
+    val dir = freshPath()
+    spark.range(0, 1000, 1, 3).write.parquet(s"$dir/a")
+    spark.range(0).write.parquet(s"$dir/b")
+    val files = Seq("a", "b").flatMap(d => new java.io.File(dir, d).listFiles()
+      .filter(_.getName.endsWith(".parquet")))
+    val conf = spark.sessionState.newHadoopConf()
+    assert(files.exists(f => graft.sources.ParquetFooters.fileRowCount(conf, f.getPath) == 0L))
+    files.foreach { f =>
+      assert(graft.sources.ParquetFooters.localFileRowCount(f) ===
+        graft.sources.ParquetFooters.fileRowCount(conf, f.getPath), f.getName)
+    }
+    assert(files.map(graft.sources.ParquetFooters.localFileRowCount).sum === 1000L)
+    val notParquet = new java.io.File(dir, "x.parquet")
+    Files.write(notParquet.toPath, "not a parquet file".getBytes("UTF-8"))
+    intercept[IllegalArgumentException](graft.sources.ParquetFooters.localFileRowCount(notParquet))
+  }
+
+  test("appendLanes: one write, one commit per lane; log numRecords equal each lane's rows") {
+    val root = freshPath()
+    val lanes = Seq("a", "b", "c").map(l => l -> s"$root/$l")
+    val df = spark.range(0, 100).repartition(4)
+      .withColumn("lane", when(col("id") % 10 === 0, "a")
+        .when(col("id") % 10 < 4, "b").otherwise("c"))
+    val vs = TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("lanes-app", 0L)))
+    assert(vs === Seq(0L, 0L, 0L))
+    val want = Map("a" -> 10L, "b" -> 30L, "c" -> 60L)
+    lanes.foreach { case (l, p) =>
+      assert(TxParquetTable.rowCount(p) === Some(want(l)), l)
+      val snap = TxParquetTable.snapshot(spark, p)
+      assert(snap.columns.toSeq === Seq("id"), "the lane column is not persisted")
+      assert(snap.count() === want(l))
+    }
+    assert(stageDirs(lanes.map(_._2)).isEmpty)
+    // a row whose lane has no table fails loudly and leaves nothing staged
+    val e = intercept[IllegalArgumentException] {
+      TxParquetTable.appendLanes(df.withColumn("lane", lit("z")), "lane", lanes)
+    }
+    assert(e.getMessage.contains("z"))
+    assert(stageDirs(lanes.map(_._2)).isEmpty)
+    assert(lanes.forall { case (_, p) => TxParquetTable.latestVersion(p) === 0L })
+  }
+
+  test("appendLanes: a lane whose txn is recorded is skipped and keeps no staged file") {
+    val root = freshPath()
+    val lanes = Seq("x", "y").map(l => l -> s"$root/$l")
+    val df = Seq((1L, "x"), (2L, "y"), (3L, "y")).toDF("id", "lane")
+    // a partial commit: only x landed under (app, 7)
+    TxParquetTable.append(Seq(1L).toDF("id"), lanes.head._2, txn = Some(("app", 7L)))
+    val xFiles = dataFiles(lanes.head._2)
+    val vs = TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", 7L)))
+    assert(vs === Seq(0L, 0L))
+    assert(dataFiles(lanes.head._2) === xFiles, "the skipped lane gained a file")
+    assert(TxParquetTable.snapshot(spark, lanes.head._2).count() === 1L)
+    assert(TxParquetTable.rowCount(lanes(1)._2) === Some(2L))
+    // a full replay is a no-op on every lane
+    assert(TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", 7L))) === vs)
+    assert(lanes.forall { case (_, p) => TxParquetTable.latestVersion(p) === 0L })
+    assert(stageDirs(lanes.map(_._2)).isEmpty)
+  }
+
+  test("appendLanes: an empty lane commits its txn with no file and reads with its columns") {
+    val root = freshPath()
+    val lanes = Seq("full", "empty").map(l => l -> s"$root/$l")
+    val df = Seq((1L, "v1", "full"), (2L, "v2", "full")).toDF("id", "v", "lane")
+    val vs = TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", 0L)))
+    val empty = lanes(1)._2
+    assert(vs === Seq(0L, 0L))
+    assert(dataFiles(empty).isEmpty && TxParquetTable.rowCount(empty) === Some(0L))
+    assert(TxParquetTable.recordedTxn(empty, "app") === Some(0L))
+    val read = TxParquetTable.snapshot(spark, empty)
+    assert(read.schema === df.drop("lane").schema)
+    assert(read.filter(col("v") === "v1").count() === 0L)
+    // the schema survives a log checkpoint
+    (1 to TxParquetTable.checkpointInterval).foreach { e =>
+      TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", e.toLong)))
+    }
+    assert(new java.io.File(empty, s"_graft_log/${"%020d".format(
+      TxParquetTable.checkpointInterval.toLong)}.ckpt.json").exists())
+    assert(TxParquetTable.snapshot(spark, empty).schema === df.drop("lane").schema)
+    assert(TxParquetTable.rowCount(lanes.head._2) ===
+      Some(2L * (TxParquetTable.checkpointInterval + 1)))
+    // once a file lands, the files carry the schema
+    TxParquetTable.append(Seq((9L, "v9")).toDF("id", "v"), empty)
+    assert(TxParquetTable.snapshot(spark, empty).as[(Long, String)].collect() ===
+      Array((9L, "v9")))
+  }
 }
