@@ -576,7 +576,8 @@ object TxParquetTable {
     * With it, the write is partitioned on that column and each lane's
     * files go to the table `targets` maps the lane value to; the column
     * is not persisted, and a lane with no rows gets no file. A row whose
-    * lane has no target fails the call before any file moves.
+    * lane has no target fails the call before any file moves. Bucket and
+    * zone-map stats are computed only in the one-target case.
     *
     * When `bucketOf` is set, per-file bucket stats are computed by
     * evaluating that expression over the staged data and recorded in
@@ -593,6 +594,8 @@ object TxParquetTable {
       statsCols: Seq[String]): Seq[Seq[AddFile]] = {
     require(laneCol.nonEmpty || targets.size == 1,
       s"${targets.size} targets need a lane column")
+    require(laneCol.isEmpty || (bucketOf.isEmpty && statsCols.isEmpty),
+      "a partitioned staging write records no per-file stats")
     targets.foreach { case (_, path) => dataDir(path).mkdirs() }
     val spark = df.sparkSession
     val tmp = new File(targets.head._2, s".stage-${java.util.UUID.randomUUID()}")
@@ -622,9 +625,6 @@ object TxParquetTable {
             s"rows in lanes ${unknown.mkString(",")} of $c have no target table")
           targets.map { case (lane, _) => byLane.get(lane).map(parquetIn).getOrElse(Seq.empty) }
       }
-      // a file's key relative to the staging directory (lane dir + name)
-      def key(f: File): String =
-        if (laneCol.isEmpty) f.getName else s"${f.getParentFile.getName}/${f.getName}"
       // Per-file bucket sets and zone-map bounds in ONE job over the staged
       // directory, grouped by input_file_name (r18, guide §1.2: the previous
       // form launched one agg job per staged file plus one distinct job per
@@ -644,18 +644,17 @@ object TxParquetTable {
                 val e = statsExpr(dt, org.apache.spark.sql.functions.col(c))
                 Seq(min(e), max(e))
               }
-          val depth = if (laneCol.isEmpty) 1 else 2
           fileDf.groupBy(input_file_name().as("__file"))
             .agg(aggs.head, aggs.tail: _*)
             .collect()
-            .map(r => r.getString(0).split('/').takeRight(depth).mkString("/") -> r).toMap
+            .map(r => r.getString(0).split('/').last -> r).toMap
         }
       val statsBase = if (bucketOf.isEmpty) 1 else 2 // row offset of first min
       targets.zip(parts).map { case ((_, path), files) =>
         files.map { p =>
           val name = s"${java.util.UUID.randomUUID()}.parquet"
           val target = new File(dataDir(path), name)
-          val row = perFile.get(key(p))
+          val row = perFile.get(p.getName)
           Files.move(p.toPath, target.toPath)
           // footer-only row count stamped into the log (Delta's numRecords):
           // snapshot row counts and Bloom sizing become pure log reads
@@ -998,15 +997,15 @@ object TxParquetTable {
     * commit lands only the missing lanes) and per-file `numRecords`.
     * Every lane commits in every call, an empty one with no file and
     * its schema in the log, so it still reads with its columns. The
-    * lane column is not persisted. Returns each lane's committed
+    * lane column is not persisted. If a lane's commit fails, the lanes
+    * after it keep no staged file. Returns each lane's committed
     * version, in `lanes` order.
     */
   def appendLanes(df: DataFrame, laneCol: String, lanes: Seq[(String, String)],
-      statsColumns: Seq[String] = Seq.empty,
       txn: Option[(String, Long)] = None): Seq[Long] = {
     require(lanes.map(_._1).distinct.size == lanes.size,
       s"duplicate lane in ${lanes.map(_._1).mkString(",")}")
-    appendStaged(df, Some(laneCol), lanes, statsColumns, txn)
+    appendStaged(df, Some(laneCol), lanes, Seq.empty, txn)
   }
 
   private def appendStaged(df: DataFrame, laneCol: Option[String],
@@ -1038,15 +1037,28 @@ object TxParquetTable {
       case _ => df
     }
     val staged = stageLanes(toWrite, laneCol, pending.map(targets), None, statsColumns)
-    val laneSchema = org.apache.spark.sql.types.StructType(
-      df.schema.filterNot(f => laneCol.contains(f.name)))
-    val committed = pending.zip(staged).map { case (i, adds) =>
-      val (path, snap) = (targets(i)._2, snaps(i))
-      val cols = (tableColumns(df.sparkSession, path, snap) ++ laneSchema.fieldNames).distinct
-      i -> publish(path, adds, Seq.empty, Seq.empty, snap.version, columns = cols, txn = txn,
-        schema = if (adds.isEmpty) Some(laneSchema.json) else None)
-    }.toMap
-    targets.indices.map(i => committed.getOrElse(i, snaps(i).version))
+    // nullable throughout, as a parquet read of the lane's files returns
+    // it: a table's snapshot schema does not change when its first row lands
+    val laneSchema = org.apache.spark.sql.graft.bridge.asNullable(
+      org.apache.spark.sql.types.StructType(df.schema.filterNot(f => laneCol.contains(f.name))))
+    var started = 0 // lanes handed to publish
+    try {
+      val committed = pending.zip(staged).map { case (i, adds) =>
+        val (path, snap) = (targets(i)._2, snaps(i))
+        val cols = (tableColumns(df.sparkSession, path, snap) ++ laneSchema.fieldNames).distinct
+        started += 1
+        i -> publish(path, adds, Seq.empty, Seq.empty, snap.version, columns = cols, txn = txn,
+          schema = if (adds.isEmpty) Some(laneSchema.json) else None)
+      }.toMap
+      targets.indices.map(i => committed.getOrElse(i, snaps(i).version))
+    } catch { case e: Throwable =>
+      // every lane was staged before the first commit: the files of the
+      // lanes never handed to publish belong to no commit
+      pending.zip(staged).drop(started).foreach { case (i, adds) =>
+        adds.foreach(f => new File(dataDir(targets(i)._2), f.name).delete())
+      }
+      throw e
+    }
   }
 
   /** Compaction (the OPTIMIZE shape): rewrite the current snapshot into

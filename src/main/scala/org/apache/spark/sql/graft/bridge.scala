@@ -33,6 +33,12 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The schema a file-source write persists and a read returns: every
+    * field, nested ones included, nullable (`asNullable` is private[spark]).
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Analyzed logical plan of a frame. */
   def analyzed(df: Dataset[_]): LogicalPlan = df.queryExecution.analyzed
 

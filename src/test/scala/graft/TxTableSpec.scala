@@ -1396,8 +1396,11 @@ class TxTableSpec extends SparkSpec {
     assert(vs === Seq(0L, 0L))
     assert(dataFiles(empty).isEmpty && TxParquetTable.rowCount(empty) === Some(0L))
     assert(TxParquetTable.recordedTxn(empty, "app") === Some(0L))
+    // the same schema a read of the full lane's files returns
+    val fileSchema = TxParquetTable.snapshot(spark, lanes.head._2).schema
+    assert(fileSchema.fieldNames.toSeq === Seq("id", "v"))
     val read = TxParquetTable.snapshot(spark, empty)
-    assert(read.schema === df.drop("lane").schema)
+    assert(read.schema === fileSchema)
     assert(read.filter(col("v") === "v1").count() === 0L)
     // the schema survives a log checkpoint
     (1 to TxParquetTable.checkpointInterval).foreach { e =>
@@ -1405,12 +1408,33 @@ class TxTableSpec extends SparkSpec {
     }
     assert(new java.io.File(empty, s"_graft_log/${"%020d".format(
       TxParquetTable.checkpointInterval.toLong)}.ckpt.json").exists())
-    assert(TxParquetTable.snapshot(spark, empty).schema === df.drop("lane").schema)
+    assert(TxParquetTable.snapshot(spark, empty).schema === fileSchema)
     assert(TxParquetTable.rowCount(lanes.head._2) ===
       Some(2L * (TxParquetTable.checkpointInterval + 1)))
     // once a file lands, the files carry the schema
     TxParquetTable.append(Seq((9L, "v9")).toDF("id", "v"), empty)
-    assert(TxParquetTable.snapshot(spark, empty).as[(Long, String)].collect() ===
-      Array((9L, "v9")))
+    val landed = TxParquetTable.snapshot(spark, empty)
+    assert(landed.schema === fileSchema, "the schema changed when the first row landed")
+    assert(landed.as[(Long, String)].collect() === Array((9L, "v9")))
+  }
+
+  test("appendLanes: a failed commit leaves no staged file in the lanes after it") {
+    val root = freshPath()
+    val lanes = Seq("a", "b", "c").map(l => l -> s"$root/$l")
+    // lane a's log directory is a dangling link: its commit fails after
+    // every lane's files were moved into its table
+    new java.io.File(lanes.head._2).mkdirs()
+    Files.createSymbolicLink(java.nio.file.Paths.get(lanes.head._2, TxParquetTable.LogDirName),
+      java.nio.file.Paths.get(root, "missing"))
+    val df = spark.range(0, 30).withColumn("lane",
+      when(col("id") % 3 === 0, "a").when(col("id") % 3 === 1, "b").otherwise("c"))
+    intercept[java.nio.file.NoSuchFileException] {
+      TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", 0L)))
+    }
+    lanes.tail.foreach { case (l, p) =>
+      assert(dataFiles(p).isEmpty, s"lane $l kept files no commit references")
+      assert(TxParquetTable.latestVersion(p) === -1L)
+    }
+    assert(stageDirs(lanes.map(_._2)).isEmpty)
   }
 }
