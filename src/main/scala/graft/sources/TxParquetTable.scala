@@ -362,14 +362,45 @@ object TxParquetTable {
         org.apache.spark.sql.types.DataType.fromJson(json)
           .asInstanceOf[org.apache.spark.sql.types.StructType])
     }
-    // mergeSchema: schema EVOLUTION support — an append may carry a
-    // superset schema (new nullable columns); older files surface null
-    // for the added columns, exactly Delta's additive-evolution rule.
-    // Width changes are additive-only: parquet would fail loudly on a
-    // same-name type CHANGE at read, so evolution never silently
-    // corrupts (verified in TxTableSpec).
-    else spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => new File(dataDir(path), f.name).getAbsolutePath): _*)
+    else readLive(spark, path, files)
+  }
+
+  /** Read `files` of the table at `path` under their merged schema.
+    * mergeSchema is schema EVOLUTION support — an append may carry a
+    * superset schema (new nullable columns); older files surface null
+    * for the added columns, exactly Delta's additive-evolution rule.
+    * Width changes are additive-only: parquet would fail loudly on a
+    * same-name type CHANGE at read, so evolution never silently
+    * corrupts (verified in TxTableSpec).
+    *
+    * Inferring the merged schema is a Spark job over every footer. A
+    * data file is immutable and uniquely named, so one file set read
+    * under one session conf always infers the same schema: it is kept
+    * (the last [[LiveSchemaEntries]] sets) and handed to the next read
+    * of the same set, which then runs no inference job — a repeated
+    * read of an unchanged version pays only its own query.
+    */
+  private def readLive(spark: SparkSession, path: String, files: Seq[AddFile]): DataFrame = {
+    val paths = files.map(f => new File(dataDir(path), f.name).getAbsolutePath)
+    val key = (paths, spark.conf.getAll)
+    val reader = spark.read.option("mergeSchema", "true")
+    liveSchemas.synchronized(Option(liveSchemas.get(key))) match {
+      case Some(schema) => reader.schema(schema).parquet(paths: _*)
+      case None =>
+        val df = reader.parquet(paths: _*)
+        liveSchemas.synchronized(liveSchemas.put(key, df.schema))
+        df
+    }
+  }
+
+  private val LiveSchemaEntries = 32
+  // access-ordered: the eldest entry is the least recently read set
+  private val liveSchemas = new java.util.LinkedHashMap[
+      (Seq[String], Map[String, String]), org.apache.spark.sql.types.StructType](
+      16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        (Seq[String], Map[String, String]), org.apache.spark.sql.types.StructType]): Boolean =
+      size() > LiveSchemaEntries
   }
 
   /** Range read with FILE-LEVEL data skipping: rows of the snapshot
@@ -454,8 +485,7 @@ object TxParquetTable {
         "Pin a version at or above the last vacuum's retainVersion.")
     val base =
       if (kept.isEmpty) snapshot(spark, path, version).filter(lit(false))
-      else spark.read.option("mergeSchema", "true")
-        .parquet(kept.map(f => new File(dataDir(path), f.name).getAbsolutePath): _*)
+      else readLive(spark, path, kept)
     val c = col(column)
     val residual = (lower.map(l => c >= lit(l)) ++ upper.map(u => c <= lit(u)))
       .reduce(_ && _)
@@ -500,9 +530,7 @@ object TxParquetTable {
       s"changes($fromVersion -> $toVersion) of $path needs vacuumed files " +
         s"(first missing: ${missing.head.name}). Pin versions at or above " +
         "the last vacuum's retainVersion.")
-    def readFiles(files: Seq[AddFile]): DataFrame =
-      spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => new File(dataDir(path), f.name).getAbsolutePath): _*)
+    def readFiles(files: Seq[AddFile]): DataFrame = readLive(spark, path, files)
     if (aOnly.isEmpty && bOnly.isEmpty) {
       val base = snapshot(spark, path, Some(toVersion))
       val cols = col(idCol) +: base.columns.filter(_ != idCol).map(col).toSeq

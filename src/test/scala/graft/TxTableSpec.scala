@@ -1056,6 +1056,41 @@ class TxTableSpec extends SparkSpec {
     assert(v0.columns.toSet === Set("id", "v"))
   }
 
+  test("snapshot: a repeat read of an unchanged file set infers no schema; a new set re-infers") {
+    val path = freshPath()
+    TxParquetTable.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // jobs started while building the frame (no action runs); the async
+    // listener bus gets a beat to deliver them
+    def jobsToRead(version: Option[Long] = None): (org.apache.spark.sql.DataFrame, Int) = {
+      jobs.set(0)
+      val df = TxParquetTable.snapshot(spark, path, version)
+      Thread.sleep(300)
+      (df, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (first, inferred) = jobsToRead()
+      assert(inferred >= 1, "the first read of a file set infers its merged schema")
+      val (again, repeat) = jobsToRead()
+      assert(repeat === 0, s"a repeat read of the same files ran $repeat inference jobs")
+      assert(again.schema === first.schema)
+      assert(again.as[(Long, String)].collect().sorted === Array((1L, "a"), (2L, "b")))
+      // a widened append is a new file set: its schema is inferred afresh
+      TxParquetTable.append(Seq((3L, "c", 9.5)).toDF("id", "v", "score"), path)
+      val (wide, _) = jobsToRead()
+      assert(wide.columns.toSeq === Seq("id", "v", "score"))
+      assert(wide.filter(col("score").isNull).count() === 2L)
+      // time travel to the narrow version reuses the narrow set's schema
+      val (narrow, pinned) = jobsToRead(Some(0L))
+      assert(pinned === 0 && narrow.schema === first.schema)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("schema evolution survives upsert and compact (no silent column loss)") {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("txevolve2").toString
