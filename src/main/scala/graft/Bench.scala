@@ -149,8 +149,11 @@ object Bench {
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: $e"); false }
         val dt = (System.nanoTime() - t0) / 1e9
-        graft.util.Pins.releaseNewerThan(spark, pinned)
-        Option.when(ok)(dt)
+        val released =
+          try { graft.util.Pins.releaseNewerThan(spark, pinned); true }
+          catch { case e: IllegalStateException =>
+            System.err.println(s"[bench] $name failed: $e"); false }
+        Option.when(ok && released)(dt)
       }
       name -> (if (times.forall(_.isDefined)) Some(times.flatten.min) else None)
     }

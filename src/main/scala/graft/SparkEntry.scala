@@ -4059,6 +4059,28 @@ GROUP BY order_year""")
       out.schema)
   }
 
+  /** The bulk-serve accounting of q236 and q243 in ONE job (r19, guide
+    * §1.2: it was four actions over a pinned serve output): served rows,
+    * distinct queries, served rows that hit the exact twin, and distinct
+    * (base, id) pairs. A served row joins the twin's (base, id) row, so
+    * `exact` must be unique per (base, id): top-k of distinct corpus ids
+    * per query is, but a duplicated corpus id would fan the join out and
+    * inflate n_served and n_hit. The guard fails the job instead.
+    */
+  private[graft] def bulkServeAccounting(served: DataFrame,
+      exact: DataFrame): (Long, Long, Long, Long) = {
+    val twin = graft.util.Guards.requireUniquePerKey(exact, Seq("base", "id"),
+      "bulk-serve exact twin")
+    val acct = served
+      .join(twin.withColumn("__hit", lit(true)), Seq("base", "id"), "left")
+      .agg(count(lit(1)).as("n_served"),
+        countDistinct(col("qid")).as("n_queries"),
+        count(col("__hit")).as("n_hit"),
+        countDistinct(col("base"), col("id")).as("n_base_pairs"))
+      .head()
+    (acct.getLong(0), acct.getLong(1), acct.getLong(2), acct.getLong(3))
+  }
+
   /** X97: BULK ANN serving from the persisted index (r15 judge item 2)
     * — q227's serve path collects the caller's query vectors, right
     * for 5 interactive queries and a driver OOM for a re-embedding
@@ -4099,22 +4121,7 @@ GROUP BY order_year""")
       val exact = Similarity.cosineTopKBatch(emb, "vec_id", "embedding",
           baseQueries, "qid", "qv", k = 10)
         .select(col("qid").as("base"), col("id"))
-      // ONE accounting job (r19, guide §1.2): the four counts used to be
-      // four actions over a localCheckpointed serve output (4 jobs + an
-      // eager materialization pass); `exact` is unique per (base, id) by
-      // construction (top-k of distinct corpus ids per query), so the
-      // left join cannot fan out and count(__hit) IS the old semi-join
-      // count. With one consumer the pin is gone too — the serve plan
-      // streams straight into the aggregate.
-      val acct = served
-        .join(exact.withColumn("__hit", lit(true)), Seq("base", "id"), "left")
-        .agg(count(lit(1)).as("n_served"),
-          countDistinct(col("qid")).as("n_queries"),
-          count(col("__hit")).as("n_hit"),
-          countDistinct(col("base"), col("id")).as("n_base_pairs"))
-        .head()
-      val (nServed, nQueries, nHit, nBasePairs) = (acct.getLong(0),
-        acct.getLong(1), acct.getLong(2), acct.getLong(3))
+      val (nServed, nQueries, nHit, nBasePairs) = bulkServeAccounting(served, exact)
       import s.implicits._
       Seq((nQueries, nServed,
           nHit * 10 >= nServed * 3,
@@ -4377,18 +4384,7 @@ GROUP BY order_year""")
       val exact = Similarity.cosineTopKBatch(emb, "vec_id", "embedding",
           baseQueries, "qid", "qv", k = 10)
         .select(col("qid").as("base"), col("id"))
-      // ONE accounting job replacing four actions + the serve-output pin
-      // (r19, guide §1.2) — the q236 fusion, PQ edition; see q236 for
-      // the no-fan-out argument
-      val acct = served
-        .join(exact.withColumn("__hit", lit(true)), Seq("base", "id"), "left")
-        .agg(count(lit(1)).as("n_served"),
-          countDistinct(col("qid")).as("n_queries"),
-          count(col("__hit")).as("n_hit"),
-          countDistinct(col("base"), col("id")).as("n_base_pairs"))
-        .head()
-      val (nServed, nQueries, nHit, nBasePairs) = (acct.getLong(0),
-        acct.getLong(1), acct.getLong(2), acct.getLong(3))
+      val (nServed, nQueries, nHit, nBasePairs) = bulkServeAccounting(served, exact)
       import s.implicits._
       Seq((nQueries, nServed,
           nHit * 10 >= nServed * 3,

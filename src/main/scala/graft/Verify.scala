@@ -50,8 +50,13 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           Some(name -> e.toString)
         }
-      graft.util.Pins.releaseNewerThan(spark, pinned)
-      error
+      val leaked =
+        try { graft.util.Pins.releaseNewerThan(spark, pinned); None }
+        catch { case e: IllegalStateException =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> e.toString)
+        }
+      error.orElse(leaked)
     }
     Files.writeString(Paths.get(s"$outDir/verify_failed.json"), failed.map { case (n, e) =>
       s"""{"name": ${q(n)}, "error": ${q(e)}}"""

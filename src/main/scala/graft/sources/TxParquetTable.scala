@@ -9,6 +9,8 @@ import com.fasterxml.jackson.databind.node.ArrayNode
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Transactional parquet table: a commit log (`_graft_log/`) over plain
   * parquet data files, giving atomic multi-file commits, snapshot
@@ -17,13 +19,15 @@ import org.apache.spark.sql.functions._
   * reduced to the pieces this engine needs (DESIGN.md roadmap item 8).
   *
   * Protocol:
-  *   - Data files are written under `data/` with globally unique names;
-  *     a writer stages files first, then publishes a commit.
+  *   - Data files are written under `data/` with globally unique names,
+  *     by ONE Spark job per write whose job commit publishes the commit
+  *     ([[TxCommitProtocol]]); a failed job deletes the files it wrote.
   *   - Commit N is the file `_graft_log/%020d.json`: a JSON document with
-  *     `add` (file name + per-file bucket stats), `remove` (file names),
-  *     and the writer's declared `buckets` conflict domain.
+  *     `add` (file name + per-file stats), `remove` (file names), the
+  *     writer's declared `buckets` conflict domain, and the table's
+  *     schema after the commit.
   *   - Publishing is an ATOMIC create-if-absent of that commit file:
-  *     hard-link from a staged temp file (link(2) fails if the target
+  *     hard-link from a temp file (link(2) fails if the target
   *     exists; note rename(2) silently REPLACES and cannot be used).
   *     Object stores substitute their conditional-put. Losing the race
   *     means the version exists — re-read the log, CHECK CONFLICTS,
@@ -31,8 +35,11 @@ import org.apache.spark.sql.functions._
   *   - Conflict rule: an upsert conflicts with a concurrent upsert whose
   *     bucket domain intersects its own, and with ANY concurrent append
   *     (an append's rows are not in the upsert's remove set, so ids it
-  *     replaced could resurrect). Appends never conflict with anything.
-  *     On conflict the loser's staged files are deleted and the commit
+  *     replaced could resurrect). An append conflicts only with a
+  *     concurrent commit that recorded another type for one of its
+  *     columns; a concurrent commit's added columns are merged into the
+  *     schema it records.
+  *     On conflict the loser's written files are deleted and the commit
   *     attempt fails to the caller.
   *   - A snapshot at version V is (all adds) minus (all removes) across
   *     commits <= V — readers never see a half-published commit, and old
@@ -49,6 +56,8 @@ import org.apache.spark.sql.functions._
   *     its rewrite set from the log alone — no data read to find
   *     affected files. Files lacking stats (e.g. plain appends) are
   *     conservatively rewritten and thereby gain stats: self-healing.
+  *   - The table's schema is in the log, so no read infers it from the
+  *     files' footers (Delta's `metaData` action).
   */
 object TxParquetTable {
 
@@ -75,54 +84,37 @@ object TxParquetTable {
     */
   private[sources] case class ColStats(t: String, mn: String, mx: String)
 
-  // `numRecords`: the file's row count, read from its parquet FOOTER at
-  // stage time (Delta's AddFile convention) — lets callers size Bloom
-  // filters / plan incremental work from the LOG in O(#files) instead of
-  // paying a corpus count scan (r11 judge item 2). -1 = unknown (legacy
-  // commits written before the field existed); rowCount() returns None
-  // for any snapshot containing such a file, and compaction heals them.
-  private case class AddFile(name: String, buckets: Seq[Int],
+  // `numRecords`: the file's row count, counted by the task that wrote it
+  // (Delta's AddFile convention) — lets callers size Bloom filters / plan
+  // incremental work from the LOG in O(#files) instead of paying a corpus
+  // count scan (r11 judge item 2). -1 = unknown (legacy commits written
+  // before the field existed); rowCount() returns None for any snapshot
+  // containing such a file, and compaction heals them.
+  private[sources] case class AddFile(name: String, buckets: Seq[Int],
     stats: Map[String, ColStats] = Map.empty, numRecords: Long = -1L)
-  // `columns`: the writer's view of the table's column set AFTER its
-  // commit — folded by UNION in state() (columns are additive-only per
-  // the evolution contract, so union is correct under any concurrent
-  // interleaving). Lets the upsert schema guard read the log instead of
-  // every live file's parquet footer (r6 advice: O(#files) planning per
-  // upsert).
-  // `columnsReset`: this commit's column record is a NEW COMPLETE
-  // baseline, not a delta to union — set only by compact, which rewrites
-  // every live file and reads its columns via mergeSchema, so any
-  // legacy (pre-columns) files are gone and their columns captured.
-  // Without it a single legacy commit would pin columnsComplete=false
-  // forever, re-imposing the O(#live files) footer pass compact was
-  // supposed to clear (r7 advice).
+  // `schema`: the table's schema (nullable StructType JSON) after this
+  // commit. Every commit that adds files records it, as does an append
+  // that adds none (a lane of a multi-lane append that was empty this
+  // epoch), so a table that has only ever been empty still reads with
+  // its columns. A commit written before the field existed has none.
+  // `columnsReset`: set by compact and restore, whose commit replaces
+  // every live file; read by history() and the stream source to tell a
+  // compaction in logs that predate `op`.
   // `txn`: Delta-style stream transaction id (appId, version) — a
   // writer that retries the same micro-batch carries the same pair, and
   // append() / publish() drop the duplicate instead of double-adding
   // its files. Folded into Snapshot.txns as max-version-per-app.
   // `op`: the commit's operation name for DESCRIBE-HISTORY ("compact",
-  // "restore"; absent for plain appends/upserts and for legacy logs) —
-  // needed because restore() also sets columnsReset (its post-state is a
-  // complete column baseline) and history would otherwise misreport
-  // restores as compactions.
-  // `schema`: the writer's schema (StructType JSON), recorded only by an
-  // append that adds NO file — a lane of a multi-lane append that was
-  // empty this epoch — so a table that has only ever been empty still
-  // reads with its columns.
+  // "restore", "delete"; absent for plain appends/upserts and for legacy
+  // logs).
   private case class Commit(version: Long, add: Seq[AddFile], remove: Seq[String],
-    buckets: Seq[Int], bucketCount: Option[Int], columns: Seq[String] = Seq.empty,
-    columnsReset: Boolean = false, txn: Option[(String, Long)] = None,
-    op: Option[String] = None, schema: Option[String] = None)
-  // `columnsComplete`: every file-ADDING commit folded into this snapshot
-  // carried a columns record. Only then may the schema guard trust the
-  // log's column set — one legacy commit in the history could have added
-  // files whose columns the log never saw, and trusting a stale union
-  // would let a narrow upsert batch slip past the additive-only guard.
-  // `schema`: the last recorded Commit.schema, dropped by any later
-  // commit that adds files (those files then carry the schema); read
-  // only when no file is live.
+    buckets: Seq[Int], bucketCount: Option[Int], columnsReset: Boolean = false,
+    txn: Option[(String, Long)] = None, op: Option[String] = None,
+    schema: Option[String] = None)
+  // `schema`: the last recorded Commit.schema, dropped by a later commit
+  // that adds files without one (a legacy writer's) — the table's schema
+  // is then inferred from its files.
   private case class Snapshot(version: Long, live: Seq[AddFile], bucketCount: Option[Int],
-    columns: Seq[String] = Seq.empty, columnsComplete: Boolean = true,
     txns: Map[String, Long] = Map.empty, schema: Option[String] = None)
 
   // ---- log serialization (jackson tree API — bundled with Spark) ----
@@ -145,6 +137,18 @@ object TxParquetTable {
       }
     }
 
+  // the schema, and its column names. A binary that predates `schema`
+  // takes the table's column set (its upsert guard, its checkpoints) from
+  // `columns`; a file-adding commit without them sends each of its
+  // upserts through a footer pass over every live file until it compacts.
+  private def putSchema(root: com.fasterxml.jackson.databind.node.ObjectNode,
+      schema: Option[String]): Unit =
+    schema.foreach { json =>
+      val cols = root.putArray("columns")
+      schemaOf(json).fieldNames.foreach(cols.add)
+      root.put("schema", json)
+    }
+
   private def renderCommit(c: Commit): String = {
     val root = mapper.createObjectNode()
     root.put("version", c.version)
@@ -154,24 +158,15 @@ object TxParquetTable {
     val bk = root.putArray("buckets")
     c.buckets.foreach(bk.add)
     c.bucketCount.foreach(root.put("bucketCount", _))
-    if (c.columns.nonEmpty) {
-      val cols = root.putArray("columns")
-      c.columns.foreach(cols.add)
-    }
     if (c.columnsReset) root.put("columnsReset", true)
     c.txn.foreach { case (app, ver) =>
       val t = root.putObject("txn")
       t.put("app", app); t.put("ver", ver)
     }
     c.op.foreach(root.put("op", _))
-    c.schema.foreach(root.put("schema", _))
+    putSchema(root, c.schema)
     mapper.writeValueAsString(root)
   }
-
-  private def parseColumns(root: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
-    Option(root.get("columns"))
-      .map(n => (0 until n.size()).map(n.get(_).asText()))
-      .getOrElse(Seq.empty)
 
   private def parseAdds(n: com.fasterxml.jackson.databind.JsonNode): Seq[AddFile] =
     (0 until n.size()).map { i =>
@@ -203,7 +198,6 @@ object TxParquetTable {
       (0 until rm.size()).map(rm.get(_).asText()),
       (0 until bk.size()).map(bk.get(_).asInt()),
       Option(root.get("bucketCount")).map(_.asInt()),
-      parseColumns(root),
       Option(root.get("columnsReset")).exists(_.asBoolean()),
       Option(root.get("txn")).map(t => (t.get("app").asText(), t.get("ver").asLong())),
       Option(root.get("op")).map(_.asText()),
@@ -215,38 +209,26 @@ object TxParquetTable {
     root.put("version", s.version)
     addArray(root.putArray("live"), s.live)
     s.bucketCount.foreach(root.put("bucketCount", _))
-    // an incomplete column record is NOT checkpointed — a checkpoint
-    // carrying a partial union would launder legacy commits into
-    // guard-trusted "complete" state downstream of it
-    if (s.columnsComplete && s.columns.nonEmpty) {
-      val cols = root.putArray("columns")
-      s.columns.foreach(cols.add)
-    }
     if (s.txns.nonEmpty) {
       val t = root.putObject("txns")
       // sorted for deterministic checkpoint bytes (see addArray)
       s.txns.toSeq.sortBy(_._1).foreach { case (app, ver) => t.put(app, ver) }
     }
-    s.schema.foreach(root.put("schema", _))
+    putSchema(root, s.schema)
     mapper.writeValueAsString(root)
   }
 
   private def parseSnapshot(s: String): Snapshot = {
     val root = mapper.readTree(s)
-    val live = parseAdds(root.get("live"))
-    val cols = parseColumns(root)
-    // renderSnapshot omits columns unless the folded history was
-    // complete, so live files + no columns record = legacy/incomplete
     val txns = Option(root.get("txns")).map { t =>
       val it = t.fields()
       val m = scala.collection.mutable.Map.empty[String, Long]
       while (it.hasNext) { val e = it.next(); m += e.getKey -> e.getValue.asLong() }
       m.toMap
     }.getOrElse(Map.empty[String, Long])
-    Snapshot(root.get("version").asLong(), live,
-      Option(root.get("bucketCount")).map(_.asInt()),
-      cols, columnsComplete = cols.nonEmpty || live.isEmpty, txns = txns,
-      schema = Option(root.get("schema")).map(_.asText()))
+    Snapshot(root.get("version").asLong(), parseAdds(root.get("live")),
+      Option(root.get("bucketCount")).map(_.asInt()), txns,
+      Option(root.get("schema")).map(_.asText()))
   }
 
   // ---- log reading ----
@@ -288,13 +270,6 @@ object TxParquetTable {
     ckpt.live.foreach(f => live += f.name -> f)
     var v = ckpt.version
     var bucketCount = ckpt.bucketCount
-    // union-fold: columns only ever grow (additive-only evolution), so
-    // the union over any interleaving of writers is the true column set —
-    // PROVIDED every file-adding commit recorded its columns
-    // (columnsComplete tracks that; see tableColumns)
-    val columns = scala.collection.mutable.LinkedHashSet.empty[String]
-    ckpt.columns.foreach(columns += _)
-    var complete = ckpt.columnsComplete
     val txns = scala.collection.mutable.Map.empty[String, Long]
     ckpt.txns.foreach { case (a, tv) => txns += a -> tv }
     var schema = ckpt.schema
@@ -304,12 +279,6 @@ object TxParquetTable {
         c.remove.foreach(live -= _)
         c.add.foreach(a => live += a.name -> a)
         c.bucketCount.foreach(n => bucketCount = Some(n))
-        // a reset commit (compact) replaces every live file with fully
-        // recorded ones: its column set is a fresh complete baseline, so
-        // history poisoned by a legacy commit heals here
-        if (c.columnsReset) { columns.clear(); complete = true }
-        c.columns.foreach(columns += _)
-        if (c.add.nonEmpty && c.columns.isEmpty) complete = false
         c.txn.foreach { case (a, tv) =>
           txns += a -> math.max(txns.getOrElse(a, Long.MinValue), tv)
         }
@@ -317,22 +286,34 @@ object TxParquetTable {
         c.schema.foreach(sc => schema = Some(sc))
         v = cv
       }
-    Snapshot(v, live.values.toSeq, bucketCount, columns.toSeq, complete, txns.toMap,
-      schema)
+    Snapshot(v, live.values.toSeq, bucketCount, txns.toMap, schema)
   }
 
-  /** The table's column set: from the LOG when every file-adding commit
-    * recorded one (all commits written by this code do), else one
-    * mergeSchema footer pass over the live files — a history containing
-    * even one legacy commit cannot trust the log union, since that
-    * commit may have added files carrying columns the log never saw.
+  private def schemaOf(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  private def filePaths(path: String, files: Seq[AddFile]): Seq[String] =
+    files.map(f => new File(dataDir(path), f.name).getAbsolutePath)
+
+  /** The table's schema at `snap`, from the log. A log written before
+    * commits recorded it infers it once, by a mergeSchema read of the
+    * live files' footers; a table with no file and no record has none.
     */
-  private def tableColumns(spark: SparkSession, path: String, snap: Snapshot): Seq[String] =
-    if (snap.live.isEmpty) snap.columns
-    else if (snap.columnsComplete && snap.columns.nonEmpty) snap.columns
-    else spark.read.option("mergeSchema", "true").parquet(
-      snap.live.map(f => new File(dataDir(path), f.name).getAbsolutePath): _*)
-      .columns.toSeq
+  private def tableSchema(spark: SparkSession, path: String, snap: Snapshot): Option[StructType] =
+    snap.schema.map(schemaOf).orElse(
+      if (snap.live.isEmpty) None
+      else Some(spark.read.option("mergeSchema", "true")
+        .parquet(filePaths(path, snap.live): _*).schema))
+
+  /** Read `files` of the table at `path` under the table's `schema`; no
+    * inference job runs. Schema evolution is additive-only: a file
+    * written before a widening append reads null for the added columns,
+    * exactly Delta's rule, and a same-name type CHANGE fails the write
+    * that attempts it ([[org.apache.spark.sql.graft.bridge.mergeSchemas]]),
+    * so evolution never silently corrupts. */
+  private def readFiles(spark: SparkSession, path: String, schema: StructType,
+      files: Seq[AddFile]): DataFrame =
+    spark.read.schema(schema).parquet(filePaths(path, files): _*)
 
   /** Snapshot read. `version = Some(v)` time-travels to commit v.
     *
@@ -357,50 +338,11 @@ object TxParquetTable {
         s"of $path is no longer fully present: ${missing.length} of ${files.length} " +
         s"data files vacuumed away (first missing: ${missing.head.name}). " +
         "Pin a version at or above the last vacuum's retainVersion.")
-    if (files.isEmpty) st.schema.fold(spark.emptyDataFrame) { json =>
-      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
+    tableSchema(spark, path, st).fold(spark.emptyDataFrame) { schema =>
+      if (files.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      else readFiles(spark, path, schema, files)
     }
-    else readLive(spark, path, files)
-  }
-
-  /** Read `files` of the table at `path` under their merged schema.
-    * mergeSchema is schema EVOLUTION support — an append may carry a
-    * superset schema (new nullable columns); older files surface null
-    * for the added columns, exactly Delta's additive-evolution rule.
-    * Width changes are additive-only: parquet would fail loudly on a
-    * same-name type CHANGE at read, so evolution never silently
-    * corrupts (verified in TxTableSpec).
-    *
-    * Inferring the merged schema is a Spark job over every footer. A
-    * data file is immutable and uniquely named, so one file set read
-    * under one session conf always infers the same schema: it is kept
-    * (the last [[LiveSchemaEntries]] sets) and handed to the next read
-    * of the same set, which then runs no inference job — a repeated
-    * read of an unchanged version pays only its own query.
-    */
-  private def readLive(spark: SparkSession, path: String, files: Seq[AddFile]): DataFrame = {
-    val paths = files.map(f => new File(dataDir(path), f.name).getAbsolutePath)
-    val key = (paths, spark.conf.getAll)
-    val reader = spark.read.option("mergeSchema", "true")
-    liveSchemas.synchronized(Option(liveSchemas.get(key))) match {
-      case Some(schema) => reader.schema(schema).parquet(paths: _*)
-      case None =>
-        val df = reader.parquet(paths: _*)
-        liveSchemas.synchronized(liveSchemas.put(key, df.schema))
-        df
-    }
-  }
-
-  private val LiveSchemaEntries = 32
-  // access-ordered: the eldest entry is the least recently read set
-  private val liveSchemas = new java.util.LinkedHashMap[
-      (Seq[String], Map[String, String]), org.apache.spark.sql.types.StructType](
-      16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (Seq[String], Map[String, String]), org.apache.spark.sql.types.StructType]): Boolean =
-      size() > LiveSchemaEntries
   }
 
   /** Range read with FILE-LEVEL data skipping: rows of the snapshot
@@ -485,7 +427,7 @@ object TxParquetTable {
         "Pin a version at or above the last vacuum's retainVersion.")
     val base =
       if (kept.isEmpty) snapshot(spark, path, version).filter(lit(false))
-      else readLive(spark, path, kept)
+      else readFiles(spark, path, tableSchema(spark, path, st).get, kept)
     val c = col(column)
     val residual = (lower.map(l => c >= lit(l)) ++ upper.map(u => c <= lit(u)))
       .reduce(_ && _)
@@ -530,15 +472,18 @@ object TxParquetTable {
       s"changes($fromVersion -> $toVersion) of $path needs vacuumed files " +
         s"(first missing: ${missing.head.name}). Pin versions at or above " +
         "the last vacuum's retainVersion.")
-    def readFiles(files: Seq[AddFile]): DataFrame = readLive(spark, path, files)
     if (aOnly.isEmpty && bOnly.isEmpty) {
       val base = snapshot(spark, path, Some(toVersion))
       val cols = col(idCol) +: base.columns.filter(_ != idCol).map(col).toSeq
       return base.select(cols: _*)
         .withColumn("change_type", lit("")).filter(lit(false))
     }
-    val oldDf = if (aOnly.isEmpty) readFiles(bOnly).filter(lit(false)) else readFiles(aOnly)
-    val newDf = if (bOnly.isEmpty) readFiles(aOnly).filter(lit(false)) else readFiles(bOnly)
+    // each side under its version's schema; a side with no changed file
+    // is the other side's files, emptied
+    def read(st: Snapshot, files: Seq[AddFile]) =
+      readFiles(spark, path, tableSchema(spark, path, st).get, files)
+    val oldDf = if (aOnly.isEmpty) read(b, bOnly).filter(lit(false)) else read(a, aOnly)
+    val newDf = if (bOnly.isEmpty) read(a, aOnly).filter(lit(false)) else read(b, bOnly)
     val allCols = (oldDf.columns ++ newDf.columns).distinct.filter(_ != idCol).toSeq
     def side(df: DataFrame, as: String) = {
       val aligned = allCols.foldLeft(df)((d, c) =>
@@ -591,129 +536,71 @@ object TxParquetTable {
     }
   }
 
-  /** Stage `df` as parquet files under data/ (the one-target case of
-    * [[stageLanes]]). */
-  private def stage(df: DataFrame, path: String,
-      bucketOf: Option[org.apache.spark.sql.Column],
-      statsCols: Seq[String] = Seq.empty): Seq[AddFile] =
-    stageLanes(df, None, Seq("" -> path), bucketOf, statsCols).head
+  // data/ holds only files the log names: write them through the raw
+  // local file system, which keeps no `.crc` sidecar beside each file
+  private val RawLocalFs = Map(
+    "fs.file.impl" -> classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
-  /** Stage `df` in ONE write job into a `.stage-<uuid>` directory under
-    * the first target, then move each file into its table's data/.
-    * Without `laneCol` there is one target and every file goes to it.
-    * With it, the write is partitioned on that column and each lane's
-    * files go to the table `targets` maps the lane value to; the column
-    * is not persisted, and a lane with no rows gets no file. A row whose
-    * lane has no target fails the call before any file moves. Bucket and
-    * zone-map stats are computed only in the one-target case.
+  /** Write `df` in ONE Spark job straight into the `targets` tables'
+    * data/ and commit it: the job's commit calls `commit(i, adds)` for
+    * every target, in `targets` order ([[TxCommitProtocol]]). Without
+    * `laneCol` there is one target. With it, each row goes to the table
+    * `targets` maps its lane value to; the column is not persisted, a
+    * lane with no rows gets no file, and a row whose lane has no target
+    * fails the write. When the job or a commit fails, the files of every
+    * target not yet committed are deleted.
     *
-    * When `bucketOf` is set, per-file bucket stats are computed by
-    * evaluating that expression over the staged data and recorded in
-    * the log (write-time stats, read-free upserts later). The expression
-    * form keeps internal bookkeeping columns OUT of the persisted schema:
-    * appended and rewritten files stay schema-identical.
-    *
-    * Returns the staged files per target, in `targets` order. The
-    * staging directory is removed whether or not the call succeeds.
+    * The task that writes a file counts its rows and, per row, evaluates
+    * `bucket` (the file's bucket set: read-free upserts later) and the
+    * zone-map inputs of `statsCols`. The expression form of `bucket`
+    * keeps bookkeeping columns OUT of the persisted schema: appended and
+    * rewritten files stay schema-identical.
     */
-  private def stageLanes(df: DataFrame, laneCol: Option[String],
-      targets: Seq[(String, String)],
-      bucketOf: Option[org.apache.spark.sql.Column],
-      statsCols: Seq[String]): Seq[Seq[AddFile]] = {
+  private def write(df: DataFrame, laneCol: Option[String], targets: Seq[(String, String)],
+      bucket: Option[Column], statsCols: Seq[String])(
+      commit: (Int, Seq[AddFile]) => Unit): Unit = {
     require(laneCol.nonEmpty || targets.size == 1,
       s"${targets.size} targets need a lane column")
-    require(laneCol.isEmpty || (bucketOf.isEmpty && statsCols.isEmpty),
-      "a partitioned staging write records no per-file stats")
-    targets.foreach { case (_, path) => dataDir(path).mkdirs() }
-    val spark = df.sparkSession
-    val tmp = new File(targets.head._2, s".stage-${java.util.UUID.randomUUID()}")
-    try {
-      val writer = df.write.mode("overwrite")
-      laneCol.fold(writer)(c => writer.partitionBy(c)).parquet(tmp.getAbsolutePath)
-      val statted = statsCols.flatMap { c =>
-        val dt = df.schema(c).dataType
-        statsTag(dt).map(tag => (c, dt, tag))
-      }
-      require(statted.size == statsCols.distinct.size,
-        s"statsColumns ${statsCols.mkString(",")} include a type zone maps do not " +
-          "cover (decimal/binary/complex) — record stats only on " +
-          "integer/date/timestamp/float/double/string columns")
-      def parquetIn(d: File) = d.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
-      // staged files per target; a partitioned write names each lane's
-      // directory `<laneCol>=<escaped value>`
-      val parts: Seq[Seq[File]] = laneCol match {
-        case None => Seq(parquetIn(tmp))
-        case Some(c) =>
-          val byLane = tmp.listFiles().filter(_.isDirectory).map { d =>
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(d.getName.stripPrefix(s"$c=")) -> d
-          }.toMap
-          val unknown = byLane.keySet -- targets.map(_._1)
-          require(unknown.isEmpty,
-            s"rows in lanes ${unknown.mkString(",")} of $c have no target table")
-          targets.map { case (lane, _) => byLane.get(lane).map(parquetIn).getOrElse(Seq.empty) }
-      }
-      // Per-file bucket sets and zone-map bounds in ONE job over the staged
-      // directory, grouped by input_file_name (r18, guide §1.2: the previous
-      // form launched one agg job per staged file plus one distinct job per
-      // file for buckets — 2N scheduler round-trips per commit; a 1000-file
-      // commit paid 2000 jobs of driver orchestration for work one grouped
-      // pass does). Keyed by file before the move; a zero-row staged
-      // file has no group and keeps the conservative no-stats/no-buckets
-      // entry the per-file form produced.
-      val statted0 = statted // stable reference for closures below
-      val perFile: Map[String, org.apache.spark.sql.Row] =
-        if (bucketOf.isEmpty && statted0.isEmpty) Map.empty
-        else {
-          val fileDf = spark.read.parquet(tmp.getAbsolutePath)
-          val aggs =
-            bucketOf.map(c => collect_set(c.cast("int")).as("__buckets")).toSeq ++
-              statted0.flatMap { case (c, dt, _) =>
-                val e = statsExpr(dt, org.apache.spark.sql.functions.col(c))
-                Seq(min(e), max(e))
-              }
-          fileDf.groupBy(input_file_name().as("__file"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect()
-            .map(r => r.getString(0).split('/').last -> r).toMap
-        }
-      val statsBase = if (bucketOf.isEmpty) 1 else 2 // row offset of first min
-      targets.zip(parts).map { case ((_, path), files) =>
-        files.map { p =>
-          val name = s"${java.util.UUID.randomUUID()}.parquet"
-          val target = new File(dataDir(path), name)
-          val row = perFile.get(p.getName)
-          Files.move(p.toPath, target.toPath)
-          // footer-only row count stamped into the log (Delta's numRecords):
-          // snapshot row counts and Bloom sizing become pure log reads
-          val numRecords = ParquetFooters.localFileRowCount(target)
-          val buckets = (bucketOf, row) match {
-            case (Some(_), Some(r)) => r.getSeq[Int](1).sorted
-            case _ => Seq.empty
-          }
-          val stats = row match {
-            case Some(r) if statted0.nonEmpty =>
-              statted0.zipWithIndex.flatMap { case ((c, _, tag), i) =>
-                // an all-null file has null bounds: record no stats for the
-                // column (conservative: the file is never pruned on it)
-                val (lo, hi) = (statsBase + 2 * i, statsBase + 2 * i + 1)
-                if (r.isNullAt(lo) || r.isNullAt(hi)) None
-                else Some(c -> ColStats(tag, r.get(lo).toString, r.get(hi).toString))
-              }.toMap
-            case _ => Map.empty[String, ColStats]
-          }
-          AddFile(name, buckets, stats, numRecords)
-        }
-      }
-    } finally { org.apache.hadoop.fs.FileUtil.fullyDelete(tmp); () }
+    val statted = statsCols.flatMap { c =>
+      val dt = df.schema(c).dataType
+      statsTag(dt).map(tag => (c, dt, tag))
+    }
+    require(statted.size == statsCols.distinct.size,
+      s"statsColumns ${statsCols.mkString(",")} include a type zone maps do not " +
+        "cover (decimal/binary/complex) — record stats only on " +
+        "integer/date/timestamp/float/double/string columns")
+    val routes = laneCol.fold(Map("" -> 0)) { c =>
+      targets.zipWithIndex.map { case ((lane, _), i) =>
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .getPartitionPathString(c, lane) -> i
+      }.toMap
+    }
+    val dirs = targets.map { case (_, path) => dataDir(path).getAbsolutePath }
+    bridge.writeParquet(df, laneCol.toSeq, dirs.head, RawLocalFs) { attrs =>
+      val exprs = bridge.boundExpressions(df.sparkSession, attrs,
+        bucket.toSeq ++ statted.map { case (c, dt, _) => statsExpr(dt, col(c)) })
+      val (bucketExpr, bounds) = exprs.splitAt(bucket.size)
+      new TxCommitProtocol(java.util.UUID.randomUUID().toString, dirs, routes,
+        bucketExpr.headOption, statted.zip(bounds).map { case ((c, _, tag), e) => (c, tag, e) },
+        commit)
+    }
+  }
+
+  /** [[write]] to one table; returns the version `commit` published. */
+  private def writeTable(df: DataFrame, path: String, bucket: Option[Column],
+      statsCols: Seq[String])(commit: Seq[AddFile] => Long): Long = {
+    var version = -1L
+    write(df, None, Seq("" -> path), bucket, statsCols) { (_, adds) => version = commit(adds) }
+    version
   }
 
   /** Exact row count of the snapshot at `version` (default latest) from
     * the LOG ALONE — O(#commits) driver work, zero data I/O: the sum of
-    * per-file `numRecords` recorded at stage time. `None` when any live
+    * per-file `numRecords` recorded at write time. `None` when any live
     * file predates the field (legacy commit) — callers fall back to a
-    * count, and the next compact() heals the table (its rewrite re-stages
-    * every file, stamping counts). The 100 TB consumer is Bloom-filter
+    * count, and the next compact() heals the table (its rewrite writes
+    * every file anew, stamping counts). The 100 TB consumer is Bloom-filter
     * sizing for incremental dedup: `expectedItems` from this call costs a
     * log read where a `df.count()` costs a full-scan stage (r11 item 2).
     */
@@ -741,16 +628,16 @@ object TxParquetTable {
     }
 
   /** Try to publish a commit; retries on version races, fails (cleaning
-    * up staged files) on a genuine conflict. Returns the committed
+    * up the added files) on a genuine conflict. Returns the committed
     * version.
     */
   private def publish(
       path: String, add: Seq[AddFile], remove: Seq[String], buckets: Seq[Int],
       readVersion: Long, bucketCount: Option[Int] = None,
-      columns: Seq[String] = Seq.empty, columnsReset: Boolean = false,
+      columnsReset: Boolean = false,
       maxRetries: Int = 20, txn: Option[(String, Long)] = None,
       op: Option[String] = None, ownsAddedFiles: Boolean = true,
-      schema: Option[String] = None): Long = {
+      schema: Option[StructType] = None): Long = {
     // ownsAddedFiles = false: the caller's `add` entries reference files
     // ALREADY OWNED by the log (restore re-adds a past version's files);
     // failure cleanup must never delete them — they back history.
@@ -779,12 +666,29 @@ object TxParquetTable {
           s"tx conflict on buckets ${buckets.mkString(",")} at $path " +
             s"(concurrent commits: ${interlopers.map(_.version).mkString(",")})")
       }
+      // `schema` was merged from the snapshot at readVersion, and appends
+      // do not conflict with appends: fold in what every later commit
+      // recorded, so a narrow append landing after a widening one keeps
+      // its columns. A legacy commit that added files without a schema
+      // leaves it to inference, as state() does.
+      val recorded = try interlopers.foldLeft(schema) { (ours, i) =>
+        i.schema match {
+          case Some(theirs) => ours.map(bridge.mergeSchemas(schemaOf(theirs), _))
+          case None => if (i.add.nonEmpty) None else ours
+        }
+      } catch {
+        case e: org.apache.spark.SparkException =>
+          cleanup()
+          throw new java.util.ConcurrentModificationException(
+            s"tx conflict on the schema at $path: a concurrent commit " +
+              s"(${interlopers.map(_.version).mkString(",")}) recorded another type for a column", e)
+      }
       val next = cf.lastOption.map(_._1 + 1).getOrElse(0L)
       val target = new File(logDir(path), f"$next%020d.json").toPath
       val tmp = Files.write(
         Paths.get(path, s".commit-${java.util.UUID.randomUUID()}.tmp"),
-        renderCommit(Commit(next, add, remove, buckets, bucketCount, columns,
-          columnsReset, txn, op, schema)).getBytes(StandardCharsets.UTF_8))
+        renderCommit(Commit(next, add, remove, buckets, bucketCount, columnsReset,
+          txn, op, recorded.map(_.json))).getBytes(StandardCharsets.UTF_8))
       try {
         // createLink is the atomic CREATE-IF-ABSENT primitive: link(2)
         // fails if the target exists. (rename(2)/Files.move+ATOMIC_MOVE
@@ -902,13 +806,13 @@ object TxParquetTable {
     * number of files THIS CALL deleted (`delete()` returning true), not
     * the number it considered: a file can vanish between the directory
     * listing and the delete — an OCC-losing writer cleaning up its own
-    * staged file is the live case, and `lastModified()` on the vanished
+    * written file is the live case, and `lastModified()` on the vanished
     * name returns 0, which would otherwise sail under any retention
     * horizon and miscount the writer's cleanup as a vacuum deletion
     * (seen as a 1-in-many-runs flake of the racing-vacuum stress spec).
     *
     * Concurrency: an unreferenced-by-the-log file is NOT necessarily
-    * garbage — it may be a concurrent writer's staged-but-uncommitted
+    * garbage — it may be a concurrent writer's written-but-uncommitted
     * file, or belong to a commit published after our log read. Both are
     * NEW files, so (exactly as Delta's VACUUM does) we additionally
     * require a file's mtime to be older than `retentionMs` before
@@ -999,7 +903,8 @@ object TxParquetTable {
         StructField("erase_horizon_version", LongType, nullable = false))))
   }
 
-  /** Atomic append — never conflicts. Returns the committed version.
+  /** Atomic append — conflicts only with a concurrent type change of
+    * one of its columns. Returns the committed version.
     * `statsColumns`: record per-file min/max zone maps for these columns
     * in the log (consumed by [[snapshotRange]]'s file pruning).
     * `txn`: Delta-style stream transaction id (appId, batchVersion) — an
@@ -1014,29 +919,28 @@ object TxParquetTable {
   def append(df: DataFrame, path: String,
       statsColumns: Seq[String] = Seq.empty,
       txn: Option[(String, Long)] = None): Long =
-    appendStaged(df, None, Seq("" -> path), statsColumns, txn).head
+    appendTo(df, None, Seq("" -> path), statsColumns, txn).head
 
   /** Multi-lane atomic append: rows are routed by the value of `laneCol`
     * into the table `lanes` maps it to, all lanes written by ONE write
-    * job (a `partitionBy(laneCol)` staging write), then ONE commit per
-    * table in `lanes` order. Each lane keeps [[append]]'s contract: its
+    * job whose commit is ONE log commit per table, in `lanes` order. Each lane keeps [[append]]'s contract: its
     * own `txn` guard (a lane that already recorded the txn is left out
     * of the write and keeps its version, so a replay after a partial
     * commit lands only the missing lanes) and per-file `numRecords`.
     * Every lane commits in every call, an empty one with no file and
     * its schema in the log, so it still reads with its columns. The
-    * lane column is not persisted. If a lane's commit fails, the lanes
-    * after it keep no staged file. Returns each lane's committed
+    * lane column is not persisted. If a lane's commit fails, it and the
+    * lanes after it keep no written file. Returns each lane's committed
     * version, in `lanes` order.
     */
   def appendLanes(df: DataFrame, laneCol: String, lanes: Seq[(String, String)],
       txn: Option[(String, Long)] = None): Seq[Long] = {
     require(lanes.map(_._1).distinct.size == lanes.size,
       s"duplicate lane in ${lanes.map(_._1).mkString(",")}")
-    appendStaged(df, Some(laneCol), lanes, Seq.empty, txn)
+    appendTo(df, Some(laneCol), lanes, Seq.empty, txn)
   }
 
-  private def appendStaged(df: DataFrame, laneCol: Option[String],
+  private def appendTo(df: DataFrame, laneCol: Option[String],
       targets: Seq[(String, String)], statsColumns: Seq[String],
       txn: Option[(String, Long)]): Seq[Long] = {
     val snaps = targets.map { case (_, path) =>
@@ -1064,29 +968,32 @@ object TxParquetTable {
         df.filter(!col(c).isin(targets.indices.filter(done).map(targets(_)._1): _*))
       case _ => df
     }
-    val staged = stageLanes(toWrite, laneCol, pending.map(targets), None, statsColumns)
     // nullable throughout, as a parquet read of the lane's files returns
     // it: a table's snapshot schema does not change when its first row lands
-    val laneSchema = org.apache.spark.sql.graft.bridge.asNullable(
-      org.apache.spark.sql.types.StructType(df.schema.filterNot(f => laneCol.contains(f.name))))
-    var started = 0 // lanes handed to publish
-    try {
-      val committed = pending.zip(staged).map { case (i, adds) =>
-        val (path, snap) = (targets(i)._2, snaps(i))
-        val cols = (tableColumns(df.sparkSession, path, snap) ++ laneSchema.fieldNames).distinct
-        started += 1
-        i -> publish(path, adds, Seq.empty, Seq.empty, snap.version, columns = cols, txn = txn,
-          schema = if (adds.isEmpty) Some(laneSchema.json) else None)
-      }.toMap
-      targets.indices.map(i => committed.getOrElse(i, snaps(i).version))
-    } catch { case e: Throwable =>
-      // every lane was staged before the first commit: the files of the
-      // lanes never handed to publish belong to no commit
-      pending.zip(staged).drop(started).foreach { case (i, adds) =>
-        adds.foreach(f => new File(dataDir(targets(i)._2), f.name).delete())
-      }
-      throw e
+    val laneSchema = bridge.asNullable(StructType(df.schema.filterNot(f => laneCol.contains(f.name))))
+    // merged before the write, so a type change fails with nothing written
+    val schemas = pending.map { i =>
+      tableSchema(df.sparkSession, targets(i)._2, snaps(i))
+        .fold(laneSchema)(bridge.mergeSchemas(_, laneSchema))
     }
+    val versions = snaps.map(_.version).toArray
+    write(toWrite, laneCol, pending.map(targets), None, statsColumns) { (j, adds) =>
+      val i = pending(j)
+      versions(i) = publish(targets(i)._2, adds, Seq.empty, Seq.empty, snaps(i).version,
+        txn = txn, schema = Some(schemas(j)))
+    }
+    versions.toSeq
+  }
+
+  /** Live data-file count of the current snapshot — LOG-ONLY (no data
+    * file opened; O(#commits-since-checkpoint) driver work). The
+    * small-file health read a streaming append sink checks before
+    * deciding to fold its per-epoch files ([[compact]]); −1 for a
+    * table that does not exist yet.
+    */
+  def liveFileCount(path: String): Int = {
+    val v = latestVersion(path)
+    if (v < 0) -1 else state(path, Some(v)).live.length
   }
 
   /** Compaction (the OPTIMIZE shape): rewrite the current snapshot into
@@ -1104,17 +1011,6 @@ object TxParquetTable {
     * versions stay time-travelable until vacuumed. Returns the committed
     * version (or the read version if already compact).
     */
-  /** Live data-file count of the current snapshot — LOG-ONLY (no data
-    * file opened; O(#commits-since-checkpoint) driver work). The
-    * small-file health read a streaming append sink checks before
-    * deciding to fold its per-epoch files ([[compact]]); −1 for a
-    * table that does not exist yet.
-    */
-  def liveFileCount(path: String): Int = {
-    val v = latestVersion(path)
-    if (v < 0) -1 else state(path, Some(v)).live.length
-  }
-
   def compact(spark: SparkSession, path: String, idCol: String,
       buckets: Int = 16, targetFiles: Int = 4,
       clusterBy: Option[String] = None,
@@ -1135,13 +1031,11 @@ object TxParquetTable {
     // the table's established bucket scheme always wins over the
     // parameter (see upsert) — stats and domains must share one modulus
     val n = snap.bucketCount.getOrElse(buckets)
-    val bucketOf = pmod(xxhash64(col(idCol)), lit(n)).cast("int")
-    // mergeSchema: a schema-evolved table's live set mixes narrow and
-    // wide files; a plain read could resolve the NARROW schema and the
-    // rewrite would silently DROP the evolved column from the whole
-    // table (the removes make it permanent after vacuum)
-    val base = spark.read.option("mergeSchema", "true").parquet(
-        snap.live.map(f => new File(dataDir(path), f.name).getAbsolutePath): _*)
+    val bucket = bucketOf(col(idCol), n)
+    // the table's schema: a schema-evolved table's live set mixes narrow
+    // and wide files, and the rewrite must keep every column
+    val schema = tableSchema(spark, path, snap).get
+    val base = readFiles(spark, path, schema, snap.live)
     // layout choice — the Delta OPTIMIZE dichotomy, extended 2-D:
     //   None:        hash-cluster on the id bucket (upsert locality — a
     //                one-bucket upsert rewrites one file's worth of rows)
@@ -1212,7 +1106,7 @@ object TxParquetTable {
           .repartitionByRange(targetFiles, col("__z"))
           .sortWithinPartitions(col("__z"))
           .drop("__z")
-      case _ => base.repartition(targetFiles, bucketOf)
+      case _ => base.repartition(targetFiles, bucket)
     }
     // zone maps survive compaction: re-record stats for every column ANY
     // live file tracked (inferred from the log — the caller declared
@@ -1224,13 +1118,10 @@ object TxParquetTable {
     val inheritedStats = (snap.live.flatMap(_.stats.keys) ++ clusterBy ++
         zorderBy).distinct
       .filter(df.columns.contains)
-    val adds = stage(df, path, Some(bucketOf), inheritedStats)
-    // columnsReset: df.columns came from a mergeSchema read of EVERY live
-    // file, and all of them are removed by this commit — the union with
-    // the log's (possibly incomplete) record is a fresh complete baseline
-    publish(path, adds, snap.live.map(_.name), (0 until n), readVersion, Some(n),
-      columns = (snap.columns ++ df.columns).distinct, columnsReset = true,
-      op = Some("compact"))
+    writeTable(df, path, Some(bucket), inheritedStats) { adds =>
+      publish(path, adds, snap.live.map(_.name), (0 until n), readVersion, Some(n),
+        columnsReset = true, op = Some("compact"), schema = Some(schema))
+    }
   }
 
   /** Delta-style RESTORE: make the table's CURRENT state equal its
@@ -1245,9 +1136,9 @@ object TxParquetTable {
     *
     * Concurrency: the commit declares the FULL bucket domain (it
     * replaces the whole live set), so any concurrent upsert conflicts
-    * cleanly, exactly like compact; `columnsReset` marks the restored
-    * column set as a complete baseline — a restore across an additive
-    * schema evolution correctly NARROWS the table's column record.
+    * cleanly, exactly like compact. The commit records the target
+    * version's schema, so a restore across an additive schema evolution
+    * correctly NARROWS the table's schema.
     * Returns the committed version (or the read version when already
     * at the target state).
     */
@@ -1273,9 +1164,8 @@ object TxParquetTable {
     // and possibly the current snapshot)
     publish(path, adds, removes, (0 until n), readVersion,
       bucketCount = cur.bucketCount.orElse(target.bucketCount),
-      columns = target.columns,
-      columnsReset = target.columnsComplete, op = Some("restore"),
-      ownsAddedFiles = false)
+      columnsReset = true, op = Some("restore"),
+      ownsAddedFiles = false, schema = target.schema.map(schemaOf))
   }
 
   /** Transactional keyed upsert: replaces whole hash-buckets of rows.
@@ -1334,7 +1224,6 @@ object TxParquetTable {
     // with a different count would otherwise plan a rewrite that misses
     // files (duplicate ids) while its domain fails to conflict
     val n = snap.bucketCount.getOrElse(buckets)
-    def bucketOf(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(n)).cast("int")
     newerWins.foreach(vc => require(df.columns.contains(vc),
       s"upsert(newerWins=$vc): batch has no such column"))
     val reduced = newerWins match {
@@ -1349,22 +1238,20 @@ object TxParquetTable {
     }
     val incoming = reduced
       .localCheckpoint(true) // pin the batch; its plan must not re-read the table
-    val affected = incoming.select(bucketOf(col(idCol)).as("__b"))
+    val affected = incoming.select(bucketOf(col(idCol), n).as("__b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     if (affected.isEmpty) return readVersion
     val affectedFiles = snap.live.filter(f =>
       f.buckets.isEmpty || f.buckets.intersect(affected).nonEmpty)
     // ADDITIVE-ONLY evolution on upsert, checked against the table's
-    // column set from the LOG (recorded per commit; footer fallback only
-    // for legacy logs — r6 advice: the footer form cost O(#live files)
-    // planning per upsert) BEFORE branching on affectedFiles: a batch
+    // schema from the LOG BEFORE branching on affectedFiles: a batch
     // missing an existing column whose ids land only in untouched
-    // buckets would otherwise be staged unchecked and silently write
+    // buckets would otherwise be written unchecked and silently write
     // null-filled rows — the exact typo'd-column hazard this guard
     // exists for. New columns may still be added.
-    val tableCols = tableColumns(spark, path, snap)
-    if (snap.live.nonEmpty) {
-      val missing = tableCols.toSet -- incoming.columns.toSet
+    val schema = tableSchema(spark, path, snap)
+    schema.filter(_ => snap.live.nonEmpty).foreach { s =>
+      val missing = s.fieldNames.toSet -- incoming.columns.toSet
       require(missing.isEmpty,
         s"upsert batch is missing table columns ${missing.mkString(", ")}; " +
           "upserts replace whole rows — supply every existing column " +
@@ -1382,31 +1269,23 @@ object TxParquetTable {
     // any live file tracked (log-inferred, as in compact)
     val inheritedStats = snap.live.flatMap(_.stats.keys).distinct
       .filter(incoming.columns.contains)
-    val (adds, removes) =
-      if (affectedFiles.isEmpty)
-        (stage(incoming, path, Some(bucketOf(col(idCol))), inheritedStats),
-          Seq.empty[String])
+    val rewrite =
+      if (affectedFiles.isEmpty) incoming
       else {
-        // mergeSchema + allowMissingColumns: survivors and the incoming
-        // batch may sit on either side of a schema evolution (narrow old
-        // files / widened batch, or vice versa); the merged read plus the
-        // null-filling union keeps every column of both sides — a plain
-        // read or strict unionByName would crash or silently drop the
-        // evolved column from the rewritten files
-        val old = spark.read.option("mergeSchema", "true").parquet(
-          affectedFiles.map(f => new File(dataDir(path), f.name).getAbsolutePath): _*)
-        // additive-only evolution already enforced above against the full
-        // snapshot schema (old.columns is a subset of it);
-        // allowMissingColumns below only fills the SURVIVOR side of
-        // genuinely new columns.
-        val rewrite = newerWins match {
+        // the old files read under the table's schema, and the
+        // null-filling union: survivors and the incoming batch may sit on
+        // either side of a schema evolution (narrow old files / widened
+        // batch), and the rewrite keeps every column of both sides —
+        // allowMissingColumns only fills the SURVIVOR side of genuinely
+        // new columns (additive-only evolution is enforced above)
+        val old = readFiles(spark, path, schema.get, affectedFiles)
+        newerWins match {
           case None =>
             val survivors = old
               .join(incoming.select(col(idCol).as("__new_id")),
                 col(idCol) === col("__new_id"), "left_anti")
               .drop("__new_id")
             survivors.unionByName(incoming, allowMissingColumns = true)
-              .localCheckpoint(true)
           case Some(vc) =>
             // last-writer-wins: per id keep the max ordering value; on a
             // TIE (or null vs null) the STORED row wins — __src 0 sorts
@@ -1420,13 +1299,14 @@ object TxParquetTable {
                 allowMissingColumns = true)
               .withColumn("__rn", row_number().over(w))
               .filter(col("__rn") === 1).drop("__rn", "__src")
-              .localCheckpoint(true)
         }
-        (stage(rewrite, path, Some(bucketOf(col(idCol))), inheritedStats),
-          affectedFiles.map(_.name))
       }
-    publish(path, adds, removes, domain, readVersion, Some(n),
-      columns = (tableCols ++ incoming.columns).distinct, txn = txn)
+    val written = bridge.asNullable(rewrite.schema)
+    val newSchema = schema.fold(written)(bridge.mergeSchemas(_, written))
+    writeTable(rewrite, path, Some(bucketOf(col(idCol), n)), inheritedStats) { adds =>
+      publish(path, adds, affectedFiles.map(_.name), domain, readVersion, Some(n),
+        txn = txn, schema = Some(newSchema))
+    }
   }
 
   /** Keyed DELETE — the right-to-be-forgotten op (X105): remove every
@@ -1473,23 +1353,17 @@ object TxParquetTable {
       if (recorded.exists(_ >= ver)) return snap.version
     }
     if (snap.live.isEmpty) return readVersion
-    val (incoming, affected) = idTargets(spark, path, snap, idCol, ids, "delete")
-    if (incoming.isEmpty) return readVersion
-    val nOpt = snap.bucketCount
-    def bucketOf(c: org.apache.spark.sql.Column, n: Int) =
-      pmod(xxhash64(c), lit(n)).cast("int")
+    val schema = tableSchema(spark, path, snap).get
+    val (incoming, affected) = idTargets(snap, schema, idCol, ids, "delete")
     if (affected.isEmpty) return readVersion
-    val old = spark.read.option("mergeSchema", "true").parquet(
-      affected.map(f => new File(dataDir(path), f.name).getAbsolutePath): _*)
+    val nOpt = snap.bucketCount
+    val old = readFiles(spark, path, schema, affected)
     val survivors = old
       .join(incoming.select(col(idCol).as("__del_id")),
         col(idCol) === col("__del_id"), "left_anti")
       .drop("__del_id")
-      .localCheckpoint(true)
     val inheritedStats = snap.live.flatMap(_.stats.keys).distinct
       .filter(old.columns.contains)
-    val adds = stage(survivors, path,
-      nOpt.map(n => bucketOf(col(idCol), n)), inheritedStats)
     val domain = nOpt match {
       case Some(n) =>
         if (affected.exists(_.buckets.isEmpty)) (0 until n).toSeq
@@ -1499,10 +1373,13 @@ object TxParquetTable {
     // bucketCount: keep the keyed scheme; an unkeyed table stays
     // unkeyed (recording a scheme here would poison a later upsert's
     // modulus) — its Seq(0) domain token still serializes deletes
-    publish(path, adds, affected.map(_.name), domain, readVersion, nOpt,
-      columns = tableColumns(spark, path, snap), txn = txn,
-      op = Some("delete"))
+    writeTable(survivors, path, nOpt.map(bucketOf(col(idCol), _)), inheritedStats) { adds =>
+      publish(path, adds, affected.map(_.name), domain, readVersion, nOpt,
+        txn = txn, op = Some("delete"), schema = Some(schema))
+    }
   }
+
+  private def bucketOf(c: Column, n: Int): Column = pmod(xxhash64(c), lit(n)).cast("int")
 
   /** Shared prune kernel behind keyed DELETE and [[snapshotForIds]]:
     * cast the target ids to the TABLE's stored id type (r17 advice —
@@ -1512,33 +1389,29 @@ object TxParquetTable {
     * return it together with the live files that CAN hold any target:
     * keyed tables prune to the targets' bucket files, files carrying an
     * `idCol` zone map are skipped when [min, max] cannot intersect the
-    * targets' bounds (one 2-value agg — never a per-id driver set),
-    * files with neither are conservatively included.
+    * targets' bounds, files with neither are conservatively included.
+    * ONE aggregate over the pinned ids gives the id count, the bounds
+    * and the bucket set; no target id means no affected file.
     */
-  private def idTargets(spark: SparkSession, path: String, snap: Snapshot,
-      idCol: String, ids: DataFrame, opName: String): (DataFrame, Seq[AddFile]) = {
-    val storedType = snapshot(spark, path, Some(snap.version))
-      .schema(idCol).dataType
-    val rawIds = ids.select(col(idCol)).dropDuplicates(idCol)
-    val incoming = rawIds
-      .select(when(col(idCol).isNotNull && col(idCol).cast(storedType).isNull,
+  private def idTargets(snap: Snapshot, schema: StructType, idCol: String,
+      ids: DataFrame, opName: String): (DataFrame, Seq[AddFile]) = {
+    val dt = schema(idCol).dataType
+    val incoming = ids.select(col(idCol)).dropDuplicates(idCol)
+      .select(when(col(idCol).isNotNull && col(idCol).cast(dt).isNull,
           raise_error(concat(lit(s"$opName: id value "),
             col(idCol).cast("string"),
-            lit(s" does not represent in the table's $storedType id domain"))))
-        .otherwise(col(idCol).cast(storedType)).as(idCol))
-      .localCheckpoint(true) // pin: consumed by prune stats AND the join
-    if (incoming.isEmpty) return (incoming, Seq.empty)
+            lit(s" does not represent in the table's $dt id domain"))))
+        .otherwise(col(idCol).cast(dt)).as(idCol))
+      .localCheckpoint(true) // pin: consumed by the probe AND the join
     val nOpt = snap.bucketCount
-    def bucketOf(c: org.apache.spark.sql.Column, n: Int) =
-      pmod(xxhash64(c), lit(n)).cast("int")
-    // target-id bounds in the zone-map stats domain (one 2-value agg)
-    val dt = incoming.schema(idCol).dataType
-    val boundsRow = incoming
-      .agg(min(statsExpr(dt, col(idCol))), max(statsExpr(dt, col(idCol)))).head()
+    val e = statsExpr(dt, col(idCol))
+    val probe = incoming.agg(count(lit(1)), (Seq(min(e), max(e)) ++
+      nOpt.map(n => collect_set(bucketOf(col(idCol), n)))): _*).head()
+    if (probe.getLong(0) == 0L) return (incoming, Seq.empty)
     val tag = statsTag(dt)
     def zoneCanHold(f: AddFile): Boolean = f.stats.get(idCol) match {
-      case Some(s) if tag.contains(s.t) && !boundsRow.isNullAt(0) =>
-        val (lo, hi) = (boundsRow.get(0).toString, boundsRow.get(1).toString)
+      case Some(s) if tag.contains(s.t) && !probe.isNullAt(1) =>
+        val (lo, hi) = (probe.get(1).toString, probe.get(2).toString)
         def cmp(a: String, b: String): Int = s.t match {
           case "long" => java.lang.Long.compare(a.toLong, b.toLong)
           case "double" => java.lang.Double.compare(a.toDouble, b.toDouble)
@@ -1548,10 +1421,8 @@ object TxParquetTable {
       case _ => true // no usable zone map -> cannot prune
     }
     val affected = nOpt match {
-      case Some(n) =>
-        val targetBuckets = incoming
-          .select(bucketOf(col(idCol), n).as("__b")).distinct()
-          .collect().map(_.getInt(0)).toSet
+      case Some(_) =>
+        val targetBuckets = probe.getSeq[Int](3).toSet
         snap.live.filter(f =>
           (f.buckets.isEmpty || f.buckets.exists(targetBuckets.contains)) &&
             zoneCanHold(f))
@@ -1575,12 +1446,11 @@ object TxParquetTable {
     val readVersion = version.getOrElse(latestVersion(path))
     require(readVersion >= 0, s"snapshotForIds: no Tx table at $path")
     val snap = state(path, Some(readVersion))
-    val full = snapshot(spark, path, Some(readVersion))
-    if (snap.live.isEmpty) return full.limit(0)
-    val (incoming, affected) = idTargets(spark, path, snap, idCol, ids, "snapshotForIds")
-    if (affected.isEmpty || incoming.isEmpty) return full.limit(0)
-    spark.read.option("mergeSchema", "true").parquet(
-        affected.map(f => new File(dataDir(path), f.name).getAbsolutePath): _*)
+    if (snap.live.isEmpty) return snapshot(spark, path, Some(readVersion)).limit(0)
+    val schema = tableSchema(spark, path, snap).get
+    val (incoming, affected) = idTargets(snap, schema, idCol, ids, "snapshotForIds")
+    if (affected.isEmpty) return snapshot(spark, path, Some(readVersion)).limit(0)
+    readFiles(spark, path, schema, affected)
       .join(incoming.select(col(idCol).as("__lookup_id")),
         col(idCol) === col("__lookup_id"), "left_semi")
   }

@@ -13,21 +13,36 @@ import org.apache.spark.sql.SparkSession
   */
 object Pins {
 
-  /** Snapshot the ids of currently-registered persistent RDDs — take
-    * BEFORE running a query so [[releaseNewerThan]] can free exactly
-    * the blocks that query pinned (never the harness's own cached base
-    * tables, which predate the snapshot).
+  /** The persistent RDDs and the number of `Dataset.cache()` entries
+    * registered at one moment. */
+  final case class Mark(rdds: Set[Int], cached: Int)
+
+  /** Mark what is registered now — take BEFORE running a query so
+    * [[releaseNewerThan]] can free exactly the blocks that query pinned
+    * (never the harness's own cached base tables, which predate the
+    * mark).
     */
-  def snapshot(spark: SparkSession): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
+  def snapshot(spark: SparkSession): Mark =
+    Mark(spark.sparkContext.getPersistentRDDs.keySet.toSet, org.apache.spark.sql.graft.bridge.cachedEntries(spark))
 
   /** Unpersist (non-blocking) every persistent RDD registered since
     * `before`. Call strictly AFTER the query's terminal action: a
     * localCheckpoint pin whose blocks are dropped mid-evaluation fails
     * the query (truncated lineage is non-recomputable by design).
+    *
+    * A query must not leave a `Dataset.cache()` registered: its
+    * CacheManager entry would outlive the blocks unpersisted here, so a
+    * later plan matching it would recompute the dropped cache on every
+    * use, and the entry would never go. Fails, naming the count, when
+    * the query left one.
     */
-  def releaseNewerThan(spark: SparkSession, before: Set[Int]): Unit =
+  def releaseNewerThan(spark: SparkSession, before: Mark): Unit = {
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id)) rdd.unpersist(blocking = false)
+      if (!before.rdds.contains(id)) rdd.unpersist(blocking = false)
     }
+    val left = org.apache.spark.sql.graft.bridge.cachedEntries(spark) - before.cached
+    if (left > 0) throw new IllegalStateException(
+      s"the query left $left Dataset.cache() entr${if (left == 1) "y" else "ies"} " +
+        "registered; unpersist what a query caches before it returns")
+  }
 }

@@ -397,4 +397,20 @@ class BulkAnnSpec extends SparkSpec {
       .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
     assert(chain.contains("queryIvfIndexBulk query frame"), chain)
   }
+
+  test("bulk-serve accounting: a duplicated corpus id in the exact twin fails loudly instead of inflating n_served") {
+    import spark.implicits._
+    val served = Seq((0L, 0L, 1L), (1L, 0L, 2L), (32L, 1L, 1L)).toDF("qid", "base", "id")
+    val exact = Seq((0L, 1L), (0L, 2L), (1L, 1L)).toDF("base", "id")
+    // (n_served, n_queries, n_hit, n_base_pairs)
+    assert(SparkEntry.bulkServeAccounting(served, exact) === ((3L, 3L, 3L, 3L)))
+    // a corpus id listed twice for base 0 would join served row (0, 2)
+    // twice: n_served 4 and n_hit 4 without the guard
+    val e = intercept[Exception] {
+      SparkEntry.bulkServeAccounting(served, exact.union(Seq((0L, 2L)).toDF("base", "id")))
+    }
+    val chain = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
+    assert(chain.contains("bulk-serve exact twin") && chain.contains("must be unique"), chain)
+  }
 }

@@ -109,4 +109,19 @@ class CacheLifecycleSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(got === expected)
   }
+
+  test("Pins.releaseNewerThan frees a query's pins and fails on a Dataset.cache() it left registered") {
+    val mark = graft.util.Pins.snapshot(spark)
+    val pinned = docs.localCheckpoint(true)
+    assert(pinned.count() === 4L)
+    graft.util.Pins.releaseNewerThan(spark, mark) // a pin alone is released quietly
+    val cached = docs.filter(col("doc_id") > 1L).cache()
+    assert(cached.count() === 3L)
+    try {
+      val e = intercept[IllegalStateException](graft.util.Pins.releaseNewerThan(spark, mark))
+      assert(e.getMessage.contains("left 1 Dataset.cache() entry"), e.getMessage)
+    } finally cached.unpersist(blocking = true)
+    // once the query unpersists what it cached, the release is clean
+    graft.util.Pins.releaseNewerThan(spark, mark)
+  }
 }

@@ -77,18 +77,20 @@ object PlanLints {
     *
     * Budgets are measured values (`graft.audit.QueryAudit` prints the
     * per-query counts; r16 top-12 + the r17 extension to EVERY query
-    * ≥ 1 s committed bench cost — r16 judge item 6, two confirming runs
-    * each) — exact pins, not headroom: every one of these queries is
-    * deterministic at fixed input, so a count increase IS a plan change
-    * that needs re-auditing (lower is fine — AQE folding stages is a
-    * win). One exception: q244 pins the max of its two observed counts
-    * (32 vs 30 — its lazy localCheckpoint materializes under whichever
+    * ≥ 1 s committed bench cost — r16 judge item 6). Every one of these
+    * queries is deterministic at fixed input, so a count increase IS a
+    * plan change that needs re-auditing (lower is fine — AQE folding
+    * stages is a win). Re-measured when Tx writes became one job (the
+    * per-write stats pass and its shuffle went): each budget is the
+    * measured count plus ONE exchange, never above its previous pin, so
+    * a lost broadcast or a returning per-write pass still fails. q244
+    * keeps TWO: its lazy localCheckpoint materializes under whichever
     * consumer acts first, shifting a recomputed subplan's exchanges
-    * between executions; the plan itself is unchanged).
+    * between executions (32 vs 30 observed; the plan is unchanged).
     */
   val shuffleBudgets: Map[String, (Int, String)] = Map(
     // ---- r17 extension: every query >= 1 s committed bench cost ----
-    "q241_index_maintenance" -> (48,
+    "q241_index_maintenance" -> (23,
       "index lifecycle: fit aggregates, five extends, two staleness reads, recluster sort, blue/green refit"),
     "q239_recon_stream" -> (11,
       "MemoryStream reconciler: per-batch stateful exchanges + the verdict aggregate"),
@@ -96,10 +98,10 @@ object PlanLints {
       "shape-gated stream: stateless lanes, one aggregate per lane read"),
     "q135_leakage_safe_split" -> (14,
       "near-dup pair CC fixpoint + split aggregates; corpus join-back broadcasts"),
-    "q237_ann_staleness" -> (19,
+    "q237_ann_staleness" -> (11,
       "fit + extend + two snapshot cellStats aggregates + the PSI fold"),
-    "q174_cluster_compact" -> (24, "cluster-by OPTIMIZE lifecycle jobs"),
-    "q121_curation_v2" -> (11,
+    "q174_cluster_compact" -> (6, "cluster-by OPTIMIZE lifecycle jobs"),
+    "q121_curation_v2" -> (10,
       "curation chain v2: dedup group-bys, quality + mixture aggregates"),
     "q72_dedup_groups" -> (14, "MinHash banding group-bys + CC fixpoint rounds"),
     "q192_dedup_yield" -> (17, "per-stage dedup yield aggregates over the chain"),
@@ -108,18 +110,18 @@ object PlanLints {
     "q208_blocked_pairs" -> (14, "blocked pair-universe group-bys + recall accounting"),
     "q213_blocked_recall" -> (8, "OR-amplified blocking + recall gate joins"),
     "q229_late_lanes" -> (6, "late-lane stream: per-batch max-ts aggregate + lane reads"),
-    "q183_tx_range_sql" -> (20, "tx_range SQL surface: per-travel-point reads/aggregates"),
+    "q183_tx_range_sql" -> (4, "tx_range SQL surface: per-travel-point reads/aggregates"),
     "q221_dlq_replay" -> (9, "route + repair + re-ingest + multiset parity checks"),
     "q212_pairs_backtest" -> (8, "pair screen + spread-z backtest aggregates"),
     "q209_blocked_leadlag" -> (12, "blocked pairs + per-lag correlation aggregates"),
     "q153_budget_select" -> (5, "level aggregate + boundary take + budget filter"),
-    "q159_tx_changes" -> (8, "CDC changes-between-versions reads + aggregates"),
+    "q159_tx_changes" -> (7, "CDC changes-between-versions reads + aggregates"),
     "q220_cut_curation" -> (9, "span cut + curation chain aggregates"),
-    "q163_incremental_curation" -> (8, "bloom-gated increment + incremental maintenance"),
+    "q163_incremental_curation" -> (7, "bloom-gated increment + incremental maintenance"),
     "q37_jaccard_near_dups" -> (2, "shingle group-by + banded candidate join"),
     "q234_diversity_sample" -> (2, "bounded-heap quota winners + corpus join-back"),
     "q112_pq_knn" -> (5, "PQ subspace fit aggregates + ADC rerank"),
-    "q211_tx_restore" -> (11, "RESTORE lifecycle: pre/post snapshots + verification reads"),
+    "q211_tx_restore" -> (10, "RESTORE lifecycle: pre/post snapshots + verification reads"),
     "q123_containment_pairs" -> (2, "gram group-by + containment join"),
     "q175_research_capstone" -> (4, "indicator windows share sorts; capstone aggregates"),
     "q62_tx_roundtrip" -> (5, "tx upsert round-trip + year aggregate"),
@@ -127,7 +129,7 @@ object PlanLints {
     "q146_bigram_surprisal" -> (4, "bigram count tables + per-doc surprisal aggregate"),
     "q69_corpus_curation" -> (6, "dedup + quality + sample chain"),
     "q162_pca_whitening" -> (1, "one Gram-matrix aggregate; projection is map-only"),
-    "q164_zone_map_read" -> (5, "zone-map-pruned reads + the pruned_ok accounting"),
+    "q164_zone_map_read" -> (3, "zone-map-pruned reads + the pruned_ok accounting"),
     "q51_ingest_trades" -> (1, "parse is map-only; one output aggregate"),
     "q156_bigram_oov" -> (4, "persisted bigram table reuse + OOV aggregate"),
     "q219_span_cut" -> (6, "one gram-keyed aggregate + keeper window + cut join"),
@@ -136,56 +138,56 @@ object PlanLints {
     "q03_join_revenue" -> (2, "fact-fact shuffle join + final aggregate"),
     "q205_net_backtest" -> (8, "backtest period windows + cost-adjusted aggregates"),
     "q110_session_paths" -> (2, "sessionize + path aggregate"),
-    "q243_pq_bulk_serve" -> (37,
+    "q243_pq_bulk_serve" -> (16,
       "PQ index lifecycle (fit + codebook + encode + extend) + ADC shortlist heap + rerank join + exact-twin accounting"),
-    "q244_ranker_eval" -> (32,
-      "exact/quantized top-50 legs + RRF fusion + three rankingMetrics passes + the ANN fit/serve/gate (max of two observed counts — see header note)"),
-    "q245_index_pointer" -> (32,
+    "q244_ranker_eval" -> (24,
+      "exact/quantized top-50 legs + RRF fusion + three rankingMetrics passes + the ANN fit/serve/gate (two exchanges of headroom — see header note)"),
+    "q245_index_pointer" -> (18,
       "pointer lifecycle: fit, promote upserts, drift extend, refit, rollback, per-phase pointer reads"),
-    "q246_e2e_ingest" -> (29,
+    "q246_e2e_ingest" -> (18,
       "composed ingest: per-epoch lane appends (5 Tx tables x 3 epochs) + registry bloom + lane accounting"),
-    "q247_keyed_delete" -> (17,
+    "q247_keyed_delete" -> (13,
       "keyed load + two bucket-pruned delete rewrites + CDC/travel/aggregate verification reads"),
-    "q248_ann_serve_stream" -> (43,
+    "q248_ann_serve_stream" -> (22,
       "two index fits + two per-epoch bulk serves (probe distinct, cell join, heap) + the per-epoch direct-serve twins"),
     // ---- the r18 extension: every new query >= 1 s committed cost ----
     "q249_tx_stream_replay" -> (1,
       "log-planned source batches land as appends (no shuffle); the single shuffle is the final full-row hash compare"),
-    "q250_erasure_policy" -> (11,
+    "q250_erasure_policy" -> (9,
       "keyed load + delete rewrite + per-pass policy verification reads (travel aggregate, survivor aggregate)"),
     "q251_schema_catchup" -> (7,
       "quarantine/ingest appends + the replay's first-match gate + per-lane accounting aggregates"),
-    "q252_incremental_mv" -> (17,
+    "q252_incremental_mv" -> (13,
       "per-drain delta aggregate + point-lookup semi-join + bucket-rewrite upsert, x3 drains + the replay probe + final GROUP BY"),
-    "q253_replication" -> (22,
+    "q253_replication" -> (14,
       "source train (appends/compact/delete) + per-version replica appends and the CDC delete + two exceptAll content compares"),
     "q254_manifest_cut" -> (6,
       "lane appends are shuffle-free; per-cut counts + the final per-year aggregate over the resolved union"),
-    "q255_lww_upsert" -> (13,
+    "q255_lww_upsert" -> (11,
       "three newerWins rewrites (per-batch max rank + merge rank window each) + the final aggregate"),
     // ---- the r16 top-12 (original pins) ----
-    "q227_persisted_ann_index" -> (56,
+    "q227_persisted_ann_index" -> (8,
       "Tx index lifecycle: Lloyd fit aggregates, cell-clustered compaction sort, " +
-        "per-run pruned serves, exact-twin topK — ~1 shuffle per lifecycle job (61 executions)"),
+        "per-run pruned serves, exact-twin topK"),
     "q129_semantic_dedup" -> (17,
       "LSH banding group-bys + connected-components fixpoint iterations (bounded by the CC depth)"),
-    "q223_zorder3_compact" -> (62,
-      "3-D Z-order OPTIMIZE: interleave sort + per-range verification reads, ~1 per job"),
+    "q223_zorder3_compact" -> (7,
+      "3-D Z-order OPTIMIZE: interleave range partitioning + verification aggregates"),
     "q128_doc_chunks" -> (1,
       "map-only chunk explosion; the single shuffle is the output-side aggregate"),
     "q100_curation_extended" -> (14,
       "curation chain: dedup group-bys, quality aggregate, mixture-rate aggregate + broadcast-back"),
     "q155_curation_capstone" -> (21,
       "q100's chain plus the split-branch reuse (pinned exchange REUSE in PlanShapeSpec q155)"),
-    "q216_zorder_compact" -> (40,
-      "1-D Z-order OPTIMIZE lifecycle, ~1 shuffle per verification job"),
+    "q216_zorder_compact" -> (6,
+      "1-D Z-order OPTIMIZE lifecycle: range partitioning + verification aggregates"),
     "q126_tx_sql_travel" -> (6,
       "time-travel reads + version deltas: one aggregate per travel point"),
     "q166_whitened_pq" -> (5,
       "whitening Gram aggregate, PQ subspace fits, recall-gate join"),
     "q136_canonical_quality_dedup" -> (14,
       "candidate banding group-bys + component join-back + keep-best rank"),
-    "q236_bulk_ann_serve" -> (63,
+    "q236_bulk_ann_serve" -> (12,
       "index fit/compact lifecycle + the bulk serve's probe-distinct, cell join and " +
         "heap aggregate + the exact-twin accounting joins"),
     "q240_curation_chain" -> (5,

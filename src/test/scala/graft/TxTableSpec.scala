@@ -12,6 +12,39 @@ class TxTableSpec extends SparkSpec {
   private def freshPath(): String =
     Files.createTempDirectory("tx_table_").toFile.getAbsolutePath
 
+  /** `body`'s result and the call site of every job it ran, in start
+    * order: "writeParquet at ..." is a Tx write job, "parquet at ..." a
+    * schema inference over parquet footers. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        // the result stage's name: earlier stages may be reused shuffles
+        sites.add(if (js.stageInfos.isEmpty) "" else js.stageInfos.maxBy(_.stageId).name)
+    }
+    org.apache.spark.sql.graft.BusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.graft.BusDrain.drain(sc)
+      (r, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def inferences(jobs: Seq[String]): Seq[String] = jobs.filter(_.startsWith("parquet at"))
+
+  /** The `add` entries of every commit in `path`'s log, by file name. */
+  private def loggedAdds(path: String): Map[String, com.fasterxml.jackson.databind.JsonNode] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    new java.io.File(path, "_graft_log").listFiles()
+      .filter(f => f.getName.endsWith(".json") && !f.getName.endsWith(".ckpt.json"))
+      .flatMap { f =>
+        val adds = mapper.readTree(f).get("add")
+        (0 until adds.size()).map(i => adds.get(i).get("name").asText() -> adds.get(i))
+      }.toMap
+  }
+
   test("append commits atomically and versions advance") {
     val path = freshPath()
     val v0 = TxParquetTable.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path)
@@ -1056,39 +1089,21 @@ class TxTableSpec extends SparkSpec {
     assert(v0.columns.toSet === Set("id", "v"))
   }
 
-  test("snapshot: a repeat read of an unchanged file set infers no schema; a new set re-infers") {
+  test("snapshot: the log carries the schema, so no read infers it, widened and time-travelled too") {
     val path = freshPath()
     TxParquetTable.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // jobs started while building the frame (no action runs); the async
-    // listener bus gets a beat to deliver them
-    def jobsToRead(version: Option[Long] = None): (org.apache.spark.sql.DataFrame, Int) = {
-      jobs.set(0)
-      val df = TxParquetTable.snapshot(spark, path, version)
-      Thread.sleep(300)
-      (df, jobs.get)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (first, inferred) = jobsToRead()
-      assert(inferred >= 1, "the first read of a file set infers its merged schema")
-      val (again, repeat) = jobsToRead()
-      assert(repeat === 0, s"a repeat read of the same files ran $repeat inference jobs")
-      assert(again.schema === first.schema)
-      assert(again.as[(Long, String)].collect().sorted === Array((1L, "a"), (2L, "b")))
-      // a widened append is a new file set: its schema is inferred afresh
-      TxParquetTable.append(Seq((3L, "c", 9.5)).toDF("id", "v", "score"), path)
-      val (wide, _) = jobsToRead()
-      assert(wide.columns.toSeq === Seq("id", "v", "score"))
-      assert(wide.filter(col("score").isNull).count() === 2L)
-      // time travel to the narrow version reuses the narrow set's schema
-      val (narrow, pinned) = jobsToRead(Some(0L))
-      assert(pinned === 0 && narrow.schema === first.schema)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (first, jobs) = jobsOf(TxParquetTable.snapshot(spark, path))
+    assert(jobs.isEmpty, s"a snapshot read ran jobs: $jobs")
+    assert(first.as[(Long, String)].collect().sorted === Array((1L, "a"), (2L, "b")))
+    // a widened append: the log's schema gains the column
+    TxParquetTable.append(Seq((3L, "c", 9.5)).toDF("id", "v", "score"), path)
+    val (wide, wideJobs) = jobsOf(TxParquetTable.snapshot(spark, path))
+    assert(wideJobs.isEmpty, s"a widened read ran jobs: $wideJobs")
+    assert(wide.columns.toSeq === Seq("id", "v", "score"))
+    assert(wide.filter(col("score").isNull).count() === 2L)
+    // time travel reads the narrow version's schema from its commit
+    val (narrow, pinned) = jobsOf(TxParquetTable.snapshot(spark, path, Some(0L)))
+    assert(pinned.isEmpty && narrow.schema === first.schema)
   }
 
   test("schema evolution survives upsert and compact (no silent column loss)") {
@@ -1361,24 +1376,6 @@ class TxTableSpec extends SparkSpec {
   private def dataFiles(path: String): Set[String] =
     Option(new java.io.File(path, "data").listFiles()).toSeq.flatten.map(_.getName).toSet
 
-  test("localFileRowCount reads the parquet reader's count straight from the footer, empty files too") {
-    val dir = freshPath()
-    spark.range(0, 1000, 1, 3).write.parquet(s"$dir/a")
-    spark.range(0).write.parquet(s"$dir/b")
-    val files = Seq("a", "b").flatMap(d => new java.io.File(dir, d).listFiles()
-      .filter(_.getName.endsWith(".parquet")))
-    val conf = spark.sessionState.newHadoopConf()
-    assert(files.exists(f => graft.sources.ParquetFooters.fileRowCount(conf, f.getPath) == 0L))
-    files.foreach { f =>
-      assert(graft.sources.ParquetFooters.localFileRowCount(f) ===
-        graft.sources.ParquetFooters.fileRowCount(conf, f.getPath), f.getName)
-    }
-    assert(files.map(graft.sources.ParquetFooters.localFileRowCount).sum === 1000L)
-    val notParquet = new java.io.File(dir, "x.parquet")
-    Files.write(notParquet.toPath, "not a parquet file".getBytes("UTF-8"))
-    intercept[IllegalArgumentException](graft.sources.ParquetFooters.localFileRowCount(notParquet))
-  }
-
   test("appendLanes: one write, one commit per lane; log numRecords equal each lane's rows") {
     val root = freshPath()
     val lanes = Seq("a", "b", "c").map(l => l -> s"$root/$l")
@@ -1471,5 +1468,173 @@ class TxTableSpec extends SparkSpec {
       assert(TxParquetTable.latestVersion(p) === -1L)
     }
     assert(stageDirs(lanes.map(_._2)).isEmpty)
+  }
+
+  test("one job per write: a shuffle-free append is exactly one job; upsert, delete and compact infer nothing and end with their write") {
+    val path = freshPath()
+    val (_, appendJobs) = jobsOf(TxParquetTable.append(spark.range(0, 200).toDF("id")
+      .withColumn("v", col("id") * 2), path, statsColumns = Seq("v")))
+    assert(appendJobs.size === 1 && appendJobs.head.startsWith("writeParquet at"), appendJobs)
+    val ops = Seq[(String, () => Long)](
+      "upsert" -> (() => TxParquetTable.upsert(
+        Seq((5L, 50L), (500L, 1L)).toDF("id", "v"), path, "id", buckets = 4)),
+      "delete" -> (() => TxParquetTable.delete(Seq(7L, 9L).toDF("id"), path, "id")),
+      "compact" -> (() => TxParquetTable.compact(spark, path, "id", targetFiles = 1,
+        clusterBy = Some("v"))))
+    ops.foreach { case (op, run) =>
+      val (_, jobs) = jobsOf(run())
+      assert(inferences(jobs).isEmpty, s"$op inferred a schema: $jobs")
+      assert(jobs.lastOption.exists(_.startsWith("writeParquet at")),
+        s"$op ran a job after its write (a stats pass): $jobs")
+    }
+    val (snap, readJobs) = jobsOf(TxParquetTable.snapshot(spark, path))
+    assert(readJobs.isEmpty, readJobs)
+    assert(snap.count() === 200L - 2 + 1)
+    assert(TxParquetTable.rowCount(path) === Some(199L))
+  }
+
+  test("write-time stats equal the data files': numRecords, bucket sets and zone maps per file") {
+    val path = freshPath()
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 10:00:00.123456")
+    val rows = (0 until 300).map { i =>
+      (i.toLong, if (i % 7 == 0) None else Some(i % 50), i * 0.25 - 20,
+        if (i % 11 == 0) null else f"s$i%03d", java.sql.Date.valueOf("2024-01-01").toLocalDate
+          .plusDays(i % 90), new java.sql.Timestamp(ts.getTime + i * 1000L), Option.empty[Long])
+    }
+    val df = rows.toDF("id", "n", "x", "s", "d", "t", "allnull").repartition(3)
+    val statsCols = Seq("id", "n", "x", "s", "d", "t", "allnull")
+    TxParquetTable.append(df, path, statsColumns = statsCols)
+    TxParquetTable.upsert(rows.take(40).map(r => r.copy(_3 = -1.5)).toDF(
+      "id", "n", "x", "s", "d", "t", "allnull"), path, "id", buckets = 8)
+    val adds = loggedAdds(path)
+    val dataDir = new java.io.File(path, "data")
+    val live = dataDir.listFiles().filter(f => adds.contains(f.getName))
+    assert(live.length === adds.size)
+    def domain(c: String) = df.schema(c).dataType match {
+      case org.apache.spark.sql.types.TimestampType => unix_micros(col(c))
+      case org.apache.spark.sql.types.DateType => unix_date(col(c))
+      case org.apache.spark.sql.types.IntegerType => col(c).cast("long")
+      case _ => col(c)
+    }
+    live.foreach { f =>
+      val add = adds(f.getName)
+      val fileDf = spark.read.parquet(f.getAbsolutePath)
+      val r = fileDf.agg(count(lit(1)), (collect_set(pmod(xxhash64(col("id")), lit(8)).cast("int")) +:
+        statsCols.flatMap(c => Seq(min(domain(c)), max(domain(c))))): _*).head()
+      assert(add.get("numRecords").asLong() === r.getLong(0), f.getName)
+      val logged = (0 until add.get("buckets").size()).map(add.get("buckets").get(_).asInt())
+      // appended files carry no bucket set; rewritten ones carry theirs
+      if (logged.nonEmpty) assert(logged === r.getSeq[Int](1).sorted, f.getName)
+      statsCols.zipWithIndex.foreach { case (c, i) =>
+        val st = Option(add.get("stats")).flatMap(s => Option(s.get(c)))
+        if (r.isNullAt(2 + 2 * i)) assert(st.isEmpty, s"${f.getName} $c: an all-null column has no zone map")
+        else {
+          assert(st.isDefined, s"${f.getName} $c has no zone map")
+          assert(st.get.get("mn").asText() === r.get(2 + 2 * i).toString, s"${f.getName} $c min")
+          assert(st.get.get("mx").asText() === r.get(3 + 2 * i).toString, s"${f.getName} $c max")
+        }
+      }
+    }
+    assert(live.exists(f => adds(f.getName).get("buckets").size() > 0), "no rewritten file")
+  }
+
+  test("a log written before commits carried the schema reads with one inference, and the next write records it") {
+    val path = freshPath()
+    TxParquetTable.append(Seq((1L, "a")).toDF("id", "v"), path)
+    TxParquetTable.append(Seq((2L, "b", 7.5)).toDF("id", "v", "extra"), path)
+    // a legacy writer recorded no schema (and no column list)
+    new java.io.File(path, "_graft_log").listFiles().filter(_.getName.endsWith(".json")).foreach { f =>
+      val legacy = new String(Files.readAllBytes(f.toPath), "UTF-8")
+        .replaceAll(""","columns":\[[^\]]*\]""", "")
+        .replaceAll(""","schema":"(\\.|[^"\\])*"""", "")
+      assert(!legacy.contains("\"schema\"") && !legacy.contains("\"columns\""), legacy)
+      Files.write(f.toPath, legacy.getBytes("UTF-8"))
+    }
+    val (legacyRead, jobs) = jobsOf(TxParquetTable.snapshot(spark, path))
+    assert(inferences(jobs).size === 1, jobs)
+    assert(legacyRead.columns.toSeq === Seq("id", "v", "extra"))
+    assert(legacyRead.filter(col("extra").isNull).count() === 1L)
+    // the next write records the table's full schema; reads stop inferring
+    TxParquetTable.append(Seq((3L, "c", 1.0)).toDF("id", "v", "extra"), path)
+    val (healed, healedJobs) = jobsOf(TxParquetTable.snapshot(spark, path))
+    assert(healedJobs.isEmpty, healedJobs)
+    assert(healed.as[(Long, String, Option[Double])].collect().sortBy(_._1) ===
+      Array((1L, "a", None), (2L, "b", Some(7.5)), (3L, "c", Some(1.0))))
+  }
+
+  /** `TxParquetTable.append(slow, path)` with `interloper` run after the
+    * append has read the log and before it publishes: `slow`'s rows
+    * pass a gate that holds the write until `interloper` returns. */
+  private def appendRacing(slow: org.apache.spark.sql.DataFrame, path: String)(
+      interloper: => Unit): scala.util.Try[Long] = {
+    TxTableSpec.Gate.arm()
+    val hold = udf { (id: Long) => TxTableSpec.Gate.pass(); id }.asNondeterministic()
+    val held = slow.withColumn("id", hold(col("id")))
+    var result: scala.util.Try[Long] = null
+    val writer = new Thread(() => { result = scala.util.Try(TxParquetTable.append(held, path)) })
+    writer.start()
+    try {
+      assert(TxTableSpec.Gate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the held append never started writing")
+      interloper
+    } finally TxTableSpec.Gate.release.countDown()
+    writer.join()
+    result
+  }
+
+  test("racing appends: a narrow append published after a widening one keeps the new column") {
+    val path = freshPath()
+    TxParquetTable.append(Seq((1L, "a")).toDF("id", "v"), path)
+    // the narrow append reads the log at version 0; the widening one lands first
+    val narrow = appendRacing(Seq((2L, "b")).toDF("id", "v"), path) {
+      TxParquetTable.append(Seq((3L, "c", 9.5)).toDF("id", "v", "x"), path)
+    }
+    assert(narrow.get === 2L)
+    val snap = TxParquetTable.snapshot(spark, path)
+    assert(snap.columns.toSeq === Seq("id", "v", "x"))
+    assert(snap.as[(Long, String, Option[Double])].collect().sortBy(_._1) ===
+      Array((1L, "a", None), (2L, "b", None), (3L, "c", Some(9.5))))
+    // a binary that predates the schema record reads `columns`: the
+    // narrow commit's list carries x too
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val cols = mapper.readTree(new java.io.File(path, f"_graft_log/${2L}%020d.json")).get("columns")
+    assert((0 until cols.size()).map(cols.get(_).asText()) === Seq("id", "v", "x"))
+    // the upsert guard still requires x, and compact keeps it
+    val e = intercept[IllegalArgumentException] {
+      TxParquetTable.upsert(Seq((4L, "d")).toDF("id", "v"), path, "id")
+    }
+    assert(e.getMessage.contains("missing table columns x"))
+    TxParquetTable.compact(spark, path, "id", targetFiles = 1)
+    assert(TxParquetTable.snapshot(spark, path).filter(col("x") === 9.5).count() === 1L)
+    // a concurrent commit that recorded another type for a column fails
+    // the append, which keeps no file
+    val before = dataFiles(path)
+    val clash = appendRacing(Seq((5L, "e", "text")).toDF("id", "v", "y"), path) {
+      TxParquetTable.append(Seq((6L, "f", 1.5)).toDF("id", "v", "y"), path)
+    }
+    assert(clash.failed.get.isInstanceOf[java.util.ConcurrentModificationException], clash)
+    assert((dataFiles(path) -- before).size === 1, "the losing append kept its file")
+    val after = TxParquetTable.snapshot(spark, path)
+    assert(after.schema("y").dataType === org.apache.spark.sql.types.DoubleType)
+    assert(after.as[(Long, String, Option[Double], Option[Double])].collect().map(_._1).sorted ===
+      Array(1L, 2L, 3L, 6L))
+  }
+}
+
+object TxTableSpec {
+  /** Holds the rows of one write until the test lets them go. The write
+    * task reaches it through this object, never through a serialized
+    * copy, so both sides share the latches (local mode). */
+  object Gate {
+    @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+    @volatile var release = new java.util.concurrent.CountDownLatch(1)
+    def arm(): Unit = {
+      entered = new java.util.concurrent.CountDownLatch(1)
+      release = new java.util.concurrent.CountDownLatch(1)
+    }
+    def pass(): Unit = {
+      entered.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
   }
 }
