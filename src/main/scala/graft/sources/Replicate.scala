@@ -65,7 +65,7 @@ object Replicate {
     val last = TxParquetTable.recordedTxn(dstPath, app).getOrElse(-1L)
     val pending = TxParquetTable.commitAdds(srcPath, last, srcLatest)
     var appends = 0L; var deletes = 0L; var layout = 0L; var rows = 0L
-    pending.foreach { case (v, op, hasRemoves, columnsReset, adds) =>
+    pending.foreach { case TxParquetTable.CommitAdds(v, op, hasRemoves, columnsReset, adds, schema) =>
       val isCompact = op.contains("compact") || (op.isEmpty && columnsReset)
       if (isCompact) layout += 1
       else if (op.contains("delete")) {
@@ -77,13 +77,16 @@ object Replicate {
         TxParquetTable.delete(ids, dstPath, key, txn = Some((app, v)))
         deletes += 1
       } else if (!hasRemoves) {
-        // plain append: exactly the added files' rows; when the caller
-        // named an idCol, stamp its zone map on the replica's files so
-        // replicated deletes prune there too (the source's layout
-        // advantages don't ship — rebuild the cheap ones)
+        // plain append: exactly the added files' rows, read under the
+        // schema the source recorded at that commit (a legacy commit
+        // that recorded none infers it); when the caller named an idCol,
+        // stamp its zone map on the replica's files so replicated
+        // deletes prune there too (the source's layout advantages don't
+        // ship — rebuild the cheap ones)
         if (adds.nonEmpty) {
-          val df = spark.read.option("mergeSchema", "true")
-            .parquet(adds.map(_._1): _*)
+          val files = adds.map(_._1)
+          val df = schema.fold(spark.read.option("mergeSchema", "true").parquet(files: _*))(
+            spark.read.schema(_).parquet(files: _*))
           TxParquetTable.append(df, dstPath,
             statsColumns = idCol.filter(df.columns.contains).toSeq,
             txn = Some((app, v)))

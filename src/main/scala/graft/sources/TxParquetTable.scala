@@ -236,22 +236,16 @@ object TxParquetTable {
   private def read(f: File): String =
     new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
 
-  private def commitFiles(path: String): Seq[(Long, File)] = {
-    val d = logDir(path)
-    if (!d.exists()) Seq.empty
-    else d.listFiles()
-      .filter(f => f.getName.endsWith(".json") && !f.getName.endsWith(".ckpt.json"))
-      .map(f => f.getName.stripSuffix(".json").toLong -> f)
-      .sortBy(_._1).toSeq
+  /** The log's commit and checkpoint files, each by version, from ONE
+    * listing of its directory. */
+  private def logFiles(path: String): (Seq[(Long, File)], Seq[(Long, File)]) = {
+    val (ckpts, commits) = Option(logDir(path).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".json")).partition(_.getName.endsWith(".ckpt.json"))
+    (commits.map(f => f.getName.stripSuffix(".json").toLong -> f).sortBy(_._1),
+      ckpts.map(f => f.getName.stripSuffix(".ckpt.json").toLong -> f).sortBy(_._1))
   }
 
-  private def checkpointFiles(path: String): Seq[(Long, File)] = {
-    val d = logDir(path)
-    if (!d.exists()) Seq.empty
-    else d.listFiles().filter(_.getName.endsWith(".ckpt.json"))
-      .map(f => f.getName.stripSuffix(".ckpt.json").toLong -> f)
-      .sortBy(_._1).toSeq
-  }
+  private def commitFiles(path: String): Seq[(Long, File)] = logFiles(path)._1
 
   /** Latest committed version, or -1 for an empty/new table. */
   def latestVersion(path: String): Long =
@@ -263,7 +257,8 @@ object TxParquetTable {
     */
   private def state(path: String, version: Option[Long]): Snapshot = {
     val target = version.getOrElse(Long.MaxValue)
-    val ckpt = checkpointFiles(path).filter(_._1 <= target).lastOption
+    val (commits, ckpts) = logFiles(path)
+    val ckpt = ckpts.filter(_._1 <= target).lastOption
       .map { case (_, f) => parseSnapshot(read(f)) }
       .getOrElse(Snapshot(-1L, Seq.empty, None))
     val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
@@ -273,7 +268,7 @@ object TxParquetTable {
     val txns = scala.collection.mutable.Map.empty[String, Long]
     ckpt.txns.foreach { case (a, tv) => txns += a -> tv }
     var schema = ckpt.schema
-    commitFiles(path).filter { case (cv, _) => cv > ckpt.version && cv <= target }
+    commits.filter { case (cv, _) => cv > ckpt.version && cv <= target }
       .foreach { case (cv, f) =>
         val c = parseCommit(read(f))
         c.remove.foreach(live -= _)
@@ -548,7 +543,8 @@ object TxParquetTable {
     * `laneCol` there is one target. With it, each row goes to the table
     * `targets` maps its lane value to; the column is not persisted, a
     * lane with no rows gets no file, and a row whose lane has no target
-    * fails the write. When the job or a commit fails, the files of every
+    * fails the write. Each target's files carry only its `columns`, in
+    * that order. When the job or a commit fails, the files of every
     * target not yet committed are deleted.
     *
     * The task that writes a file counts its rows and, per row, evaluates
@@ -557,7 +553,7 @@ object TxParquetTable {
     * keeps bookkeeping columns OUT of the persisted schema: appended and
     * rewritten files stay schema-identical.
     */
-  private def write(df: DataFrame, laneCol: Option[String], targets: Seq[(String, String)],
+  private def write(df: DataFrame, laneCol: Option[String], targets: Seq[Lane],
       bucket: Option[Column], statsCols: Seq[String])(
       commit: (Int, Seq[AddFile]) => Unit): Unit = {
     require(laneCol.nonEmpty || targets.size == 1,
@@ -571,13 +567,14 @@ object TxParquetTable {
         "cover (decimal/binary/complex) — record stats only on " +
         "integer/date/timestamp/float/double/string columns")
     val routes = laneCol.fold(Map("" -> 0)) { c =>
-      targets.zipWithIndex.map { case ((lane, _), i) =>
+      targets.zipWithIndex.map { case (lane, i) =>
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(c, lane) -> i
+          .getPartitionPathString(c, lane.value) -> i
       }.toMap
     }
-    val dirs = targets.map { case (_, path) => dataDir(path).getAbsolutePath }
-    bridge.writeParquet(df, laneCol.toSeq, dirs.head, RawLocalFs) { attrs =>
+    val dirs = targets.map(t => dataDir(t.path).getAbsolutePath)
+    bridge.writeParquet(df, laneCol.toSeq, dirs.head, RawLocalFs,
+        dirs.zip(targets.map(_.columns)).toMap) { attrs =>
       val exprs = bridge.boundExpressions(df.sparkSession, attrs,
         bucket.toSeq ++ statted.map { case (c, dt, _) => statsExpr(dt, col(c)) })
       val (bucketExpr, bounds) = exprs.splitAt(bucket.size)
@@ -587,11 +584,14 @@ object TxParquetTable {
     }
   }
 
-  /** [[write]] to one table; returns the version `commit` published. */
+  /** [[write]] of every column of `df` to one table; returns the version
+    * `commit` published. */
   private def writeTable(df: DataFrame, path: String, bucket: Option[Column],
       statsCols: Seq[String])(commit: Seq[AddFile] => Long): Long = {
     var version = -1L
-    write(df, None, Seq("" -> path), bucket, statsCols) { (_, adds) => version = commit(adds) }
+    write(df, None, Seq(Lane("", path, df.columns.toSeq)), bucket, statsCols) { (_, adds) =>
+      version = commit(adds)
+    }
     version
   }
 
@@ -752,21 +752,27 @@ object TxParquetTable {
     * for each version in (fromVersion, toVersion], the op marker,
     * whether the commit REMOVED files (a data-changing rewrite unless
     * the op says otherwise), whether it reset the column baseline (the
-    * legacy-compact tell), and the added files as (absolute path,
-    * numRecords). Log-only — O(#commits in range) small-JSON parses,
-    * zero data I/O.
+    * legacy-compact tell), the added files as (absolute path,
+    * numRecords) and the schema the commit recorded. Log-only —
+    * O(#commits in range) small-JSON parses, zero data I/O.
     */
   private[sources] def commitAdds(path: String, fromVersion: Long,
-      toVersion: Long): Seq[(Long, Option[String], Boolean, Boolean, Seq[(String, Long)])] =
+      toVersion: Long): Seq[CommitAdds] =
     commitFiles(path)
       .filter { case (v, _) => v > fromVersion && v <= toVersion }
-      .sortBy(_._1)
       .map { case (v, f) =>
         val c = parseCommit(read(f))
-        (v, c.op, c.remove.nonEmpty, c.columnsReset,
+        CommitAdds(v, c.op, c.remove.nonEmpty, c.columnsReset,
           c.add.map(a =>
-            (new File(dataDir(path), a.name).getAbsolutePath, a.numRecords)))
+            (new File(dataDir(path), a.name).getAbsolutePath, a.numRecords)),
+          c.schema.map(schemaOf))
       }
+
+  /** One commit as [[commitAdds]] returns it; `schema` is None for a
+    * commit written before commits recorded it. */
+  private[sources] final case class CommitAdds(version: Long, op: Option[String],
+      hasRemoves: Boolean, columnsReset: Boolean, adds: Seq[(String, Long)],
+      schema: Option[StructType])
 
   /** Highest stream-transaction version recorded for `app` — the
     * exactly-once cursor behind the `txn` guard on append/upsert/delete,
@@ -777,12 +783,9 @@ object TxParquetTable {
     * an app that never committed or a table that does not exist.
     */
   def recordedTxn(path: String, app: String): Option[Long] = {
-    val v = latestVersion(path)
-    if (v < 0) None
-    else {
-      val snap = state(path, Some(v))
-      snap.txns.get(app).orElse(maxTxnInLog(path, app, v))
-    }
+    val snap = state(path, None)
+    if (snap.version < 0) None
+    else snap.txns.get(app).orElse(maxTxnInLog(path, app, snap.version))
   }
 
   /** Max txn version `app` ever recorded in commits ≤ `upTo`, straight
@@ -919,34 +922,39 @@ object TxParquetTable {
   def append(df: DataFrame, path: String,
       statsColumns: Seq[String] = Seq.empty,
       txn: Option[(String, Long)] = None): Long =
-    appendTo(df, None, Seq("" -> path), statsColumns, txn).head
+    appendTo(df, None, Seq(Lane("", path, df.columns.toSeq)), statsColumns, txn).head
+
+  /** One lane of [[appendLanes]]: the rows whose lane column holds
+    * `value` land in the table at `path`, as its `columns`, in order. */
+  final case class Lane(value: String, path: String, columns: Seq[String])
 
   /** Multi-lane atomic append: rows are routed by the value of `laneCol`
-    * into the table `lanes` maps it to, all lanes written by ONE write
-    * job whose commit is ONE log commit per table, in `lanes` order. Each lane keeps [[append]]'s contract: its
-    * own `txn` guard (a lane that already recorded the txn is left out
-    * of the write and keeps its version, so a replay after a partial
-    * commit lands only the missing lanes) and per-file `numRecords`.
-    * Every lane commits in every call, an empty one with no file and
-    * its schema in the log, so it still reads with its columns. The
-    * lane column is not persisted. If a lane's commit fails, it and the
-    * lanes after it keep no written file. Returns each lane's committed
-    * version, in `lanes` order.
+    * into the table of their [[Lane]], all lanes written by ONE write
+    * job whose commit is ONE log commit per table, in `lanes` order.
+    * Each table's files carry only its lane's columns. Each lane keeps
+    * [[append]]'s contract: its own `txn` guard (a lane that already
+    * recorded the txn is left out of the write and keeps its version, so
+    * a replay after a partial commit lands only the missing lanes) and
+    * per-file `numRecords`. Every lane commits in every call, an empty
+    * one with no file and its schema in the log, so it still reads with
+    * its columns. The lane column is not persisted. If a lane's commit
+    * fails, it and the lanes after it keep no written file. Returns each
+    * lane's committed version, in `lanes` order.
     */
-  def appendLanes(df: DataFrame, laneCol: String, lanes: Seq[(String, String)],
+  def appendLanes(df: DataFrame, laneCol: String, lanes: Seq[Lane],
       txn: Option[(String, Long)] = None): Seq[Long] = {
-    require(lanes.map(_._1).distinct.size == lanes.size,
-      s"duplicate lane in ${lanes.map(_._1).mkString(",")}")
+    require(lanes.map(_.value).distinct.size == lanes.size,
+      s"duplicate lane in ${lanes.map(_.value).mkString(",")}")
+    require(lanes.forall(l => l.columns.nonEmpty &&
+      l.columns.forall(c => c != laneCol && df.columns.contains(c))),
+      s"each lane's columns must be non-empty columns of the frame other than $laneCol")
     appendTo(df, Some(laneCol), lanes, Seq.empty, txn)
   }
 
   private def appendTo(df: DataFrame, laneCol: Option[String],
-      targets: Seq[(String, String)], statsColumns: Seq[String],
+      targets: Seq[Lane], statsColumns: Seq[String],
       txn: Option[(String, Long)]): Seq[Long] = {
-    val snaps = targets.map { case (_, path) =>
-      val v = latestVersion(path)
-      if (v < 0) Snapshot(-1L, Seq.empty, None) else state(path, Some(v))
-    }
+    val snaps = targets.map(t => state(t.path, None))
     // Checkpoint-loss guard (r11 advice): a checkpoint written by an
     // older binary (no txns field) that won the createLink race makes
     // snapshots folded from it FORGET txn state at or below it —
@@ -956,30 +964,31 @@ object TxParquetTable {
     // log), which is checkpoint-independent. The scan costs O(#commits)
     // driver file reads — the history() budget — and runs only on an
     // app's first-ever append or under the mixed-binary scenario.
-    val done = targets.zip(snaps).map { case ((_, path), snap) =>
+    val done = targets.zip(snaps).map { case (t, snap) =>
       txn.exists { case (app, ver) =>
-        snap.txns.get(app).orElse(maxTxnInLog(path, app, snap.version)).exists(_ >= ver)
+        snap.txns.get(app).orElse(maxTxnInLog(t.path, app, snap.version)).exists(_ >= ver)
       }
     }
     val pending = targets.indices.filterNot(done)
     if (pending.isEmpty) return snaps.map(_.version)
     val toWrite = laneCol match {
       case Some(c) if done.contains(true) =>
-        df.filter(!col(c).isin(targets.indices.filter(done).map(targets(_)._1): _*))
+        df.filter(!col(c).isin(targets.indices.filter(done).map(targets(_).value): _*))
       case _ => df
     }
-    // nullable throughout, as a parquet read of the lane's files returns
-    // it: a table's snapshot schema does not change when its first row lands
-    val laneSchema = bridge.asNullable(StructType(df.schema.filterNot(f => laneCol.contains(f.name))))
-    // merged before the write, so a type change fails with nothing written
+    // merged before the write, so a type change fails with nothing
+    // written; nullable throughout, as a parquet read of the lane's
+    // files returns it: a table's snapshot schema does not change when
+    // its first row lands
     val schemas = pending.map { i =>
-      tableSchema(df.sparkSession, targets(i)._2, snaps(i))
+      val laneSchema = bridge.asNullable(StructType(targets(i).columns.map(df.schema(_))))
+      tableSchema(df.sparkSession, targets(i).path, snaps(i))
         .fold(laneSchema)(bridge.mergeSchemas(_, laneSchema))
     }
     val versions = snaps.map(_.version).toArray
     write(toWrite, laneCol, pending.map(targets), None, statsColumns) { (j, adds) =>
       val i = pending(j)
-      versions(i) = publish(targets(i)._2, adds, Seq.empty, Seq.empty, snaps(i).version,
+      versions(i) = publish(targets(i).path, adds, Seq.empty, Seq.empty, snaps(i).version,
         txn = txn, schema = Some(schemas(j)))
     }
     versions.toSeq
@@ -992,8 +1001,8 @@ object TxParquetTable {
     * table that does not exist yet.
     */
   def liveFileCount(path: String): Int = {
-    val v = latestVersion(path)
-    if (v < 0) -1 else state(path, Some(v)).live.length
+    val snap = state(path, None)
+    if (snap.version < 0) -1 else snap.live.length
   }
 
   /** Compaction (the OPTIMIZE shape): rewrite the current snapshot into

@@ -116,7 +116,7 @@ class TxStreamSource(
         var v = from
         var files = 0
         TxParquetTable.commitAdds(path, from, latest).foreach {
-          case (cv, op, hasRemoves, colsReset, adds) =>
+          case TxParquetTable.CommitAdds(cv, op, hasRemoves, colsReset, adds, _) =>
             val n = classify(cv, op, hasRemoves, colsReset) match {
               case CommitClass.Skip => 0
               case _ => adds.length
@@ -145,7 +145,7 @@ class TxStreamSource(
           .localCheckpoint(true)
       case _ =>
         val files = TxParquetTable.commitAdds(path, startV, endV).flatMap {
-          case (cv, op, hasRemoves, colsReset, adds) =>
+          case TxParquetTable.CommitAdds(cv, op, hasRemoves, colsReset, adds, _) =>
             classify(cv, op, hasRemoves, colsReset) match {
               case CommitClass.Append => adds.map(_._1)
               case CommitClass.Skip => Nil

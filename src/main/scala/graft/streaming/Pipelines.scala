@@ -562,7 +562,8 @@ object Pipelines {
               .agg(count(lit(1)).as("n")),
             s"$outDir/telemetry", txn = Some((appId, epochId)))
           addToRegistryBloom(outDir, gate,
-            lanes.filter(col("__first")).select(xxhash64(col("__h"))),
+            lanes.filter(col("__first")).select(xxhash64(col("__h")))
+              .collect().map(_.getLong(0)).toSeq,
             bloomExpectedItems, bloomFpp)
         } finally { lanes.unpersist(); () }
       }
@@ -592,27 +593,24 @@ object Pipelines {
       }
     }
 
-  /** Put an epoch's fresh registry keys (one LONG column, the
-    * `xxhash64` of the id) into the persisted gate, AFTER their registry
+  /** Put an epoch's fresh registry keys (the `xxhash64` of each id)
+    * into the persisted gate, AFTER their registry
     * commit: when any epoch ≤ N has completed, the bloom is a superset
     * of epochs ≤ N — which is exactly what epoch N+1's gate needs (a
     * replayed epoch N re-puts the same keys, set semantics, and splits
     * against `__epoch < N`, where the superset already held). The keys
-    * are collected — at most the epoch's rows × 8 bytes — and put into
-    * `loaded`, the filter the epoch's probe read; None (no probe ran)
+    * — at most the epoch's rows × 8 bytes — are put into `loaded`, the filter the epoch's probe read; None (no probe ran)
     * reads the persisted file, or creates the filter with the sink's
     * constant (expectedItems, fpp). No keys: nothing is written. */
   private def addToRegistryBloom(outDir: String,
       loaded: Option[org.apache.spark.util.sketch.BloomFilter],
-      keys: DataFrame, expectedItems: Long, fpp: Double): Unit = {
-    val fresh = keys.collect()
-    if (fresh.nonEmpty) {
+      keys: Seq[Long], expectedItems: Long, fpp: Double): Unit =
+    if (keys.nonEmpty) {
       val bloom = loaded.orElse(readRegistryBloom(outDir)).getOrElse(
         org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp))
-      fresh.foreach(r => bloom.putLong(r.getLong(0)))
+      keys.foreach(bloom.putLong)
       writeRegistryBloom(outDir, bloom)
     }
-  }
 
   private def readRegistryBloom(outDir: String)
       : Option[org.apache.spark.util.sketch.BloomFilter] = {
@@ -842,12 +840,17 @@ object Pipelines {
     *   - `$outDir/ingested`   — the curated bars;
     *
     * plus the registry (`$outDir/ids`) and its persisted bloom gate.
-    * The late, dup and ingested lanes share one schema and land from ONE
-    * write job ([[graft.sources.TxParquetTable.appendLanes]]), each
-    * still under its own txn-guarded commit. The epoch's fresh ids are
-    * collected (8 bytes each) and put into the gate the probe loaded.
-    * Epoch cost is O(batch) + one constant-size bloom read/write —
-    * flat as the corpus grows, the r17 registry discipline.
+    * An epoch is one probe and ONE write: the wire is parsed, gated,
+    * routed and watermark-split once, into one cached frame; the probe
+    * collects its bloom-gated on-time ids and looks them up in the
+    * registry; then all six tables land from one write job
+    * ([[graft.sources.TxParquetTable.appendLanes]]), each table's files
+    * with its own columns only, each table under its own txn-guarded
+    * commit (quarantine → dlq → late → dup → ingested → ids). That job
+    * also observes, before a replay's filter drops committed lanes, the
+    * watermark advance and the fresh ids' gate keys. Epoch cost is
+    * O(batch) + a constant: a few jobs and one constant-size bloom
+    * read/write, flat as the corpus grows (the r17 registry discipline).
     */
   def endToEndIngestSink(jsonValues: DataFrame, declaredFields: Seq[String],
       outDir: String, checkpoint: String, delayMs: Long,
@@ -862,180 +865,174 @@ object Pipelines {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
+        import org.apache.spark.sql.Observation
         import org.apache.spark.sql.expressions.Window
+        import org.apache.spark.sql.graft.bridge
         import graft.sources.TxParquetTable
+        import graft.sources.TxParquetTable.Lane
         val spark = batch.sparkSession
         val idsPath = s"$outDir/ids"
-        // spread the wire BEFORE the gate (r19, guide §2.5): see
+        // X91: split against the replica frozen for this epoch
+        val (lastEpoch, wmBefore, wmAfter) = readWmReplica(checkpoint, hconf)
+        val wm = if (epochId == lastEpoch) wmBefore else wmAfter
+        // spread the wire BEFORE the parse (r19, guide §2.5): see
         // shapeGatedBarsSink — the epoch's parse/gate chain must not
-        // run on the source block's single partition
-        val gated = Ingest.shapeGate(
-            graft.util.Partitioning.ensureParallelism(batch), declaredFields)
-          .withColumn("__epoch", lit(epochId)).cache()
+        // run on the source block's single partition. Each row's lane
+        // so far, in precedence order: shape, dead letter, watermark;
+        // an on-time row is dup or ingested, decided after the probe
+        val tagged = Ingest.shapeGate(
+            Ingest.barsWithDeadLetter(graft.util.Partitioning.ensureParallelism(batch))
+              .withColumnRenamed("raw", "value"), declaredFields)
+          .withColumnRenamed("value", "raw")
+          .withColumn("__lane",
+            when(col("shape_lane") =!= "shape_ok", lit("quarantine"))
+              .when(col("dead_reason").isNotNull, lit("dlq"))
+              .when(unix_millis(col("datetime")) < lit(wm), lit("late"))
+              .otherwise(lit("on_time")))
+          .withColumn("__epoch", lit(epochId))
+          .cache()
         // phase labels (guide §1.5) so job-level profiling attributes
-        // each lane's cost; thread-local, cleared in the outer finally
+        // each phase's cost; thread-local, cleared in the finally
         def phase(p: String): Unit =
           spark.sparkContext.setJobDescription(s"e2e epoch=$epochId $p")
         try {
-          phase("quarantine")
-          val vQuar = TxParquetTable.append(
-            gated.filter(col("shape_lane") =!= "shape_ok")
-              .select(col("value").as("raw"), col("shape_lane"), col("__epoch")),
-            s"$outDir/quarantine", txn = Some((appId, epochId)))
-          val routed = Ingest.barsWithDeadLetter(
-              gated.filter(col("shape_lane") === "shape_ok").select("value"))
-            .withColumn("__epoch", lit(epochId)).cache()
-          try {
-            phase("dlq")
-            val vDlq = TxParquetTable.append(
-              routed.filter(col("dead_reason").isNotNull)
-                .select(col("raw"), col("dead_reason"), col("__epoch")),
-              s"$outDir/dlq", txn = Some((appId, epochId)))
-            val good = routed.filter(col("dead_reason").isNull)
-              .drop("raw", "dead_reason")
-            // X91: split against the replica frozen for this epoch
-            val (lastEpoch, wmBefore, wmAfter) = readWmReplica(checkpoint, hconf)
-            val wm = if (epochId == lastEpoch) wmBefore else wmAfter
-            val split = good
-              .withColumn("__late", unix_millis(col("datetime")) < lit(wm))
-              .cache()
-            try {
-              val onTime = split.filter(!col("__late")).drop("__late")
-              // X99's registry stage on the deterministic id: the gate
-              // discharges definitively-new ids without touching the
-              // registry; only might-contain ids probe it. The probe is
-              // SIZE-GATED (r17 judge): up to probeCollectMax ids take
-              // the exact collect + IN pushdown; past it (a replayed
-              // producer window makes the probe epoch-sized) nothing is
-              // collected — the registry is semi-joined against the
-              // probe FRAME and the seen set stays distributed
-              // (seenFrame below), joined onto the batch instead of
-              // serialized into an isin.
-              // the gate the probe loads is the one this epoch's fresh
-              // ids are put into after the registry commit (None: no
-              // registry yet, so no probe)
-              val (seenIds: Seq[String], seenFrame: Option[DataFrame],
-                  gate: Option[org.apache.spark.util.sketch.BloomFilter]) =
-                if (TxParquetTable.latestVersion(idsPath) < 0)
-                  (Seq.empty[String], None, None)
-                else {
-                  phase("registry probe")
-                  val bloom = loadOrBuildRegistryBloom(spark, outDir, idsPath,
-                    bloomExpectedItems, bloomFpp)
-                  val probeFrame = onTime.select(col("id"))
-                    .filter(graft.functions.BloomGate.mightContain(
-                      xxhash64(col("id")), bloom))
-                    .distinct()
-                  val probed = probeFrame.limit(probeCollectMax + 1)
-                    .collect().map(_.getString(0)).toSeq
-                  if (probed.isEmpty) (Seq.empty[String], None, Some(bloom))
-                  else if (probed.length <= probeCollectMax)
-                    (TxParquetTable.snapshot(spark, idsPath)
-                      .filter(col("__epoch") < epochId &&
-                        col("h").isin(probed: _*))
-                      .select(col("h")).collect().map(_.getString(0)).toSeq,
-                      None, Some(bloom))
-                  else (Seq.empty[String],
-                    Some(TxParquetTable.snapshot(spark, idsPath)
-                      .filter(col("__epoch") < epochId)
-                      .join(probeFrame.withColumnRenamed("id", "h"),
-                        Seq("h"), "left_semi")
-                      .select(col("h").as("id"))),
-                    Some(bloom))
-                }
-              // within-epoch keeper: a GENUINE total order over every
-              // value column (same-id rows are usually identical — the
-              // id is content-derived from (ticker, datetime) — but the
-              // rule must not depend on it): two rows differing only in
-              // adj_close/dividends/stock_splits must rank the same way
-              // on every replay, else a partial-commit replay (crash
-              // after the dup append, before ingested) could flip the
-              // keeper and land a row in BOTH lanes. The sha2 tail
-              // breaks any residual tie deterministically.
-              val w = Window.partitionBy(col("id"))
-                .orderBy(col("volume").desc, col("open").desc, col("high").desc,
-                  col("low").desc, col("close").desc, col("adj_close").desc,
-                  col("dividends").desc, col("stock_splits").desc,
-                  sha2(concat_ws("|",
-                    col("ticker"), col("datetime").cast("string"),
-                    col("volume"), col("open"), col("high"), col("low"),
-                    col("close"), col("adj_close"), col("dividends"),
-                    col("stock_splits")), 256))
-              val ranked = seenFrame match {
-                case None =>
-                  onTime.withColumn("__seen",
-                    if (seenIds.isEmpty) lit(false)
-                    else col("id").isin(seenIds: _*))
-                case Some(sf) =>
-                  // registry ids are unique by construction (only fresh
-                  // ids append, exactly-once txn) so the left join
-                  // cannot fan out; AQE broadcasts when the seen set
-                  // fits, shuffles otherwise
-                  onTime.join(sf.withColumn("__seen_hit", lit(true)),
-                      Seq("id"), "left")
-                    .withColumn("__seen",
-                      coalesce(col("__seen_hit"), lit(false)))
-                    .drop("__seen_hit")
-              }
-              val marked = ranked
-                .withColumn("__rn", row_number().over(w))
-                .withColumn("__dup", col("__rn") > 1 || col("__seen"))
-                .drop("__rn", "__seen")
-                .cache()
-              try {
-                // late, dup and ingested share one schema: ONE write job
-                // partitioned on the lane, then one txn-guarded commit
-                // per table (late first, as the lanes always landed)
-                phase("lanes")
-                val Seq(vLate, vDup, vIngested) = TxParquetTable.appendLanes(
-                  split.filter(col("__late")).drop("__late")
-                    .withColumn("__lane", lit("late"))
-                    .unionByName(marked.withColumn("__lane",
-                      when(col("__dup"), lit("dup")).otherwise(lit("ingested")))
-                      .drop("__dup")),
-                  "__lane",
-                  Seq("late", "dup", "ingested").map(l => l -> s"$outDir/$l"),
-                  txn = Some((appId, epochId)))
-                val fresh = marked.filter(!col("__dup")).drop("__dup")
-                phase("ids registry")
-                TxParquetTable.append(
-                  fresh.select(col("id").as("h"), col("__epoch")),
-                  idsPath, txn = Some((appId, epochId)))
-                phase("bloom merge")
-                addToRegistryBloom(outDir, gate,
-                  fresh.select(xxhash64(col("id"))), bloomExpectedItems, bloomFpp)
-                // advance the replica over ALL parsed rows (late included
-                // — Spark's own watermark stats see them too), once per
-                // NEW epoch
-                phase("wm advance")
-                val mx = split.agg(max(unix_millis(col("datetime")))).collect()(0)
-                val advanced =
-                  if (mx.isNullAt(0)) wm
-                  else math.max(wm, mx.getLong(0) - delayMs)
-                writeWmReplica(checkpoint, hconf, epochId, wm, advanced)
-                // X112 composed into X104 (opt-in): after every lane of
-                // the epoch committed, ONE atomic manifest append
-                // records the five (lane, version) pairs — readers
-                // resolving through it never see an epoch whose lanes
-                // are only partially landed (a crash between lane
-                // commits), and a replayed epoch's re-publish is a
-                // txn-guarded no-op. The replayed lane appends above
-                // return each lane's committed version (single-writer
-                // log), so a recovery re-publish carries the same set.
-                if (publishManifest) {
-                  graft.sources.Manifest.publish(spark, s"$outDir/manifest",
-                    epochId,
-                    Map("quarantine" -> vQuar, "dlq" -> vDlq,
-                      "late" -> vLate, "dup" -> vDup,
-                      "ingested" -> vIngested),
-                    app = s"$appId-manifest")
-                  ()
-                }
-              } finally { marked.unpersist(); () }
-            } finally { split.unpersist(); () }
-          } finally { routed.unpersist(); () }
+          val onTime = col("__lane") === "on_time"
+          // X99's registry stage on the deterministic id: the gate
+          // discharges definitively-new ids without touching the
+          // registry; only might-contain ids probe it. The probe is
+          // SIZE-GATED (r17 judge): up to probeCollectMax ids take the
+          // exact collect + IN pushdown; past it (a replayed producer
+          // window makes the probe epoch-sized) the registry is
+          // semi-joined against the probe FRAME and the seen set stays
+          // distributed (seenFrame below), joined onto the batch instead
+          // of serialized into an isin. The gate the probe loads is the
+          // one this epoch's fresh ids are put into after the registry
+          // commit (None: no registry yet, so no probe).
+          val idsBefore = TxParquetTable.latestVersion(idsPath)
+          val (seenIds: Seq[String], seenFrame: Option[DataFrame],
+              gate: Option[org.apache.spark.util.sketch.BloomFilter]) =
+            if (idsBefore < 0) (Seq.empty[String], None, None)
+            else {
+              phase("registry probe")
+              val bloom = loadOrBuildRegistryBloom(spark, outDir, idsPath,
+                bloomExpectedItems, bloomFpp)
+              val probeFrame = tagged.filter(onTime).select(col("id"))
+                .filter(graft.functions.BloomGate.mightContain(
+                  xxhash64(col("id")), bloom))
+              // one job, at most probeCollectMax + 1 ids a partition:
+              // more than probeCollectMax collected is an overflow
+              val probed = bridge.localLimit(probeFrame, probeCollectMax + 1)
+                .collect().map(_.getString(0))
+              if (probed.isEmpty) (Seq.empty[String], None, Some(bloom))
+              else if (probed.length <= probeCollectMax)
+                (TxParquetTable.snapshot(spark, idsPath)
+                  .filter(col("__epoch") < epochId &&
+                    col("h").isin(probed.distinct.toSeq: _*))
+                  .select(col("h")).collect().map(_.getString(0)).toSeq,
+                  None, Some(bloom))
+              else (Seq.empty[String],
+                Some(TxParquetTable.snapshot(spark, idsPath)
+                  .filter(col("__epoch") < epochId)
+                  .join(probeFrame.withColumnRenamed("id", "h"),
+                    Seq("h"), "left_semi")
+                  .select(col("h").as("id"))),
+                Some(bloom))
+            }
+          // registry ids are unique by construction (only fresh ids
+          // append, exactly-once txn) so the left join cannot fan out;
+          // AQE broadcasts when the seen set fits, shuffles otherwise
+          val (withSeen, seen) = seenFrame match {
+            case None =>
+              (tagged, if (seenIds.isEmpty) lit(false) else col("id").isin(seenIds: _*))
+            case Some(sf) =>
+              (tagged.join(sf.withColumn("__seen_hit", lit(true)), Seq("id"), "left"),
+                col("__seen_hit").isNotNull)
+          }
+          // within-epoch keeper: a GENUINE total order over every
+          // value column (same-id rows are usually identical — the
+          // id is content-derived from (ticker, datetime) — but the
+          // rule must not depend on it): two rows differing only in
+          // adj_close/dividends/stock_splits must rank the same way
+          // on every replay, else a partial-commit replay (crash
+          // after the dup commit, before ingested) could flip the
+          // keeper and land a row in BOTH lanes. The sha2 tail
+          // breaks any residual tie deterministically. Rows of the
+          // other lanes are ranked apart (by their raw payload, which
+          // spreads them) and keep their lane.
+          val w = Window
+            .partitionBy(onTime, when(onTime, col("id")).otherwise(col("raw")))
+            .orderBy(col("volume").desc, col("open").desc, col("high").desc,
+              col("low").desc, col("close").desc, col("adj_close").desc,
+              col("dividends").desc, col("stock_splits").desc,
+              sha2(concat_ws("|",
+                col("ticker"), col("datetime").cast("string"),
+                col("volume"), col("open"), col("high"), col("low"),
+                col("close"), col("adj_close"), col("dividends"),
+                col("stock_splits")), 256))
+          val laned = withSeen
+            .withColumn("__lane", when(!onTime, col("__lane"))
+              .when(row_number().over(w) > 1 || seen, lit("dup"))
+              .otherwise(lit("ingested")))
+            // an ingested row also lands in the registry as its id
+            .withColumn("__lane", explode(when(col("__lane") === "ingested",
+              array(lit("ingested"), lit("ids"))).otherwise(array(col("__lane")))))
+            .withColumn("h", when(col("__lane") === "ids", col("id")))
+          // the replica advances over ALL parsed rows (late included —
+          // Spark's own watermark stats see them too)
+          val epochStats = Seq(
+            max(when(col("__lane").isin("late", "dup", "ingested"),
+              unix_millis(col("datetime")))).as("wm_max"),
+            collect_list(when(col("__lane") === "ids", xxhash64(col("h")))).as("fresh"))
+          val observed = Observation()
+          val bars = Seq("datetime", "open", "high", "low", "close", "adj_close",
+            "volume", "dividends", "stock_splits", "ticker", "id", "__epoch")
+          phase("lanes")
+          val Seq(vQuar, vDlq, vLate, vDup, vIngested, vIds) = TxParquetTable.appendLanes(
+            laned.observe(observed, epochStats.head, epochStats.tail: _*), "__lane",
+            Seq(Lane("quarantine", s"$outDir/quarantine", Seq("raw", "shape_lane", "__epoch")),
+              Lane("dlq", s"$outDir/dlq", Seq("raw", "dead_reason", "__epoch")),
+              Lane("late", s"$outDir/late", bars),
+              Lane("dup", s"$outDir/dup", bars),
+              Lane("ingested", s"$outDir/ingested", bars),
+              Lane("ids", idsPath, Seq("h", "__epoch"))),
+            txn = Some((appId, epochId)))
+          // the registry commits last, so it committed now iff the write
+          // ran; a replay that found every table committed (a crash
+          // after the registry commit) aggregates the same figures
+          val stats =
+            if (vIds > idsBefore) observed.get
+            else {
+              phase("wm advance")
+              laned.agg(epochStats.head, epochStats.tail: _*).head()
+                .getValuesMap[Any](Seq("wm_max", "fresh"))
+            }
+          addToRegistryBloom(outDir, gate,
+            stats("fresh").asInstanceOf[scala.collection.Seq[Long]].toSeq,
+            bloomExpectedItems, bloomFpp)
+          // once per NEW epoch; a replay rewrites the same value
+          val advanced = Option(stats("wm_max")).fold(wm)(mx =>
+            math.max(wm, mx.asInstanceOf[Long] - delayMs))
+          writeWmReplica(checkpoint, hconf, epochId, wm, advanced)
+          // X112 composed into X104 (opt-in): after every lane of
+          // the epoch committed, ONE atomic manifest append
+          // records the five (lane, version) pairs — readers
+          // resolving through it never see an epoch whose lanes
+          // are only partially landed (a crash between lane
+          // commits), and a replayed epoch's re-publish is a
+          // txn-guarded no-op. The replayed lane appends above
+          // return each lane's committed version (single-writer
+          // log), so a recovery re-publish carries the same set.
+          if (publishManifest) {
+            graft.sources.Manifest.publish(spark, s"$outDir/manifest",
+              epochId,
+              Map("quarantine" -> vQuar, "dlq" -> vDlq,
+                "late" -> vLate, "dup" -> vDup,
+                "ingested" -> vIngested),
+              app = s"$appId-manifest")
+            ()
+          }
         } finally {
-          gated.unpersist()
+          tagged.unpersist()
           spark.sparkContext.setJobDescription(null)
           ()
         }

@@ -256,12 +256,13 @@ class ComposedPipelineSpec extends SparkSpec {
     assert(cut0("ingested").count() === 4L)
   }
 
-  test("e2e ingest sink: replaying an epoch after a partial commit (only late landed) keeps every row in one lane once") {
-    // a crash after the late lane's commit and before dup/ingested: the
-    // epoch is rolled back to exactly that state (the dup, ingested and
-    // ids commits and Spark's batch commit removed), and the restarted
-    // query replays it. The late lane's txn guard skips it; every lane
-    // must then equal the uninterrupted run, row for row.
+  /** Run the e2e sink over two wire files (an epoch each), cut epoch 1
+    * back to "every table in `landed` committed, nothing after it" (the
+    * later tables' commits, Spark's batch commit and the watermark
+    * replica's advance removed), and replay it. Every lane, the `ids`
+    * registry and the watermark replica must equal the uninterrupted
+    * run's, row for row. */
+  private def replayAfterCut(name: String, landed: Seq[String]): Unit = {
     import graft.sources.TxParquetTable
     val declared = Seq("Datetime", "Open", "High", "Low", "Close",
       "Adj Close", "Volume", "Dividends", "Stock Splits", "ticker")
@@ -274,7 +275,7 @@ class ComposedPipelineSpec extends SparkSpec {
         bar("L0", "2024-06-03T09:00:00.000Z", 5), // below the watermark
         bar("L1", "2024-06-03T09:05:00.000Z", 6),
         """{"Datetime":"2024-06-03T14:50:00.000Z","Open":1.0""") // truncated
-    val dir = java.nio.file.Files.createTempDirectory("graft_e2e_replay_").toString
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_e2e_replay_$name").toString
     val landing = new java.io.File(dir, "landing"); landing.mkdirs()
     def land(i: Int, rows: Seq[String]): Unit = {
       val tmp = new java.io.File(dir, s"wire$i.json")
@@ -294,30 +295,122 @@ class ComposedPipelineSpec extends SparkSpec {
       } finally q.stop()
     }
     val laneNames = Seq("quarantine", "dlq", "late", "dup", "ingested")
-    def lanes(): Map[String, Seq[String]] = laneNames.map { l =>
+    val tables = laneNames :+ "ids"
+    def contents(): Map[String, Seq[String]] = tables.map { l =>
       val snap = TxParquetTable.snapshot(spark, s"$dir/out/$l")
       l -> snap.select(to_json(struct(snap.columns.sorted.map(col): _*)))
         .as[String].collect().toSeq.sorted
     }.toMap
+    // the replica and its checksum sidecar
+    val wmFiles = Seq("graft_late_wm", ".graft_late_wm.crc")
+      .map(java.nio.file.Paths.get(dir, "ckpt", _))
+    val wmFile = wmFiles.head
+    runUntil(1)
+    val wmAfterEpoch0 = wmFiles.map(java.nio.file.Files.readAllBytes)
     runUntil(2)
-    val whole = lanes()
-    assert(whole.values.map(_.size).sum === epoch0.size + epoch1.size,
+    val whole = contents()
+    val wholeWm = new String(java.nio.file.Files.readAllBytes(wmFile), "UTF-8")
+    assert(laneNames.map(whole(_).size).sum === epoch0.size + epoch1.size,
       s"exactly-one-lane identity: $whole")
     assert(Seq("late", "dup", "ingested", "quarantine").forall(l => whole(l).nonEmpty), whole.toString)
-    // roll epoch 1 back to "late committed, nothing after it"
-    Seq("dup", "ingested", "ids").foreach { t =>
+    assert(wholeWm.startsWith("1 ") && wholeWm != new String(wmAfterEpoch0.head, "UTF-8"), wholeWm)
+    // roll epoch 1 back to the cut
+    tables.filterNot(landed.contains).foreach { t =>
       val v = TxParquetTable.latestVersion(s"$dir/out/$t")
       assert(v === 1L, t)
       assert(new java.io.File(s"$dir/out/$t/_graft_log", f"$v%020d.json").delete(), t)
     }
     Seq("1", ".1.crc").foreach(f => new java.io.File(s"$dir/ckpt/commits", f).delete())
-    assert(TxParquetTable.recordedTxn(s"$dir/out/late", "graft-e2e-ingest") === Some(1L))
-    assert(TxParquetTable.recordedTxn(s"$dir/out/dup", "graft-e2e-ingest") === Some(0L))
+    wmFiles.zip(wmAfterEpoch0).foreach { case (f, b) => java.nio.file.Files.write(f, b) }
+    tables.foreach { t =>
+      assert(TxParquetTable.recordedTxn(s"$dir/out/$t", "graft-e2e-ingest") ===
+        Some(if (landed.contains(t)) 1L else 0L), t)
+    }
     runUntil(2)
-    val replayed = lanes()
-    laneNames.foreach(l => assert(replayed(l) === whole(l), s"lane $l after the replay"))
-    assert(replayed.values.map(_.size).sum === epoch0.size + epoch1.size)
-    assert(laneNames.forall(l =>
+    val replayed = contents()
+    tables.foreach(l => assert(replayed(l) === whole(l), s"table $l after the replay"))
+    assert(laneNames.map(replayed(_).size).sum === epoch0.size + epoch1.size)
+    assert(tables.forall(l =>
       TxParquetTable.recordedTxn(s"$dir/out/$l", "graft-e2e-ingest") === Some(1L)))
+    assert(new String(java.nio.file.Files.readAllBytes(wmFile), "UTF-8") === wholeWm,
+      "the replay advanced the watermark replica to another value")
+  }
+
+  test("e2e ingest sink: replaying an epoch after a partial commit (only late landed) keeps every row in one lane once") {
+    // a crash after the late lane's commit and before dup/ingested: the
+    // lanes before it keep their txn guard and are left out of the write
+    replayAfterCut("late", Seq("quarantine", "dlq", "late"))
+  }
+
+  test("e2e ingest sink: replaying an epoch cut after the ingested lane and before the registry lands only the registry, and the same watermark") {
+    // every lane committed, the registry not: the replay writes only the
+    // registry rows, yet must advance the watermark replica over the
+    // rows of every lane, as the first attempt would have
+    replayAfterCut("ids", Seq("quarantine", "dlq", "late", "dup", "ingested"))
+  }
+
+  test("e2e ingest sink: replaying an epoch whose every table committed (a crash before the watermark advance) writes nothing and advances the watermark") {
+    // no write job runs on this replay, so the watermark and the
+    // registry's gate keys come from an aggregate over the same rows
+    replayAfterCut("all", Seq("quarantine", "dlq", "late", "dup", "ingested", "ids"))
+  }
+
+  test("e2e ingest sink: once the registry exists an epoch is at most six labelled jobs, and each table's files carry only its columns") {
+    import graft.sources.TxParquetTable
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx = spark.sqlContext
+    val declared = Seq("Datetime", "Open", "High", "Low", "Close",
+      "Adj Close", "Volume", "Dividends", "Stock Splits", "ticker")
+    def bar(ticker: String, minute: Int, vol: Int): String =
+      s"""{"Datetime":"2024-06-03T14:${10 + minute}:00.000Z","Open":1.0,"High":1.1,"Low":0.9,"Close":1.05,"Adj Close":1.05,"Volume":$vol,"Dividends":0.0,"Stock Splits":0.0,"ticker":"$ticker"}"""
+    // rows for every lane: a drifted and a truncated payload, a
+    // zero-volume bar, a bar below the watermark (from epoch 1), and a
+    // re-send of the previous epoch's newest bar (epoch 0: of its own)
+    def epoch(e: Int): Seq[String] =
+      (0 until 6).map(i => bar(s"S$e$i", 20 + 6 * e + i, 100 + i)) ++ Seq(
+        bar(s"S${math.max(e - 1, 0)}5", 25 + 6 * math.max(e - 1, 0), 105),
+        bar(s"Z$e", 5, 0),
+        bar(s"L$e", 0, 7),
+        """{"Datetime":"2024-06-03T14:59:00.000Z","extra":1}""",
+        """{"Datetime":"2024-06-03T14:59:00.000Z","Open":1.0""")
+    val dir = java.nio.file.Files.createTempDirectory("graft_e2e_shape_").toString
+    val mem = MemoryStream[String]
+    val q = Pipelines.endToEndIngestSink(
+      mem.toDF().toDF("value"), declared, dir, s"$dir/ckpt", delayMs = 60000L).start()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    try {
+      mem.addData(epoch(0)); q.processAllAvailable()
+      org.apache.spark.sql.graft.BusDrain.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        (1 to 2).foreach { e =>
+          jobs.clear()
+          mem.addData(epoch(e)); q.processAllAvailable()
+          org.apache.spark.sql.graft.BusDrain.drain(sc)
+          val descs = jobs.asScala.toSeq
+          assert(descs.nonEmpty && descs.size <= 6, s"epoch $e ran ${descs.size} jobs: $descs")
+          assert(descs.forall(_.startsWith(s"e2e epoch=$e ")), s"unlabelled job in epoch $e: $descs")
+        }
+      } finally sc.removeSparkListener(listener)
+      Option(q.exception.orNull).foreach(throw _)
+    } finally q.stop()
+    val tables = Seq("quarantine", "dlq", "late", "dup", "ingested", "ids")
+    val counts = tables.map(t => t -> TxParquetTable.snapshot(spark, s"$dir/$t").count()).toMap
+    assert(tables.forall(counts(_) > 0), counts.toString)
+    assert(counts.view.filterKeys(_ != "ids").values.sum === 3L * epoch(0).size, counts.toString)
+    assert(counts("ids") === counts("ingested"), counts.toString)
+    tables.foreach { t =>
+      val snap = TxParquetTable.snapshot(spark, s"$dir/$t")
+      assert(snap.inputFiles.nonEmpty, t)
+      snap.inputFiles.foreach { f =>
+        assert(footerColumns(f) === snap.schema.fieldNames.toSeq, s"$t file $f")
+      }
+    }
   }
 }

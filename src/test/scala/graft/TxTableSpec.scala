@@ -1378,58 +1378,78 @@ class TxTableSpec extends SparkSpec {
 
   test("appendLanes: one write, one commit per lane; log numRecords equal each lane's rows") {
     val root = freshPath()
-    val lanes = Seq("a", "b", "c").map(l => l -> s"$root/$l")
+    val lanes = Seq("a", "b", "c").map(l => TxParquetTable.Lane(l, s"$root/$l", Seq("id")))
     val df = spark.range(0, 100).repartition(4)
       .withColumn("lane", when(col("id") % 10 === 0, "a")
         .when(col("id") % 10 < 4, "b").otherwise("c"))
     val vs = TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("lanes-app", 0L)))
     assert(vs === Seq(0L, 0L, 0L))
     val want = Map("a" -> 10L, "b" -> 30L, "c" -> 60L)
-    lanes.foreach { case (l, p) =>
+    lanes.foreach { case TxParquetTable.Lane(l, p, _) =>
       assert(TxParquetTable.rowCount(p) === Some(want(l)), l)
       val snap = TxParquetTable.snapshot(spark, p)
       assert(snap.columns.toSeq === Seq("id"), "the lane column is not persisted")
       assert(snap.count() === want(l))
     }
-    assert(stageDirs(lanes.map(_._2)).isEmpty)
+    assert(stageDirs(lanes.map(_.path)).isEmpty)
     // a row whose lane has no table fails loudly and leaves nothing staged
     val e = intercept[IllegalArgumentException] {
       TxParquetTable.appendLanes(df.withColumn("lane", lit("z")), "lane", lanes)
     }
     assert(e.getMessage.contains("z"))
-    assert(stageDirs(lanes.map(_._2)).isEmpty)
-    assert(lanes.forall { case (_, p) => TxParquetTable.latestVersion(p) === 0L })
+    assert(stageDirs(lanes.map(_.path)).isEmpty)
+    assert(lanes.forall(l => TxParquetTable.latestVersion(l.path) === 0L))
+  }
+
+  test("appendLanes: each lane's files carry only its own columns, in its order") {
+    val root = freshPath()
+    val lanes = Seq(TxParquetTable.Lane("a", s"$root/a", Seq("id", "x")),
+      TxParquetTable.Lane("b", s"$root/b", Seq("y", "id")))
+    val df = spark.range(0, 40).repartition(3)
+      .withColumn("x", col("id") * 2).withColumn("y", concat(lit("y"), col("id")))
+      .withColumn("lane", when(col("id") % 4 === 0, "a").otherwise("b"))
+    TxParquetTable.appendLanes(df, "lane", lanes)
+    lanes.foreach { case TxParquetTable.Lane(l, p, cols) =>
+      val snap = TxParquetTable.snapshot(spark, p)
+      assert(snap.columns.toSeq === cols, l)
+      assert(snap.inputFiles.nonEmpty, l)
+      snap.inputFiles.foreach(f => assert(footerColumns(f) === cols, s"lane $l file $f"))
+    }
+    assert(TxParquetTable.snapshot(spark, lanes.head.path).as[(Long, Long)].collect().toSet ===
+      (0L until 40L by 4L).map(i => (i, 2 * i)).toSet)
+    assert(TxParquetTable.snapshot(spark, lanes(1).path).as[(String, Long)].collect().toSet ===
+      (0L until 40L).filter(_ % 4 != 0).map(i => (s"y$i", i)).toSet)
   }
 
   test("appendLanes: a lane whose txn is recorded is skipped and keeps no staged file") {
     val root = freshPath()
-    val lanes = Seq("x", "y").map(l => l -> s"$root/$l")
+    val lanes = Seq("x", "y").map(l => TxParquetTable.Lane(l, s"$root/$l", Seq("id")))
     val df = Seq((1L, "x"), (2L, "y"), (3L, "y")).toDF("id", "lane")
     // a partial commit: only x landed under (app, 7)
-    TxParquetTable.append(Seq(1L).toDF("id"), lanes.head._2, txn = Some(("app", 7L)))
-    val xFiles = dataFiles(lanes.head._2)
+    TxParquetTable.append(Seq(1L).toDF("id"), lanes.head.path, txn = Some(("app", 7L)))
+    val xFiles = dataFiles(lanes.head.path)
     val vs = TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", 7L)))
     assert(vs === Seq(0L, 0L))
-    assert(dataFiles(lanes.head._2) === xFiles, "the skipped lane gained a file")
-    assert(TxParquetTable.snapshot(spark, lanes.head._2).count() === 1L)
-    assert(TxParquetTable.rowCount(lanes(1)._2) === Some(2L))
+    assert(dataFiles(lanes.head.path) === xFiles, "the skipped lane gained a file")
+    assert(TxParquetTable.snapshot(spark, lanes.head.path).count() === 1L)
+    assert(TxParquetTable.rowCount(lanes(1).path) === Some(2L))
     // a full replay is a no-op on every lane
     assert(TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", 7L))) === vs)
-    assert(lanes.forall { case (_, p) => TxParquetTable.latestVersion(p) === 0L })
-    assert(stageDirs(lanes.map(_._2)).isEmpty)
+    assert(lanes.forall(l => TxParquetTable.latestVersion(l.path) === 0L))
+    assert(stageDirs(lanes.map(_.path)).isEmpty)
   }
 
   test("appendLanes: an empty lane commits its txn with no file and reads with its columns") {
     val root = freshPath()
-    val lanes = Seq("full", "empty").map(l => l -> s"$root/$l")
+    val lanes = Seq("full", "empty").map(l => TxParquetTable.Lane(l, s"$root/$l", Seq("id", "v")))
     val df = Seq((1L, "v1", "full"), (2L, "v2", "full")).toDF("id", "v", "lane")
     val vs = TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", 0L)))
-    val empty = lanes(1)._2
+    val empty = lanes(1).path
     assert(vs === Seq(0L, 0L))
     assert(dataFiles(empty).isEmpty && TxParquetTable.rowCount(empty) === Some(0L))
     assert(TxParquetTable.recordedTxn(empty, "app") === Some(0L))
     // the same schema a read of the full lane's files returns
-    val fileSchema = TxParquetTable.snapshot(spark, lanes.head._2).schema
+    val fileSchema = TxParquetTable.snapshot(spark, lanes.head.path).schema
     assert(fileSchema.fieldNames.toSeq === Seq("id", "v"))
     val read = TxParquetTable.snapshot(spark, empty)
     assert(read.schema === fileSchema)
@@ -1441,7 +1461,7 @@ class TxTableSpec extends SparkSpec {
     assert(new java.io.File(empty, s"_graft_log/${"%020d".format(
       TxParquetTable.checkpointInterval.toLong)}.ckpt.json").exists())
     assert(TxParquetTable.snapshot(spark, empty).schema === fileSchema)
-    assert(TxParquetTable.rowCount(lanes.head._2) ===
+    assert(TxParquetTable.rowCount(lanes.head.path) ===
       Some(2L * (TxParquetTable.checkpointInterval + 1)))
     // once a file lands, the files carry the schema
     TxParquetTable.append(Seq((9L, "v9")).toDF("id", "v"), empty)
@@ -1452,22 +1472,22 @@ class TxTableSpec extends SparkSpec {
 
   test("appendLanes: a failed commit leaves no staged file in the lanes after it") {
     val root = freshPath()
-    val lanes = Seq("a", "b", "c").map(l => l -> s"$root/$l")
+    val lanes = Seq("a", "b", "c").map(l => TxParquetTable.Lane(l, s"$root/$l", Seq("id")))
     // lane a's log directory is a dangling link: its commit fails after
     // every lane's files were moved into its table
-    new java.io.File(lanes.head._2).mkdirs()
-    Files.createSymbolicLink(java.nio.file.Paths.get(lanes.head._2, TxParquetTable.LogDirName),
+    new java.io.File(lanes.head.path).mkdirs()
+    Files.createSymbolicLink(java.nio.file.Paths.get(lanes.head.path, TxParquetTable.LogDirName),
       java.nio.file.Paths.get(root, "missing"))
     val df = spark.range(0, 30).withColumn("lane",
       when(col("id") % 3 === 0, "a").when(col("id") % 3 === 1, "b").otherwise("c"))
     intercept[java.nio.file.NoSuchFileException] {
       TxParquetTable.appendLanes(df, "lane", lanes, txn = Some(("app", 0L)))
     }
-    lanes.tail.foreach { case (l, p) =>
+    lanes.tail.foreach { case TxParquetTable.Lane(l, p, _) =>
       assert(dataFiles(p).isEmpty, s"lane $l kept files no commit references")
       assert(TxParquetTable.latestVersion(p) === -1L)
     }
-    assert(stageDirs(lanes.map(_._2)).isEmpty)
+    assert(stageDirs(lanes.map(_.path)).isEmpty)
   }
 
   test("one job per write: a shuffle-free append is exactly one job; upsert, delete and compact infer nothing and end with their write") {
