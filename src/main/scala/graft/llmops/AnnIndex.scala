@@ -1,6 +1,6 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.TxParquetTable
@@ -52,6 +52,58 @@ object AnnIndex {
   private def centroidsPath(path: String) = s"$path/centroids"
   private def assignmentsPath(path: String) = s"$path/assignments"
 
+  /** One index generation's collected head: per cell its id, centroid
+    * and norm, in the shape the probe choosers take. */
+  private[graft] final case class IndexHead(cells: Array[(Int, Array[Double], Double)]) {
+    def length: Int = cells.length
+    def cellIds: Seq[Int] = cells.map(_._1).toSeq
+    def vecs: Seq[Seq[Double]] = cells.map(_._2.toSeq).toSeq
+    /** The head as a (cell, centroid) frame, for plans that join it. */
+    def frame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      cells.toSeq.map { case (c, v, _) => (c, v.toSeq) }.toDF("cell", "centroid")
+    }
+  }
+
+  /** A bounded LRU of what was read from a Tx table, keyed by the
+    * table's identity in its log: its path plus its live data file
+    * names ([[TxParquetTable.liveFiles]]). A refit into a reused path,
+    * or a restore, changes the names and misses; a version number would
+    * repeat across the refit and hit the old generation. `load` reads
+    * exactly the version the key was taken at. Thread-safe: the
+    * streaming serve sink reads heads on its stream thread.
+    */
+  private final class GenerationMemo[V](capacity: Int) {
+    private val entries = new java.util.LinkedHashMap[(String, Seq[String]), V](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Seq[String]), V]): Boolean = size() > capacity
+    }
+
+    def apply(path: String)(load: Long => V): V = {
+      val (version, names) = TxParquetTable.liveFiles(path)
+      val key = (path, names)
+      entries.synchronized(Option(entries.get(key))).getOrElse {
+        val v = load(version)
+        entries.synchronized(entries.put(key, v))
+        v
+      }
+    }
+  }
+
+  // the fit's maxDriverCells caps each head; four generations cover a
+  // blue/green pair and its refits
+  private val heads = new GenerationMemo[IndexHead](4)
+  private val codebooks = new GenerationMemo[PqCodebook](4)
+
+  /** The index head of `path`'s current generation, collected once per
+    * generation and shared by every reader: extend, both serves,
+    * maintain and the PQ fit. */
+  private[graft] def indexHead(spark: SparkSession, path: String): IndexHead =
+    heads(centroidsPath(path)) { v =>
+      IndexHead(Similarity.collectCentroids(
+        TxParquetTable.snapshot(spark, centroidsPath(path), Some(v))))
+    }
+
   /** Full IVF fit persisted under a FRESH `path`. Returns the number of
     * vectors indexed.
     */
@@ -89,18 +141,14 @@ object AnnIndex {
     */
   def extendIvfIndex(newVectors: DataFrame, idCol: String, vecCol: String,
       path: String): Long = {
-    val spark = newVectors.sparkSession
-    val cents = Similarity.collectCentroids(
-      TxParquetTable.snapshot(spark, centroidsPath(path)))
-    val cellIds = cents.map(_._1).toSeq
-    val vecs = cents.map(_._2.toSeq).toSeq
+    val head = indexHead(newVectors.sparkSession, path)
     // no forced repartition: the assign is a cheap map (k dot products
     // per row against a literal matrix) and a blown-up partition count
     // would fragment the assignments table one tiny file per partition
     val assigned = newVectors
       .select(col(idCol).as("id"), Similarity.asDouble(col(vecCol)).as("v"))
       .withColumn("cell", graft.functions.NearestCentroidCell
-        .nearestCentroidCell(col("v"), cellIds, vecs))
+        .nearestCentroidCell(col("v"), head.cellIds, head.vecs))
     TxParquetTable.append(assigned, assignmentsPath(path),
       statsColumns = Seq("cell"))
   }
@@ -150,8 +198,7 @@ object AnnIndex {
     require(psiThreshold > 0, s"psiThreshold must be > 0, got $psiThreshold")
     require(simDropTol >= 0, s"simDropTol must be >= 0, got $simDropTol")
     import graft.util.Partitioning.{stableRound6 => sr6}
-    val cents = TxParquetTable.snapshot(spark, centroidsPath(path))
-      .select(col("cell"), col("centroid"))
+    val cents = indexHead(spark, path).frame(spark)
     def cellStats(snap: DataFrame, n: String, ss: String) =
       snap.join(broadcast(cents), Seq("cell"))
         .select(col("cell"),
@@ -213,10 +260,9 @@ object AnnIndex {
   def queryIvfIndex(spark: SparkSession, path: String, queries: DataFrame,
       qidCol: String, qVecCol: String, nProbe: Int, k: Int,
       excludeSelfId: Boolean = false): DataFrame = {
-    val centroids = TxParquetTable.snapshot(spark, centroidsPath(path))
-    val cents = Similarity.collectCentroids(centroids)
+    val head = indexHead(spark, path)
     val probed = queries.select(col(qVecCol)).collect()
-      .flatMap(r => Similarity.probeCells(cents, r.getSeq[Double](0).toArray, nProbe))
+      .flatMap(r => Similarity.probeCells(head.cells, r.getSeq[Double](0).toArray, nProbe))
       .distinct.sorted.toSeq
     require(probed.nonEmpty, "queryIvfIndex: no probe cells (empty query frame?)")
     // every interior cell of a run is probed by construction (runs only
@@ -226,7 +272,7 @@ object AnnIndex {
         TxParquetTable.snapshotRange(
           spark, assignmentsPath(path), "cell", Some(lo), Some(hi))
       }.reduce(_ unionByName _)
-    Similarity.ivfTopKBatch(centroids, scan, queries, qidCol, qVecCol,
+    Similarity.ivfTopKBatchOver(head.cells, scan, queries, qidCol, qVecCol,
       nProbe, k, excludeSelfId)
   }
 
@@ -277,9 +323,9 @@ object AnnIndex {
         "fitIvfIndex as the baseline")
     val refitDue = report.getAs[Boolean]("refit_due")
     val filesBefore = TxParquetTable.liveFileCount(assignmentsPath(path))
-    val head = TxParquetTable.snapshot(spark, centroidsPath(path))
-    val nCells = head.count().toInt
-    val dim = head.select(size(col("centroid"))).head().getInt(0)
+    val head = indexHead(spark, path)
+    val nCells = head.length
+    val dim = head.cells.head._2.length
     val action =
       if (refitDue) {
         val corpus = TxParquetTable.snapshot(spark, assignmentsPath(path))
@@ -422,6 +468,56 @@ object AnnIndex {
       .withColumn("serving_path", lit(if (refitted) refitPath else live))
   }
 
+  /** The bulk paths' query frame: qids cast to long and guarded unique,
+    * vectors as doubles, and the query norm `qn`. ONE exchange, an
+    * explicit hash on qid, sits under everything: it satisfies the
+    * guard's `Window.partitionBy(qid)` (which then adds none) and spreads
+    * the per-row norm, probe and ADC work that follows it. Left to the
+    * window alone, a one-partition frame (a limit, a coalesce) would get
+    * no exchange and run that work on one task; a round-robin in front of
+    * the window would shuffle the same rows twice.
+    */
+  private def guardedQueries(queries: DataFrame, qidCol: String, qVecCol: String,
+      context: String): DataFrame =
+    graft.util.Guards.requireUniquePerKey(
+        queries.select(col(qidCol).cast("long").as("qid"),
+            Similarity.asDouble(col(qVecCol)).as("qv"))
+          .repartition(col("qid")),
+        Seq("qid"), context)
+      .withColumn("qn", Similarity.norm(col("qv")))
+
+  /** The raw bulk path's probe-tagging subplan: the guarded query frame
+    * with each row tagged by its nProbe cells in-plan
+    * ([[graft.functions.ProbeCells]]), exploded to (qid, qv, qn, cell).
+    * Exposed package-private so BulkAnnSpec can pin the ProbeCells
+    * expression and the single exchange structurally — the serve plan
+    * itself shows only the checkpointed RDD this subplan materialized
+    * into.
+    */
+  private[graft] def tagProbeCells(queries: DataFrame, qidCol: String,
+      qVecCol: String, cellIds: Seq[Int], vecs: Seq[Seq[Double]],
+      nProbe: Int): DataFrame =
+    guardedQueries(queries, qidCol, qVecCol, "queryIvfIndexBulk query frame")
+      .withColumn("cell",
+        explode(graft.functions.ProbeCells.probeCells(
+          col("qv"), cellIds, vecs, nProbe)))
+
+  /** Pin `tagged` with an EAGER localCheckpoint whose job also observes
+    * `cellSets` (each a `collect_set` of cell ids, at most nCells ints)
+    * and return the pinned frame with the sorted union of those sets:
+    * the probed cells, taken from the rows as they are pinned, with no
+    * second pass. The pin must be eager — a lazy checkpoint's job runs
+    * no rows, so the observation would be empty.
+    */
+  private def pinObservingProbes(tagged: DataFrame, cellSets: Seq[Column]): (DataFrame, Seq[Int]) = {
+    val probes = Observation()
+    val named = cellSets.zipWithIndex.map { case (c, i) => c.as(s"probe$i") }
+    val pinned = tagged.observe(probes, named.head, named.tail: _*).localCheckpoint(true)
+    val cells = probes.get.values
+      .flatMap(_.asInstanceOf[scala.collection.Seq[Int]]).toSeq.distinct.sorted
+    (pinned, cells)
+  }
+
   /** BULK serving from the persisted index — the 100 TB-scale twin of
     * [[queryIvfIndex]] (r15 judge item 2): that form collects every
     * caller QUERY VECTOR to the driver to choose probe cells, which is
@@ -429,22 +525,24 @@ object AnnIndex {
     * OOM for a bulk query frame (a re-embedding sweep or hard-negative
     * mining pass scoring 10⁶+ queries). Here probe-cell choice is
     * DISTRIBUTED: the tiny centroid head (√n by construction — the only
-    * thing collected, O(nCells · dim) independent of query count) rides
-    * into codegen as a reference object and each query row tags itself
-    * with its nProbe cells in-plan ([[graft.functions.ProbeCells]] —
+    * thing on the driver, O(nCells · dim) independent of query count,
+    * collected once per index generation by [[indexHead]]) rides into
+    * codegen as a reference object and each query row tags itself with
+    * its nProbe cells in-plan ([[graft.functions.ProbeCells]] —
     * identical picks to the driver-side chooser, pinned by
     * AnnRecallSpec), explodes to (query, cell), and joins against the
     * cell-clustered assignments.
     *
-    * File pruning is kept WITHOUT collecting vectors: the distinct
-    * probed-cell set (bounded by nCells integers — never by query
-    * count) aggregates from the tagged frame, and the assignments scan
-    * reads one zone-map-pruned range per consecutive cell run, exactly
-    * as the interactive path. The tagged query frame is
-    * localCheckpointed (two consumers: the distinct and the join), so a
+    * A warm serve is TWO executions. The first pins the tagged query
+    * frame with an eager localCheckpoint, and that same job observes
+    * the probed-cell set (bounded by nCells integers — never by query
+    * count) for file pruning: the assignments scan reads one
+    * zone-map-pruned range per consecutive cell run, exactly as the
+    * interactive path. The second is the pruned scan, join and top-k.
+    * Pinning is a correctness guarantee, not a cost note: the pruning
+    * set and the join read the same single evaluation, so a
     * nondeterministic upstream — a sample, a fresh shuffle, rand-derived
-    * qids — can never tag the join with a cell the scan union missed;
-    * single evaluation is a correctness guarantee here, not a cost note.
+    * qids — can never tag the join with a cell the scan union missed.
     *
     * Scoring tail = the q66 economics: corpus norms once per row, the
     * (qid, cell) equi-join keeps per-query pruning, and the per-query
@@ -457,56 +555,14 @@ object AnnIndex {
     * equals [[queryIvfIndex]]'s by construction (same probes, same
     * scan, same scoring — BulkAnnSpec pins row-identical output).
     */
-  /** The bulk paths' shared probe-tagging subplan: guard qid uniqueness,
-    * normalize, tag each query row with its nProbe cells in-plan
-    * ([[graft.functions.ProbeCells]]) and explode to (qid, qv, qn,
-    * cell). Exposed package-private so BulkAnnSpec can pin the
-    * ProbeCells expression structurally — the serve plan itself shows
-    * only the checkpointed RDD this subplan materialized into.
-    */
-  private[graft] def tagProbeCells(queries: DataFrame, qidCol: String,
-      qVecCol: String, cellIds: Seq[Int], vecs: Seq[Seq[Double]],
-      nProbe: Int): DataFrame =
-    graft.util.Guards.requireUniquePerKey(
-        // spread the query frame BEFORE the per-row probe/norm work
-        // (r19, guide §2.5 input skew): a bulk frame built from a few
-        // parquet splits (or one MemoryStream block) otherwise runs the
-        // whole tagging + checkpoint materialization on 2-3 tasks —
-        // measured as the single biggest job of every bulk serve
-        graft.util.Partitioning.ensureParallelism(
-          queries.select(col(qidCol).cast("long").as("qid"),
-            Similarity.asDouble(col(qVecCol)).as("qv"))),
-        Seq("qid"), "queryIvfIndexBulk query frame")
-      .withColumn("qn", Similarity.norm(col("qv")))
-      .withColumn("cell",
-        explode(graft.functions.ProbeCells.probeCells(
-          col("qv"), cellIds, vecs, nProbe)))
-
   def queryIvfIndexBulk(spark: SparkSession, path: String, queries: DataFrame,
       qidCol: String, qVecCol: String, nProbe: Int, k: Int,
       excludeSelfId: Boolean = false): DataFrame = {
     import graft.functions.BoundedTopK
-    val cents = Similarity.collectCentroids(
-      TxParquetTable.snapshot(spark, centroidsPath(path)))
-    val cellIds = cents.map(_._1).toSeq
-    val vecs = cents.map(_._2.toSeq).toSeq
-    // localCheckpoint, not a cost note (r16 advice): the tagged frame is
-    // consumed TWICE (probed-cell distinct + the scan join). With a
-    // nondeterministic upstream (sample, fresh shuffle, rand-derived
-    // qids) a recomputation could tag cells absent from the first
-    // pass's scan union and those candidates would silently vanish —
-    // pinning the frame makes single-evaluation a correctness
-    // guarantee, not a caller convention (and a lost checkpoint block
-    // fails the query loudly instead of recomputing silently). Lazy:
-    // the distinct below is the first action and materializes every
-    // partition.
-    val tagged = tagProbeCells(queries, qidCol, qVecCol, cellIds, vecs, nProbe)
-      .localCheckpoint(false)
-    // the ONLY whole-frame action: a distinct over ≤ nCells ints — the
-    // probed-cell union for file pruning, bounded by the index head's
-    // size, not the query count
-    val probed = tagged.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
+    val head = indexHead(spark, path)
+    val (tagged, probed) = pinObservingProbes(
+      tagProbeCells(queries, qidCol, qVecCol, head.cellIds, head.vecs, nProbe),
+      Seq(collect_set(col("cell"))))
     require(probed.nonEmpty, "queryIvfIndexBulk: no probe cells (empty query frame?)")
     val scan = cellRuns(probed).map { case (lo, hi) =>
         TxParquetTable.snapshotRange(
@@ -585,17 +641,23 @@ object AnnIndex {
       .withColumn("rv", zip_with(col("v"), col("centroid"), (a, b) => a - b))
       .drop("centroid")
 
-  /** Load the persisted codebook. Fails loudly when absent or when a
-    * subspace's codes are not dense 0..len-1 (the ADC offset layout
-    * indexes positionally — a gap would silently shift every score). */
+  /** Load the persisted codebook, once per generation like the head
+    * ([[indexHead]]). Fails loudly when absent or when a subspace's codes
+    * are not dense 0..len-1 (the ADC offset layout indexes positionally —
+    * a gap would silently shift every score). */
   private[graft] def loadCodebook(spark: SparkSession, path: String): PqCodebook = {
     require(hasPqArtifacts(path),
       s"no PQ codebook under $path — fit with fitIvfPqIndex (queryIvfIndexBulk " +
         "serves raw-vector indexes)")
-    val rows = TxParquetTable.snapshot(spark, codebookPath(path))
-      .select(col("j"), col("code"), col("centroid"), col("m"), col("ksub"),
-        col("dim"))
-      .collect()
+    codebooks(codebookPath(path)) { v =>
+      parseCodebook(TxParquetTable.snapshot(spark, codebookPath(path), Some(v))
+        .select(col("j"), col("code"), col("centroid"), col("m"), col("ksub"),
+          col("dim"))
+        .collect())
+    }
+  }
+
+  private def parseCodebook(rows: Array[org.apache.spark.sql.Row]): PqCodebook = {
     val m = rows.head.getInt(3)
     val ksub = rows.head.getInt(4)
     val dim = rows.head.getInt(5)
@@ -633,9 +695,8 @@ object AnnIndex {
     val n = fitIvfIndex(embeddings, idCol, vecCol, dim, nCells, path,
       lloydIters, targetFiles)
     val spark = embeddings.sparkSession
-    val cents = TxParquetTable.snapshot(spark, centroidsPath(path))
-    val resid = withResidual(
-      TxParquetTable.snapshot(spark, assignmentsPath(path)), cents)
+    val resid = withResidual(TxParquetTable.snapshot(spark, assignmentsPath(path)),
+      indexHead(spark, path).frame(spark))
     val (codebook, _) = Similarity.pqIndex(
       resid.select(col("id"), col("rv")), "id", "rv", dim, m, ksub, pqIters)
     import spark.implicits._
@@ -672,15 +733,14 @@ object AnnIndex {
       path: String): Long = {
     val spark = newVectors.sparkSession
     val codebook = loadCodebook(spark, path)
-    val cents = TxParquetTable.snapshot(spark, centroidsPath(path))
-    val cc = Similarity.collectCentroids(cents)
+    val head = indexHead(spark, path)
     val assigned = newVectors
       .select(col(idCol).as("id"), Similarity.asDouble(col(vecCol)).as("v"))
       .withColumn("cell", graft.functions.NearestCentroidCell
-        .nearestCentroidCell(col("v"), cc.map(_._1).toSeq, cc.map(_._2.toSeq).toSeq))
+        .nearestCentroidCell(col("v"), head.cellIds, head.vecs))
     TxParquetTable.append(assigned, assignmentsPath(path),
       statsColumns = Seq("cell"))
-    val resid = withResidual(assigned, cents)
+    val resid = withResidual(assigned, head.frame(spark))
     TxParquetTable.append(
       resid.select(col("id"), pqEncodeColumn(col("rv"), codebook).as("codes"),
         col("cell"), Similarity.norm(col("v")).as("vnorm")),
@@ -699,7 +759,8 @@ object AnnIndex {
     * Plan shape: the tagged query frame ([[graft.functions.ProbeCells]]
     * probe tagging + the per-row in-plan ADC table
     * ([[graft.functions.AdcDotTable]]) — nothing query-count-sized on
-    * the driver, checkpointed once for its three consumers), the
+    * the driver, pinned once by an eager checkpoint whose job also
+    * observes the probed cells, as in [[queryIvfIndexBulk]]), the
     * probed-cell runs pruned via zone maps on BOTH code and raw scans,
     * candidate score = (dot(q, centroid(cell)) + Σ_j adc[offset_j +
     * code_j]) / (vnorm · qn) — the residual ADC decomposition of
@@ -710,8 +771,8 @@ object AnnIndex {
     * shortlist covering the probed population the two paths are
     * ROW-IDENTICAL (BulkAnnSpec pins it); at operating shortlists the
     * recall gate is q243.
-    */
-  /** `rerank = false` is the PURE-ADC regime: the top-k comes straight
+    *
+    * `rerank = false` is the PURE-ADC regime: the top-k comes straight
     * from the code-domain scores and the RAW table is never touched at
     * all — the serve for deployments where even the shortlist's pruned
     * raw read is off-budget. Scores are then approximate (quantization
@@ -737,34 +798,24 @@ object AnnIndex {
           s"rows vs $c code rows (a failed extend?); uncoded rows would " +
           "silently vanish from the candidate scan. Re-extend or refit.")
     }
-    val cents = Similarity.collectCentroids(
-      TxParquetTable.snapshot(spark, centroidsPath(path)))
-    val cellIds = cents.map(_._1).toSeq
-    val vecs = cents.map(_._2.toSeq).toSeq
+    val head = indexHead(spark, path)
     val codebook = loadCodebook(spark, path)
     val m = codebook.m
     val offsets = codebook.centroids.map(_.length).scanLeft(0)(_ + _)
-    // checkpointed for the same reason as queryIvfIndexBulk's tagged
-    // frame (single evaluation is correctness under nondeterministic
-    // upstreams), with three consumers here: probed-cell distinct, the
-    // ADC candidate join, and the rerank's query-side join
-    val q0 = graft.util.Guards.requireUniquePerKey(
-        // same query-frame spread as tagProbeCells (r19, guide §2.5):
-        // the ADC table build (m×ksub dot products per row) is the
-        // most expensive per-row tag and must not run on 2-3 tasks
-        graft.util.Partitioning.ensureParallelism(
-          queries.select(col(qidCol).cast("long").as("qid"),
-            Similarity.asDouble(col(qVecCol)).as("qv"))),
-        Seq("qid"), "queryIvfPqIndexBulk query frame")
-      .withColumn("qn", Similarity.norm(col("qv")))
-      .withColumn("adc", AdcDotTable.adcDotTable(col("qv"),
-        codebook.centroids.map(_.map(_.toSeq).toSeq).toSeq))
-      .withColumn("cells", ProbeCells.probeCells(col("qv"), cellIds, vecs, nProbe))
-      .localCheckpoint(false)
+    // pinned for the same reason as queryIvfIndexBulk's tagged frame
+    // (single evaluation is correctness under nondeterministic
+    // upstreams), with two consumers here: the ADC candidate join and
+    // the rerank's query-side join. The pin holds each query's cell
+    // ARRAY, so its job observes one set per probe slot — every array
+    // holds min(nProbe, nCells) cells — never a set of arrays.
+    val (q0, probed) = pinObservingProbes(
+      guardedQueries(queries, qidCol, qVecCol, "queryIvfPqIndexBulk query frame")
+        .withColumn("adc", AdcDotTable.adcDotTable(col("qv"),
+          codebook.centroids.map(_.map(_.toSeq).toSeq).toSeq))
+        .withColumn("cells", ProbeCells.probeCells(col("qv"), head.cellIds, head.vecs, nProbe)),
+      (1 to math.min(nProbe, head.length)).map(i => collect_set(element_at(col("cells"), i))))
     val tagged = q0.select(col("qid"), col("qv"), col("qn"), col("adc"),
       explode(col("cells")).as("cell"))
-    val probed = tagged.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
     require(probed.nonEmpty,
       "queryIvfPqIndexBulk: no probe cells (empty query frame?)")
     def runScan(tablePath: String): DataFrame =
@@ -775,8 +826,7 @@ object AnnIndex {
     // |queries| × nProbe rows against the broadcast head, computed once
     // before the candidate fan-out
     val taggedC = tagged
-      .join(broadcast(TxParquetTable.snapshot(spark, centroidsPath(path))
-        .select(col("cell"), col("centroid"))), Seq("cell"))
+      .join(broadcast(head.frame(spark)), Seq("cell"))
       .withColumn("cdot", Similarity.dot(col("qv"), col("centroid")))
       .select(col("cell"), col("qid"), col("qn"), col("adc"), col("cdot"))
     val resDot = (0 until m).map { j =>

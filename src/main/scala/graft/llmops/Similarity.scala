@@ -242,8 +242,15 @@ object Similarity {
   def ivfTopKBatch(
       centroids: DataFrame, assigned: DataFrame,
       queries: DataFrame, qidCol: String, qVecCol: String,
-      nProbe: Int, k: Int, excludeSelfId: Boolean = false): DataFrame = {
-    val cents = collectCentroids(centroids)
+      nProbe: Int, k: Int, excludeSelfId: Boolean = false): DataFrame =
+    ivfTopKBatchOver(collectCentroids(centroids), assigned, queries, qidCol, qVecCol,
+      nProbe, k, excludeSelfId)
+
+  /** [[ivfTopKBatch]] over an already collected head. */
+  private[llmops] def ivfTopKBatchOver(
+      cents: Array[(Int, Array[Double], Double)], assigned: DataFrame,
+      queries: DataFrame, qidCol: String, qVecCol: String,
+      nProbe: Int, k: Int, excludeSelfId: Boolean): DataFrame = {
     val qRows = queries.select(col(qidCol), col(qVecCol)).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     // collected caller frame: the same unique-qid contract as

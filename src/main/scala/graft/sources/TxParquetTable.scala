@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ArrayNode
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -608,6 +608,18 @@ object TxParquetTable {
     val live = state(path, version).live
     if (live.exists(_.numRecords < 0)) None
     else Some(live.map(_.numRecords).sum)
+  }
+
+  /** The latest version and its live data file names, sorted, from the
+    * log alone (−1 and none for a table that does not exist). Data files
+    * are immutable and uniquely named, so the names identify the rows a
+    * snapshot at that version reads: a reader that keeps what it read
+    * can key it by them, and every commit that changes the rows changes
+    * the key — a restore back to the same files restores the key too.
+    */
+  def liveFiles(path: String): (Long, Seq[String]) = {
+    val snap = state(path, None)
+    (snap.version, snap.live.map(_.name).sorted)
   }
 
   /** Best-effort full-state checkpoint; deterministic content, atomic
@@ -1245,10 +1257,13 @@ object TxParquetTable {
           .filter(col("__rn") === 1).drop("__rn")
       case None => df.dropDuplicates(idCol)
     }
+    // pin the batch (its plan must not re-read the table); the pin's own
+    // job observes the batch's bucket set, so no second pass takes it
+    val batchBuckets = Observation()
     val incoming = reduced
-      .localCheckpoint(true) // pin the batch; its plan must not re-read the table
-    val affected = incoming.select(bucketOf(col(idCol), n).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+      .observe(batchBuckets, collect_set(bucketOf(col(idCol), n)).as("b"))
+      .localCheckpoint(true)
+    val affected = batchBuckets.get("b").asInstanceOf[scala.collection.Seq[Int]].toSeq
     if (affected.isEmpty) return readVersion
     val affectedFiles = snap.live.filter(f =>
       f.buckets.isEmpty || f.buckets.intersect(affected).nonEmpty)
@@ -1399,28 +1414,30 @@ object TxParquetTable {
     * keyed tables prune to the targets' bucket files, files carrying an
     * `idCol` zone map are skipped when [min, max] cannot intersect the
     * targets' bounds, files with neither are conservatively included.
-    * ONE aggregate over the pinned ids gives the id count, the bounds
-    * and the bucket set; no target id means no affected file.
+    * The pin's own job observes the id count, the bounds and the bucket
+    * set; no target id means no affected file.
     */
   private def idTargets(snap: Snapshot, schema: StructType, idCol: String,
       ids: DataFrame, opName: String): (DataFrame, Seq[AddFile]) = {
     val dt = schema(idCol).dataType
+    val nOpt = snap.bucketCount
+    val e = statsExpr(dt, col(idCol))
+    val probe = Observation()
     val incoming = ids.select(col(idCol)).dropDuplicates(idCol)
       .select(when(col(idCol).isNotNull && col(idCol).cast(dt).isNull,
           raise_error(concat(lit(s"$opName: id value "),
             col(idCol).cast("string"),
             lit(s" does not represent in the table's $dt id domain"))))
         .otherwise(col(idCol).cast(dt)).as(idCol))
-      .localCheckpoint(true) // pin: consumed by the probe AND the join
-    val nOpt = snap.bucketCount
-    val e = statsExpr(dt, col(idCol))
-    val probe = incoming.agg(count(lit(1)), (Seq(min(e), max(e)) ++
-      nOpt.map(n => collect_set(bucketOf(col(idCol), n)))): _*).head()
-    if (probe.getLong(0) == 0L) return (incoming, Seq.empty)
+      .observe(probe, count(lit(1)).as("n"), (Seq(min(e).as("lo"), max(e).as("hi")) ++
+        nOpt.map(n => collect_set(bucketOf(col(idCol), n)).as("b"))): _*)
+      .localCheckpoint(true) // pin: consumed by the join; its job is the probe
+    val stats = probe.get
+    if (stats("n").asInstanceOf[Long] == 0L) return (incoming, Seq.empty)
     val tag = statsTag(dt)
     def zoneCanHold(f: AddFile): Boolean = f.stats.get(idCol) match {
-      case Some(s) if tag.contains(s.t) && !probe.isNullAt(1) =>
-        val (lo, hi) = (probe.get(1).toString, probe.get(2).toString)
+      case Some(s) if tag.contains(s.t) && stats("lo") != null =>
+        val (lo, hi) = (stats("lo").toString, stats("hi").toString)
         def cmp(a: String, b: String): Int = s.t match {
           case "long" => java.lang.Long.compare(a.toLong, b.toLong)
           case "double" => java.lang.Double.compare(a.toDouble, b.toDouble)
@@ -1431,7 +1448,7 @@ object TxParquetTable {
     }
     val affected = nOpt match {
       case Some(_) =>
-        val targetBuckets = probe.getSeq[Int](3).toSet
+        val targetBuckets = stats("b").asInstanceOf[scala.collection.Seq[Int]].toSet
         snap.live.filter(f =>
           (f.buckets.isEmpty || f.buckets.exists(targetBuckets.contains)) &&
             zoneCanHold(f))

@@ -774,8 +774,10 @@ object Pipelines {
     * (in-plan probe tagging, bounded-heap top-k — nothing
     * query-count-sized on the driver) → ONE exactly-once Tx append of
     * (qid, id, score, __index_path, __epoch); `__index_path` records
-    * which generation served the epoch, the serving audit trail.
-    * Batches are independent serves, so the sink is stateless and
+    * which generation served the epoch, the serving audit trail. The
+    * index head is collected once per generation
+    * ([[graft.llmops.AnnIndex.indexHead]]), so a steady epoch's serve
+    * is the observing pin plus the scan. Batches are independent serves, so the sink is stateless and
     * replay lands identically (the txn guard makes it a no-op).
     */
   def annServeSink(queries: DataFrame, qidCol: String, qVecCol: String,

@@ -76,6 +76,77 @@ class BulkAnnSpec extends SparkSpec {
     }.nonEmpty, s"bulk serve must join queries against assignments:\n$plan")
   }
 
+  test("a warm bulk serve is two SQL executions: the observing pin, then scan, join and top-k") {
+    val path = java.nio.file.Files.createTempDirectory("bulk_warm_").toString
+    AnnIndex.fitIvfPqIndex(emb, "vec_id", "embedding", dim, nCells = 16,
+      m = 8, ksub = 16, path)
+    val queries = emb.filter(col("vec_id") < 40)
+      .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
+    def raw() = AnnIndex.queryIvfIndexBulk(spark, path, queries, "qid", "qv",
+        nProbe = 4, k = 10, excludeSelfId = true)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def pq() = AnnIndex.queryIvfPqIndexBulk(spark, path, queries, "qid", "qv",
+        nProbe = 4, k = 10, shortlist = 40, excludeSelfId = true)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val (coldRaw, coldPq) = (raw(), pq())
+    // warm: the head and codebook are this generation's, already read
+    val (warmRaw, nRaw) = sqlExecutions(raw())
+    val (warmPq, nPq) = sqlExecutions(pq())
+    assert(nRaw === 2, "warm raw bulk serve")
+    assert(nPq === 2, "warm PQ bulk serve")
+    assert(warmRaw === coldRaw && warmPq === coldPq)
+  }
+
+  test("the tagged query frame crosses exactly one exchange, a one-partition frame too") {
+    val path = java.nio.file.Files.createTempDirectory("bulk_exch_").toString
+    AnnIndex.fitIvfIndex(emb, "vec_id", "embedding", dim, nCells = 16, path)
+    val head = AnnIndex.indexHead(spark, path)
+    val queries = emb.filter(col("vec_id") < 400)
+      .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
+    Seq("multi-partition" -> queries.repartition(3), "one-partition" -> queries.coalesce(1))
+      .foreach { case (shape, q) =>
+        val tagged = AnnIndex.tagProbeCells(q, "qid", "qv", head.cellIds, head.vecs, nProbe = 4)
+        tagged.collect()
+        // the final plan, above the shapes' own repartition/coalesce
+        val plan = tagged.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==").head
+        val exchanges = plan.linesIterator.map(_.dropWhile(c => !c.isLetter))
+          .count(l => l.startsWith("Exchange") && !l.contains("RoundRobinPartitioning(3)"))
+        assert(exchanges === 1, s"$shape: one hash exchange on qid expected:\n$plan")
+        assert(plan.contains("hashpartitioning(qid"), s"$shape:\n$plan")
+      }
+  }
+
+  test("a refit into the same path after deleting it serves the NEW index, not a remembered head") {
+    import graft.sources.TxParquetTable
+    val path = java.nio.file.Files.createTempDirectory("bulk_refit_same_").toString
+    val queries = emb.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))
+    def serve() = AnnIndex.queryIvfIndexBulk(spark, path, queries, "qid", "qv",
+        nProbe = 2, k = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    AnnIndex.fitIvfIndex(emb, "vec_id", "embedding", dim, nCells = 16, path)
+    val versions = (TxParquetTable.latestVersion(s"$path/centroids"),
+      TxParquetTable.latestVersion(s"$path/assignments"))
+    val first = serve()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    // the second generation: other vectors, other cells, same log versions
+    AnnIndex.fitIvfIndex(emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
+      dim, nCells = 4, path)
+    assert((TxParquetTable.latestVersion(s"$path/centroids"),
+      TxParquetTable.latestVersion(s"$path/assignments")) === versions)
+    val second = serve()
+    // reference: the same serve over the head read straight from the log
+    val reference = Similarity.ivfTopKBatch(
+        TxParquetTable.snapshot(spark, s"$path/centroids"),
+        TxParquetTable.snapshot(spark, s"$path/assignments"),
+        queries, "qid", "qv", nProbe = 2, k = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(second === reference)
+    assert(second.forall(_._2 % 2 == 0), "the new generation indexes even ids only")
+    assert(second !== first)
+  }
+
   test("PQ bulk serve with a population-covering shortlist is row-identical to the raw bulk serve") {
     // r16 judge item 1: the exact-rerank tail makes the ADC phase a
     // CANDIDATE NOMINATOR — when the shortlist covers the whole probed

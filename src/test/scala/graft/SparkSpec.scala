@@ -12,6 +12,28 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** `body`'s result and the number of top-level SQL executions it
+    * started (nested executions, such as a command's own query, are
+    * not counted). */
+  def sqlExecutions[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.rootExecutionId.forall(_ == s.executionId) => n.incrementAndGet()
+        case _ => ()
+      }
+    }
+    org.apache.spark.sql.graft.BusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.graft.BusDrain.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Top-level column names in the footer of the parquet file `path`. */
   def footerColumns(path: String): Seq[String] = {
     import scala.jdk.CollectionConverters._

@@ -1513,6 +1513,35 @@ class TxTableSpec extends SparkSpec {
     assert(TxParquetTable.rowCount(path) === Some(199L))
   }
 
+  test("upsert and delete are two SQL executions each: the observing pin and the write") {
+    val path = freshPath()
+    TxParquetTable.upsert(spark.range(0, 200).toDF("id").withColumn("v", col("id") * 2),
+      path, "id", buckets = 4)
+    def now() = TxParquetTable.snapshot(spark, path)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (_, nUpsert) = sqlExecutions(TxParquetTable.upsert(
+      Seq((5L, 50L), (500L, 1L)).toDF("id", "v"), path, "id"))
+    assert(nUpsert === 2)
+    val expected = (0L until 200L).map(i => i -> i * 2).toMap + (5L -> 50L) + (500L -> 1L)
+    assert(now() === expected)
+    val (_, nDelete) = sqlExecutions(TxParquetTable.delete(Seq(7L, 9L).toDF("id"), path, "id"))
+    assert(nDelete === 2)
+    assert(now() === expected - 7L - 9L)
+    // the point lookup takes its prune from the same observed pin
+    assert(TxParquetTable.snapshotForIds(spark, path, "id", Seq(5L, 7L, 500L).toDF("id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === Map(5L -> 50L, 500L -> 1L))
+    // an empty batch observes an empty set and commits nothing
+    val v = TxParquetTable.latestVersion(path)
+    assert(TxParquetTable.upsert(Seq.empty[(Long, Long)].toDF("id", "v"), path, "id") === v)
+    assert(TxParquetTable.delete(Seq.empty[Long].toDF("id"), path, "id") === v)
+    // an unkeyed table observes no bucket set and prunes by zone map alone
+    val unkeyed = freshPath()
+    TxParquetTable.append(spark.range(0, 50).toDF("id"), unkeyed, statsColumns = Seq("id"))
+    val (_, nUnkeyed) = sqlExecutions(TxParquetTable.delete(Seq(3L).toDF("id"), unkeyed, "id"))
+    assert(nUnkeyed === 2)
+    assert(TxParquetTable.snapshot(spark, unkeyed).count() === 49L)
+  }
+
   test("write-time stats equal the data files': numRecords, bucket sets and zone maps per file") {
     val path = freshPath()
     val ts = java.sql.Timestamp.valueOf("2024-03-01 10:00:00.123456")
