@@ -41,18 +41,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    val cpus = cpusFromEnv()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      // same timezone as Verify/GraftSession, so TZ-sensitive queries
-      // (calendar windows, date functions) measure the same work
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val cpus = GraftSession.cpusFromEnv()
+    // the session Verify and QueryAudit run, so a timed query does the
+    // work the oracle checked
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(100000).selectExpr("sum(id)").collect() // JVM/codegen warmup
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Base-table cache is OPT-IN from r19 (see scaladoc): cached mode
     // mirrors a warmed cluster cache but measured as a net LOSS at 255
     // queries and reads as gaming; default measures the real scans.
@@ -114,17 +108,6 @@ object Bench {
     System.out.flush()
     spark.stop()
   }
-
-  /** Worker count: `SPARK_GRAFT_CPUS` parsed as a positive integer up
-    * front (a typo fails here, not as a bad master URL or a string
-    * spliced into the JSON), else every available core. */
-  private[graft] def cpusFromEnv(env: Map[String, String] = sys.env): Int =
-    env.get("SPARK_GRAFT_CPUS").map { v =>
-      val n = v.trim.toIntOption.getOrElse(
-        throw new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be an integer, got '$v'"))
-      require(n >= 1, s"SPARK_GRAFT_CPUS must be >= 1, got $n")
-      n
-    }.getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** Run each query `iters` times (at least once) and keep the min time.
     * A query that throws in any iteration is returned in the second list

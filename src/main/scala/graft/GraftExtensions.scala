@@ -21,8 +21,8 @@ import graft.functions.{BoundedTopK, GramRepetitionStats, MinHashBands, ShingleF
   *   spark.sql("SELECT * FROM graft_tx('/path/to/table', 3)")  -- version 3
   *
   * Wire up with:
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  * or config: spark.sql.extensions=graft.GraftExtensions
+  *   GraftSession.builder()  // sets spark.sql.extensions=graft.GraftExtensions
+  * or, for a session built elsewhere, that config.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -167,8 +167,8 @@ object GraftExtensions {
     * folded from [[graft.llmops.Pii.classes]] (the one ordered pattern
     * source of truth, longest-first email→card→intl→phone→IPv6→IPv4) so
     * the SQL surface cannot drift from the Column API or from what the
-    * spec asserts. Shared between [[GraftExtensions.apply]] and
-    * test/query-side registry registration.
+    * spec asserts. Shared between [[GraftExtensions.apply]] and the
+    * SparkEntry queries' own registration.
     */
 
   /** Scalar builder for `quality_score(text)` — delegates to the
@@ -212,9 +212,9 @@ object GraftExtensions {
     * to the wrong session — use one session per planning thread, which
     * the engine's own mains and [[GraftSession]] do.
     *
-    * Shared between [[GraftExtensions.apply]] and test/query-side
-    * registry registration (suites and SparkEntry queries whose session
-    * predates the extensions).
+    * Shared between [[GraftExtensions.apply]] and the SparkEntry queries'
+    * own registration (a session built outside [[GraftSession]] may lack
+    * the extensions).
     */
   private[graft] val graftTxBuilder
       : Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = { args =>

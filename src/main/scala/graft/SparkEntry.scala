@@ -241,9 +241,9 @@ object SparkEntry {
     val path = java.nio.file.Files.createTempDirectory("q63_part")
     try {
       // epoch-day arithmetic, NOT to_date(ts): to_date renders in the
-      // SESSION timezone, which only GraftSession/Verify pin to UTC —
-      // this derivation matches DuckDB's TZ-naive CAST(ts AS DATE) in
-      // any session
+      // SESSION timezone, which GraftSession pins to UTC but a session
+      // built elsewhere may not — this derivation matches DuckDB's
+      // TZ-naive CAST(ts AS DATE) in any session
       val ev = t(s, dir, "events").withColumn("event_date",
         date_add(lit("1970-01-01").cast("date"),
           expr("unix_micros(ts) div 86400000000").cast("int")))
@@ -817,7 +817,7 @@ object SparkEntry {
   /** X3 compression path: product quantization with ADC shortlist +
     * exact re-rank — 5 query vectors, top-10 each. The verdict joins the
     * exact batch twin (q65's construction) in-query: division-free
-    * recall gate at >= 0.7, measured 1.0 at both SFs (ProbePq; the
+    * recall gate at >= 0.7, measured 1.0 at both SFs (when it landed; the
     * shortlist=200 boundary is where ADC error can bite, and doesn't).
     */
   private def q112(s: SparkSession, dir: String): DataFrame = {
@@ -844,9 +844,9 @@ object SparkEntry {
     * RESIDUAL ANN — coarse cells prune the scan (nProbe=8 of 16), PQ
     * codes the residual v−centroid so the byte budget resolves what
     * the coarse quantizer couldn't, ADC-shortlist → exact re-rank
-    * (q112's discipline). Verdict pinned from measurement (ProbeIvfPq:
-    * recall 0.66 sf0.01 / 0.76 sf0.1 at these parameters; gate ≥ 0.5
-    * with margin). Full-probe degeneracy (= exact, no threshold) is
+    * (q112's discipline). Verdict pinned from measurement (BENCH_NOTES,
+    * "r10 close: IVF-PQ residual composite": recall 0.66 sf0.01 / 0.76
+    * sf0.1 at these parameters; gate ≥ 0.5 with margin). Full-probe degeneracy (= exact, no threshold) is
     * spec-pinned in AnnRecallSpec.
     */
   private def q140(s: SparkSession, dir: String): DataFrame = {
@@ -1411,9 +1411,9 @@ object SparkEntry {
     * registered `pii_redact` scalar from `spark.sql`, pinning the
     * [[GraftExtensions]] SQL registration against regression with a
     * DuckDB oracle. The builder is registered idempotently here because
-    * the Bench/Verify sessions are built without extensions; a
-    * [[GraftSession]] already has it and the re-registration is a no-op
-    * by content (same shared builder).
+    * a session built outside [[GraftSession]] may lack the extensions; a
+    * [[GraftSession]] (Bench, Verify) already has it and the
+    * re-registration is a no-op by content (same shared builder).
     */
   private def q125(s: SparkSession, dir: String): DataFrame = {
     s.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -8,13 +8,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = graft.Bench.cpusFromEnv()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // dev-only subset filter (unset in the driver): SPARK_GRAFT_ONLY=q154_cusum_events,q151_rolling_median
     val only = sys.env.get("SPARK_GRAFT_ONLY")

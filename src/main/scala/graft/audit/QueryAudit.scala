@@ -213,15 +213,8 @@ object QueryAudit {
     }.getOrElse(0)
     val registered = graft.SparkEntry.queries
     val names = if (rest.tail.isEmpty) registered.keys.toSeq.sorted else rest.tail
-    val cpus = graft.Bench.cpusFromEnv()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val audit = new QueryAudit(spark)
     try names.foreach { name =>
       val fn = registered(name)

@@ -388,7 +388,8 @@ object Components {
     *
     * Scale shape: the rank window partitions by `grp` — duplicate
     * clusters hash-partition freely, no global sort, ONE shuffle of
-    * the universe. MEASURED (ProbeKeepBest, local[32]): the window
+    * the universe. MEASURED (local[32]; BENCH_NOTES "r10:
+    * canonical-selection window vs argmax-aggregate"): the window
     * wins BOTH probed regimes — many small clusters AND a star cluster
     * holding half a 4M/32M universe (24.0 vs 41.4 s and 39.8 vs
     * 50.3 s at 32M) — because the aggregated variant's keeper

@@ -879,7 +879,7 @@ object Similarity {
     * rows rejoin the float corpus for exact cosine, and the final top-k
     * is exact OVER the shortlist. ADC error then only matters at the
     * shortlist BOUNDARY — measured on this corpus: shortlist=20k
-    * recovers the exact top-10 completely (ProbePq, both SFs) where raw
+    * recovers the exact top-10 completely (both SFs, when q112 landed) where raw
     * ADC top-10 recall is ~0.3.
     *
     * At 10⁹+ vectors this is the memory architecture that works: the

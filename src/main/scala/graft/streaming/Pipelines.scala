@@ -17,23 +17,10 @@ import graft.ingest.Ingest
   *     deterministic content id, so state is bounded AND retries of a
   *     micro-batch write identical rows (the reference's per-batch uuid()
   *     + no-epoch-id foreachBatch duplicates on retry — §7 hard-parts);
-  *   - RocksDB state store keeps large dedup/window state off-heap.
+  *   - RocksDB state store keeps large dedup/window state off-heap
+  *     ([[graft.GraftSession]] configures it).
   */
 object Pipelines {
-
-  /** Session default for streaming jobs: RocksDB state store (off-heap)
-    * with CHANGELOG checkpointing — per-commit cost ∝ the batch's state
-    * CHANGES instead of a full snapshot upload of the store. The 60s
-    * soak artifact (`docs/bench/stream_soak.json`, graft.tools.StreamSoak)
-    * is measured under exactly this configuration; at multi-million-row
-    * dedup state the full-snapshot default dominates the micro-batch.
-    */
-  def configureStateStore(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-  }
 
   /** S1: Kafka streaming source for a topic — the fixed Kafka frame.
     * (Not exercisable in the harness — no broker, and the
@@ -258,7 +245,8 @@ object Pipelines {
     * recall radius). At the soak's own rate (1M docs / 10-min horizon),
     * 6 × 20-bit bands drop 83–87% of clean documents to bucket
     * collisions while 4 × 30-bit drops 3.97% against a true 2.7%
-    * duplicate rate (ProbeGatePrecision, `docs/BENCH_NOTES.md`) — the
+    * duplicate rate (`docs/BENCH_NOTES.md`, "r15: the gate's precision
+    * sizing rule, measured") — the
     * measured sizing is now the shipped default, at the price of the
     * pigeonhole recall radius narrowing Hamming 5 → 3. Re-derive for
     * your own feed with the q40 rule: per-band occupancy
@@ -358,9 +346,9 @@ object Pipelines {
     * rate × horizon (the q40 rule: occupancy ≪ 2^bits) — fewer, wider
     * bands (e.g. 4 × 30-bit) or a shorter horizon at higher rates; the
     * dropped lane carries dup_of precisely so an auditor can measure
-    * this trade on their own corpus. MEASURED (ProbeGatePrecision,
-    * BENCH_NOTES): at the soak's own rate, 6 × 20-bit bands drop 83%
-    * (collision noise) while 4 × 30-bit bands drop 3.97% against a
+    * this trade on their own corpus. MEASURED (BENCH_NOTES,
+    * "r15: the gate's precision sizing rule"): at the soak's own rate,
+    * 6 × 20-bit bands drop 83% (collision noise) while 4 × 30-bit bands drop 3.97% against a
     * true 2.7% duplicate rate — which is why 4 × 30-bit is the
     * [[gateOccurrences]] DEFAULT since r16 (re-soaked at that sizing),
     * at the price of the pigeonhole recall radius narrowing
@@ -1090,10 +1078,10 @@ object Pipelines {
                   spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bucketed.schema)
             }
           val merged = survivors.unionByName(bucketed)
-          val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try merged.write.mode("overwrite").partitionBy("__bucket").parquet(path)
-          finally prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+          // per-write option, not session conf: other queries on the
+          // session keep static overwrite while this batch writes
+          merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__bucket").parquet(path)
         }
         bucketed.unpersist()
         () // foreachBatch lambda must be Unit-typed
@@ -1224,14 +1212,15 @@ object Pipelines {
     * normalization ([[barsFromJson]] / [[tradesFromJson]]). Tests
     * exercise the identical chain from a MemoryStream `value` column (no
     * broker in the harness); this composition only adds the Kafka frame
-    * in front.
+    * in front. The dedup state lives in the session's state store: build
+    * `spark` with [[graft.GraftSession]] for RocksDB with changelog
+    * checkpointing.
     */
   def runPipeline(
       spark: SparkSession, brokers: String, topic: String,
       sinkPath: String, checkpoint: String,
       wire: DataFrame => DataFrame,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
-    configureStateStore(spark)
     val normalized = wire(Ingest.valueAsString(kafkaSource(spark, brokers, topic)))
     start(upsertParquetSink(dedupWithinWatermark(normalized), sinkPath, checkpoint), trigger)
   }

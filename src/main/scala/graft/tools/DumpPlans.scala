@@ -2,18 +2,14 @@ package graft.tools
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: regenerate docs/PLANS.md — formatted physical plans for the
   * flagship queries, the reviewable evidence behind docs/DESIGN.md's
   * plan-shape claims (PlanShapeSpec asserts the load-bearing ones).
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    // four cores, as the committed plans were dumped
+    val spark = graft.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val picks = Seq(

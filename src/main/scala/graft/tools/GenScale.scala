@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r10 scale-decade generator (r9 verdict item 3): build a FACTOR× slice
@@ -46,10 +45,7 @@ object GenScale {
     // chain the cipher column compiles to (and this box's disk)
     require(factor >= 1 && factor <= 200,
       s"factor must be in [1, 200], got $factor")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val out = java.nio.file.Paths.get(outDir)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** X74/X78 evidence probe → `docs/bench/blocked_regime.json` (r12
@@ -85,10 +85,8 @@ object ProbeBlocked {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cores = graft.GraftSession.cpusFromEnv()
+    val spark = graft.GraftSession.local(cores)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(100000).selectExpr("sum(id)").collect()
     val shuffle = new ShuffleAccum
@@ -328,7 +326,7 @@ object ProbeBlocked {
         "the recommended operating point does not hold; do not ship the artifact")
 
     val json =
-      s"""{"protocol":"min of $iters iters, local[32], shuffle.partitions=32, close frames localCheckpoint'd (the Bench discipline)","universe_lineitem_1000":{"source":"$dir lineitem, per-supplier monthly max(l_extendedprice) — NO co-movement structure","keys":$nKeys,"full_pairs":$fullPairs,"full_coint":{"rows":$lRows,"wall_sec":${f3(lWall)}},"full_df":{"rows":$lDfRows,"wall_sec":${f3(lDfWall)}},"topk_rank":"abs(df_tstat) desc over the full Dickey-Fuller screen","blocked":${lineRows.map(_.json(lWall)).mkString("[", ",", "]")},"finding":"recall tracks the random-collision baseline 1-(1-2^-b)^L because this universe's top-|t| pairs are NOISE pairs with weak return correlation - sign-agreement blocking rightly does not favor them; the survival claim is only meaningful where co-movement exists (see universe_planted_1000)"},"universe_planted_1000":{"source":"synthesized: 100 groups x 10 keys, close = 100 + group random walk(+-0.5 micro-exact steps) + iid idio noise(+-0.1); within-group return rho ~= 0.93","keys":$nP,"full_pairs":${nP * (nP - 1) / 2},"full_coint":{"rows":$pRows,"wall_sec":${f3(pWall)}},"full_df":{"rows":$pDfRows,"wall_sec":${f3(pDfWall)}},"blocked":${plantedRows.map(_.json(pWall)).mkString("[", ",", "]")},"recall_gate":{"bits":3,"tables":3,"k":20,"min":0.8,"measured":${f3(gate)},"pass":true},"finding":"single-table recall ~= p^bits (p = 1 - theta/pi) - low even for strongly co-moving pairs, the r13 measurement that falsified the bare geometry claim; OR-amplified tables=3 recovers 1-(1-p^b)^L at ~3x the candidates (q213 oracle-checks the same construction at 100 keys)"},"universe_10000":{"source":"synthesized 10,000 keys x $months10k months, close = 50 + 100*md5_uniform(key:month)","keys":$n10k,"full_pairs":$fullPairs10k,"full_cross_run":false,"reason":"50M pairs x 84 months ~ 4.2e9 joined rows before the first aggregate - the regime blockedPairSource exists for; the blocked form is the only one run","blocked":${blocked10k.mkString("[", ",", "]")}},"universe_10000_planted":{"source":"synthesized: 1,000 groups x 10 keys (the universe_planted_1000 construction at 10x keys); ground truth = the planted same-group pairs, so recall needs NO full screen - exactly why planting is the only honest recall measurement in this regime (r13 item 2)","keys":$nK4,"truth_pairs":$truthPairs4,"full_cross_run":false,"blocked":${planted10k.map(_._4).mkString("[", ",", "]")},"recall_gate":{"bits":8,"tables":5,"min":0.8,"measured":${f3(gate10k)},"pass":true},"finding":"single-table recall collapses as p^bits at the bit widths the 10k regime needs for candidate control; OR-amplification buys it back as 1-(1-p^b)^L - the recommended 10k operating point is (bits 8, tables 5)"},"note":"recall@k = fraction of the FULL DF screen's top-k |t| pairs whose keys share an SRP block in ANY table (survival is exact block-id equality, so recall is computed from the block assignment itself); recall_planted = same survival test over the planted same-group pairs. candidates = distinct within-block pairs across tables. Generated by graft.tools.ProbeBlocked."}"""
+      s"""{"protocol":"min of $iters iters, local[$cores], shuffle.partitions=$cores, close frames localCheckpoint'd (the Bench discipline)","universe_lineitem_1000":{"source":"$dir lineitem, per-supplier monthly max(l_extendedprice) — NO co-movement structure","keys":$nKeys,"full_pairs":$fullPairs,"full_coint":{"rows":$lRows,"wall_sec":${f3(lWall)}},"full_df":{"rows":$lDfRows,"wall_sec":${f3(lDfWall)}},"topk_rank":"abs(df_tstat) desc over the full Dickey-Fuller screen","blocked":${lineRows.map(_.json(lWall)).mkString("[", ",", "]")},"finding":"recall tracks the random-collision baseline 1-(1-2^-b)^L because this universe's top-|t| pairs are NOISE pairs with weak return correlation - sign-agreement blocking rightly does not favor them; the survival claim is only meaningful where co-movement exists (see universe_planted_1000)"},"universe_planted_1000":{"source":"synthesized: 100 groups x 10 keys, close = 100 + group random walk(+-0.5 micro-exact steps) + iid idio noise(+-0.1); within-group return rho ~= 0.93","keys":$nP,"full_pairs":${nP * (nP - 1) / 2},"full_coint":{"rows":$pRows,"wall_sec":${f3(pWall)}},"full_df":{"rows":$pDfRows,"wall_sec":${f3(pDfWall)}},"blocked":${plantedRows.map(_.json(pWall)).mkString("[", ",", "]")},"recall_gate":{"bits":3,"tables":3,"k":20,"min":0.8,"measured":${f3(gate)},"pass":true},"finding":"single-table recall ~= p^bits (p = 1 - theta/pi) - low even for strongly co-moving pairs, the r13 measurement that falsified the bare geometry claim; OR-amplified tables=3 recovers 1-(1-p^b)^L at ~3x the candidates (q213 oracle-checks the same construction at 100 keys)"},"universe_10000":{"source":"synthesized 10,000 keys x $months10k months, close = 50 + 100*md5_uniform(key:month)","keys":$n10k,"full_pairs":$fullPairs10k,"full_cross_run":false,"reason":"50M pairs x 84 months ~ 4.2e9 joined rows before the first aggregate - the regime blockedPairSource exists for; the blocked form is the only one run","blocked":${blocked10k.mkString("[", ",", "]")}},"universe_10000_planted":{"source":"synthesized: 1,000 groups x 10 keys (the universe_planted_1000 construction at 10x keys); ground truth = the planted same-group pairs, so recall needs NO full screen - exactly why planting is the only honest recall measurement in this regime (r13 item 2)","keys":$nK4,"truth_pairs":$truthPairs4,"full_cross_run":false,"blocked":${planted10k.map(_._4).mkString("[", ",", "]")},"recall_gate":{"bits":8,"tables":5,"min":0.8,"measured":${f3(gate10k)},"pass":true},"finding":"single-table recall collapses as p^bits at the bit widths the 10k regime needs for candidate control; OR-amplification buys it back as 1-(1-p^b)^L - the recommended 10k operating point is (bits 8, tables 5)"},"note":"recall@k = fraction of the FULL DF screen's top-k |t| pairs whose keys share an SRP block in ANY table (survival is exact block-id equality, so recall is computed from the block assignment itself); recall_planted = same survival test over the planted same-group pairs. candidates = distinct within-block pairs across tables. Generated by graft.tools.ProbeBlocked."}"""
     val out = java.nio.file.Paths.get("docs/bench/blocked_regime.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, json.getBytes("UTF-8"))

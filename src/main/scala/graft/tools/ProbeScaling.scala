@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-curve probe: run every SparkEntry query at sf0.001 / sf0.01 /
   * sf0.1 (100x of data end to end) and fit the per-query scaling
   * exponent over the top decade, `e = log10(t(sf0.1) / t(sf0.01))`.
@@ -17,12 +15,7 @@ import org.apache.spark.sql.SparkSession
 object ProbeScaling {
   def main(args: Array[String]): Unit = {
     val minSec = 0.5
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val sfs = Seq("sf0.001", "sf0.01", "sf0.1")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted

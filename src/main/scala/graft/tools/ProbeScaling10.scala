@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** r10 scale-decade probe (r9 verdict item 3): run the top-10 most
   * expensive queries at sf0.1 and at the GenScale sf1 slice (10× the
   * engine-native tables, TPC-H symlinked), and emit per-query
@@ -30,10 +28,7 @@ object ProbeScaling10 {
     // optional explicit query list (args 2..): later-round additions
     // reuse the same protocol/merge without editing `top`
     val picks = if (args.length > 2) args.drop(2).toSeq else top
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(100000).selectExpr("sum(id)").collect()
     val dirs = Seq("/root/testdata/sf0.1", sf1Dir)

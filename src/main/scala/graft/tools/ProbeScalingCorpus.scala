@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Decade probe for the r10 corpus operators (q127/q128/q130) plus the
@@ -26,10 +25,7 @@ object ProbeScalingCorpus {
   def main(args: Array[String]): Unit = {
     val sf1Dir = args.headOption.getOrElse("/tmp/graft_sf1")
     val outPath = args.lift(1).getOrElse("/tmp/scaling_corpus.json")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(100000).selectExpr("sum(id)").collect()
 

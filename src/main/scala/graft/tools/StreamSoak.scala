@@ -474,8 +474,9 @@ object StreamSoak {
     import org.apache.spark.sql.functions._
     import graft.streaming.StatefulOps
     // the shipped DEFAULT banding (4 x 30-bit since r16 — the measured
-    // sizing; ProbeGatePrecision showed the old 6 x 20-bit default
-    // dropped 83-87% of clean docs to band collisions at this rate)
+    // sizing; BENCH_NOTES "r15: the gate's precision sizing rule" showed
+    // the old 6 x 20-bit default dropped 83-87% of clean docs to band
+    // collisions at this rate)
     val occ = Pipelines.gateOccurrences(
         docTwin(spark, rowsPerBatch), "doc_id", "ts", "text",
         graft.llmops.TextAnalysis.tokens(col("text")))
@@ -1056,20 +1057,9 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val durationSec = args.headOption.map(_.toInt).getOrElse(60)
     val rowsPerBatch = args.lift(1).map(_.toInt).getOrElse(400000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // RocksDB with changelog checkpointing comes with the session
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
-    Pipelines.configureStateStore(spark)
-    // incremental (changelog) state checkpoints: commit cost ∝ batch's
-    // CHANGES, not store size — the production setting for high-rate
-    // stateful streams (full RocksDB snapshot uploads per commit would
-    // dominate this soak)
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     // no-data passes advance nothing this soak needs and cost a fixed
     // ~0.5s each at zero trigger interval
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")

@@ -136,7 +136,7 @@ class AnnRecallSpec extends SparkSpec {
     assert(codeRows.forall(_.zipWithIndex.forall { case (c, j) => c >= 0 && c < sizes(j) }),
       "a code escaped its subspace's dense range")
     // quality: the q112 construction — ADC shortlist 200 + exact re-rank,
-    // measured 1.0 recall at both SFs (ProbePq); 0.8 here absorbs
+    // measured 1.0 recall at both SFs when q112 landed; 0.8 here absorbs
     // centroid-mean accumulation-order wobble
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), Similarity.asDouble(col("embedding")).as("qv"))

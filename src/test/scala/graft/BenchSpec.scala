@@ -140,11 +140,4 @@ class BenchSpec extends SparkSpec {
     assert(new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(new java.io.File(out, "verify_failed.json")).size() === 0)
   }
-
-  test("SPARK_GRAFT_CPUS is parsed as a positive integer up front") {
-    assert(Bench.cpusFromEnv(Map("SPARK_GRAFT_CPUS" -> " 8 ")) === 8)
-    assert(Bench.cpusFromEnv(Map.empty) === Runtime.getRuntime.availableProcessors)
-    intercept[IllegalArgumentException](Bench.cpusFromEnv(Map("SPARK_GRAFT_CPUS" -> "8c")))
-    intercept[IllegalArgumentException](Bench.cpusFromEnv(Map("SPARK_GRAFT_CPUS" -> "0")))
-  }
 }

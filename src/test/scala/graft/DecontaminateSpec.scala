@@ -98,13 +98,8 @@ class DecontaminateSpec extends SparkSpec {
   }
 
   test("word_ngrams and gram_repetition_stats are callable from SQL") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("word_ngrams",
-      exprs => graft.functions.WordNgrams(exprs.head, 2, distinct = false), "scala_udf")
-    reg.createOrReplaceTempFunction("gram_repetition_stats",
-      exprs => graft.functions.GramRepetitionStats(exprs.head, 1), "scala_udf")
     val r = spark.sql(
-      "SELECT word_ngrams('A b c') AS g, gram_repetition_stats('w w w') AS s").head
+      "SELECT word_ngrams('A b c', 2) AS g, gram_repetition_stats('w w w', 1) AS s").head
     assert(r.getSeq[String](0) === Seq("a b", "b c"))
     assert(r.getStruct(1).getLong(1) === 3L)
   }

@@ -283,22 +283,9 @@ class LlmopsSpec extends SparkSpec {
   }
 
   test("native expressions are SQL-callable (registry + GraftExtensions wiring)") {
-    // the extensions object itself must wire cleanly
-    new graft.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
-    // and the same builders work through the SQL surface via the registry
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_bands",
-      exprs => graft.functions.MinHashBands(exprs.head, 8, 16, 4), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => graft.functions.SimHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_fingerprint",
-      exprs => graft.functions.ShingleFingerprint(exprs.head, 8), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash120",
-      exprs => graft.functions.SimHash120(exprs.head), "scala_udf")
-    // bare AggregateFunction, as GraftExtensions registers it — the
-    // analyzer wraps it in an AggregateExpression
-    reg.createOrReplaceTempFunction("bounded_top_k",
-      exprs => graft.functions.BoundedTopK(exprs(0), exprs(1), 3), "scala_udf")
+    // the spec session is a GraftSession: the extensions registered every
+    // function below (bounded_top_k is a bare AggregateFunction, which the
+    // analyzer wraps in an AggregateExpression)
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(5)
       .createOrReplaceTempView("ext_docs")
     val out = spark.sql("""
@@ -310,7 +297,7 @@ class LlmopsSpec extends SparkSpec {
     assert(out.forall(_.getAs[String]("fp").length === 32))
     assert(out.forall(r => r.getAs[Seq[Long]]("sh120").length === 2))
     val top = spark.sql(
-      "SELECT bounded_top_k(CAST(doc_id AS DOUBLE), doc_id) AS nn FROM ext_docs")
+      "SELECT bounded_top_k(CAST(doc_id AS DOUBLE), doc_id, 3) AS nn FROM ext_docs")
       .head.getSeq[org.apache.spark.sql.Row](0)
     assert(top.length === 3)
   }
@@ -449,10 +436,7 @@ class LlmopsSpec extends SparkSpec {
     val again = df.select(Pii.redact(Pii.redact(col("text"))).as("r2"), Pii.redact(col("text")).as("r1"))
     assert(again.filter(col("r1") =!= col("r2")).count() === 0)
 
-    // SQL surface: the SAME builder GraftExtensions injects (shared via
-    // the companion, so the SQL registration cannot drift from this spec)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("pii_redact",
-      graft.GraftExtensions.piiRedactBuilder, "scala_udf")
+    // SQL surface: pii_redact as GraftExtensions registers it
     df.createOrReplaceTempView("pii_docs")
     val viaSql = spark.sql("SELECT k, pii_redact(text) AS red FROM pii_docs")
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap

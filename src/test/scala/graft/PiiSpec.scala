@@ -102,8 +102,6 @@ class PiiSpec extends SparkSpec {
   test("Spark redact == SQL pii_redact == local twin on an adversarial generated batch") {
     val texts = sample(300, 42L)
     val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("i", "t")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pii_redact", GraftExtensions.piiRedactBuilder, "scala_udf")
     df.createOrReplaceTempView("pii_prop_docs")
     val viaCol = df.select(col("i"), Pii.redact(col("t")).as("r"))
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap

@@ -6,16 +6,11 @@ import graft.ingest.Ingest
 
 class RewriteRuleSpec extends SparkSpec {
 
+  // the rule is injected by GraftExtensions; the conf switches it on
   private def withRule[T](f: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RewriteTopOnePerGroup
     spark.conf.set("spark.graft.rewriteTopOne", "true")
     try f
-    finally {
-      spark.conf.set("spark.graft.rewriteTopOne", "false")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RewriteTopOnePerGroup)
-    }
+    finally spark.conf.set("spark.graft.rewriteTopOne", "false")
   }
 
   private lazy val ev = Tables.events(spark, "/root/testdata/sf0.001")

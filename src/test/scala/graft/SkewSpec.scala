@@ -149,14 +149,4 @@ class SkewSpec extends SparkSpec {
     assert(out(2L) === Some(1.25))
     assert(out(3L) === None)
   }
-
-  test("GraftSession.local registers extensions and reads nanos parquet") {
-    // our shared session isn't built via GraftSession; validate the builder
-    // config set instead of creating a second context-conflicting session
-    val b = GraftSession.builder()
-    // builder is opaque; validate via a fresh session only if none active.
-    // Here: assert the extensions class is loadable and instantiable.
-    new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
-    succeed
-  }
 }

@@ -1128,14 +1128,6 @@ class TxTableSpec extends SparkSpec {
   }
 
   test("graft_tx SQL table function: current snapshot, time travel, joins like any relation") {
-    // the shared spec session predates the extensions — register through
-    // the same builder GraftExtensions injects
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_tx"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        TxParquetTable.getClass.getName, "graft_tx"),
-      GraftExtensions.graftTxBuilder)
-
     val path = freshPath()
     val v0 = TxParquetTable.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path)
     TxParquetTable.upsert(Seq((2L, "B2"), (3L, "c")).toDF("id", "v"), path, "id")
@@ -1163,12 +1155,6 @@ class TxTableSpec extends SparkSpec {
   }
 
   test("graft_tx_range SQL table function: pruned band read, open bound, version pin") {
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_tx_range"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        TxParquetTable.getClass.getName, "graft_tx_range"),
-      GraftExtensions.graftTxRangeBuilder)
-
     val path = freshPath()
     (0 until 3).foreach { k =>
       val rows = (0 until 300).filter(_ % 3 == k).map(i => (i.toLong, i.toDouble))
@@ -1205,12 +1191,6 @@ class TxTableSpec extends SparkSpec {
   }
 
   test("graft_tx_changes SQL table function: CDC between versions composes as a relation") {
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_tx_changes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        TxParquetTable.getClass.getName, "graft_tx_changes"),
-      GraftExtensions.graftTxChangesBuilder)
-
     val path = freshPath()
     val v0 = TxParquetTable.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path)
     val v1 = TxParquetTable.upsert(Seq((2L, "B2"), (3L, "c")).toDF("id", "v"), path, "id")
